@@ -2,7 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.streaming.EventStreams
+import graft.streaming.{BucketStore, EventStreams}
+import graft.streaming.BucketStore.StoreMeta
 
 /** Standing-pipeline form of the load plane: the graph persisted as
   * key-bucketed, manifest-versioned parquet stores (one per table,
@@ -35,45 +36,12 @@ import graft.streaming.EventStreams
   */
 object GraphStore {
 
-  /** Per-phase wall-time attribution for the store write path (r16,
-    * r15 VERDICT item 5) — `GRAFT_APPLY_TIMING=1` turns it on; one
-    * line per [[applyRelease]] to stderr. Phases accumulate across
-    * the release's CONCURRENT per-table applies, so the sums are
-    * thread-seconds (they rank phases; they do not add up to wall
-    * time). Off by default: zero cost on the serving path. */
-  private[graft] object ApplyTiming {
-    val on: Boolean = sys.env.get("GRAFT_APPLY_TIMING").contains("1")
-    private val acc = new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.atomic.LongAdder]()
-    def time[T](phase: String)(body: => T): T =
-      if (!on) body
-      else {
-        val t0 = System.nanoTime()
-        try body finally acc.computeIfAbsent(phase,
-          _ => new java.util.concurrent.atomic.LongAdder)
-          .add(System.nanoTime() - t0)
-      }
-    def dump(label: String): Unit = if (on) {
-      import scala.jdk.CollectionConverters._
-      val parts = acc.asScala.toSeq
-        .sortBy { case (_, v) => -v.sum }
-        .map { case (k, v) => f"$k=${v.sum / 1e9}%.2f" }
-      System.err.println(
-        s"[apply-timing] $label thread-s: ${parts.mkString(" ")}")
-      acc.clear()
-    }
-  }
-
   /** (bucket/merge keys, createOnly?) per public table; IPD_Allele and
     * HAS_IPD_ALLELE carry bespoke merges below. */
   private val featKeys = ReleaseDeltas.featureKeys
   private val hfKeys = ReleaseDeltas.hasFeatureKeys
 
-  private def numBuckets: Int =
-    sys.env.getOrElse("GRAFT_GRAPH_BUCKETS",
-      EventStreams.defaultNumBuckets.toString).toInt
-
-  // ---- per-table plumbing (cdcApply layout, batch-driven) ----
+  // ---- per-table plumbing (the BucketStore layout, batch-driven) ----
   //
   // BUCKET key vs MERGE key (round 13): a table's bucket key is its
   // TRAVERSAL anchor — `dst` for the edge tables a query enters by
@@ -88,101 +56,36 @@ object GraphStore {
   // persist in the table meta and every reader takes them from
   // there.
 
-  private def metaPath(tdir: String) = s"$tdir/_graft_store_meta"
-
   private def initTable(spark: SparkSession, tdir: String,
       snapshot: DataFrame, bucketKeys: Seq[String], buckets: Int,
       bloomBits: Option[Int] = None, zones: Boolean = false): Unit = {
-    schemaCache.remove(tdir) // re-init may change the fixed schema
     snapshot.limit(0).coalesce(1)
       .write.mode("overwrite").parquet(s"$tdir/_empty")
-    EventStreams.writeSmallFile(spark, metaPath(tdir),
-      s"$buckets\n${bucketKeys.mkString(",")}\n" +
-        bloomBits.fold("")(b => s"bloom=$b\n") +
-        (if (zones) "zones=*\n" else ""))
-    val present = EventStreams.writeBuckets(
-      snapshot, bucketKeys, buckets, s"$tdir/v0")
-    // bloom sidecars and zone stats both read the buckets just
-    // written and are independent jobs — overlap them (r15 opt: the
-    // serial chain paid both job latencies per table; the sidecar is
-    // awaited before the manifest publishes so post-conditions are
-    // unchanged)
-    val schema = snapshot.schema
-    val bloomF = bloomSidecarsAsync(spark, s"$tdir/v0", bucketKeys,
-      bloomBits.filter(_ => present.nonEmpty), schema)
-    val zs = collectZones(spark, tdir, s"$tdir/v0",
-      zones && present.nonEmpty, Some(schema))
-    scala.concurrent.Await.result(
-      bloomF, scala.concurrent.duration.Duration.Inf)
+    val meta = StoreMeta(buckets, Some(bucketKeys), bloomBits, zones)
+    StoreMeta.write(spark, tdir, meta)
     EventStreams.writeManifestFull(spark, s"$tdir/manifest/v0",
-      (0 until buckets).map(k =>
-        k -> present.get(k).fold(EventStreams.BucketFiles(-1, None))(fs =>
-          EventStreams.BucketFiles(0, Some(fs), zs.get(k)))).toMap)
+      BucketStore.writeVersion(spark, tdir, 0, snapshot, bucketKeys,
+        buckets, meta, snapshot.schema))
   }
 
-  /** Publish the `_bloom` sidecars of a just-written version dir as a
-    * concurrent job stream (None bits → completed no-op). The write
-    * path overlaps it with the zone-stats pass — both read the same
-    * fresh bucket files; callers await before committing the manifest
-    * so a completed apply always has its sidecars on disk. */
-  private def bloomSidecarsAsync(spark: SparkSession, vdir: String,
-      bucketKeys: Seq[String], bits: Option[Int],
-      schema: org.apache.spark.sql.types.StructType)
-      : scala.concurrent.Future[Unit] = bits match {
-    case None => scala.concurrent.Future.successful(())
-    case Some(b) =>
-      import scala.concurrent.ExecutionContext.Implicits.global
-      scala.concurrent.Future(EventStreams.writeBucketBlooms(
-        spark, vdir, bucketKeys, b, Some(schema)))
-  }
-
-  /** Zone-map stats of the buckets just written under `vdir` (empty
-    * when the table does not maintain them) — the per-commit
-    * collection step of [[graft.streaming.ZoneMaps]], keyed for the
-    * manifest's dirty entries; unchanged buckets inherit their stats
-    * with their version pointer. */
-  private def collectZones(spark: SparkSession, tdir: String,
-      vdir: String, enabled: Boolean,
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
-      : Map[Int, graft.streaming.ZoneMaps.BucketStats] =
-    if (!enabled) Map.empty
-    else graft.streaming.ZoneMaps.collect(spark, vdir,
-      schema.getOrElse(tableSchema(spark, tdir)))
-
-  /** (bucket count, bucket keys, bloom sidecar bits when the table
-    * maintains key blooms — the optional third meta line). */
-  private def tableMeta(spark: SparkSession,
-      tdir: String): (Int, Seq[String], Option[Int]) = {
-    val (b, k, bits, _) = tableMetaFull(spark, tdir)
-    (b, k, bits)
-  }
-
-  /** [[tableMeta]] plus the zone-map declaration — the write paths
-    * need all four and must not pay two small-file round-trips per
-    * apply for one file's content. */
-  private def tableMetaFull(spark: SparkSession,
-      tdir: String): (Int, Seq[String], Option[Int], Boolean) = {
-    val lines = EventStreams.readSmallFile(spark, metaPath(tdir))
-      .linesIterator.filter(_.nonEmpty).toSeq
+  /** A graph table's meta — always the two-line form with its bucket
+    * keys. */
+  private def tableMeta(spark: SparkSession, tdir: String): StoreMeta = {
+    val m = StoreMeta.read(spark, tdir).getOrElse(
+      throw new java.io.FileNotFoundException(StoreMeta.path(tdir)))
     // pre-round-13 stores wrote a ONE-line meta (bucket count only;
     // bucketing was implicitly the full merge key) — fail with the
-    // remedy named instead of an IndexOutOfBounds from lines(1)
-    require(lines.length >= 2,
+    // remedy named instead of probing with no bucket key
+    require(m.keys.nonEmpty,
       s"$tdir: legacy one-line store meta (no bucket-key line) — this " +
         "store predates traversal-anchored bucketing; rebuild it with " +
         "GraphStore.init from a refold (GraphLoad.loadAll)")
-    (lines.head.trim.toInt, lines(1).split(',').toSeq,
-      lines.drop(2).find(_.startsWith("bloom="))
-        .map(_.stripPrefix("bloom=").trim.toInt),
-      lines.drop(2).exists(_.startsWith("zones=")))
+    m
   }
-
-  private def tableBuckets(spark: SparkSession, tdir: String): Int =
-    tableMeta(spark, tdir)._1
 
   private def tableBucketKeys(spark: SparkSession,
       tdir: String): Seq[String] =
-    tableMeta(spark, tdir)._2
+    tableMeta(spark, tdir).keys.get
 
   private def latestVersion(spark: SparkSession, tdir: String): Int =
     EventStreams.manifestVersions(spark, tdir).max
@@ -190,17 +93,26 @@ object GraphStore {
   /** A graph-store table's read schema is FIXED at init (`_empty` is
     * what every read pins to; the apply path's schema guard exists
     * precisely to reject drift) — so the parquet footer read resolves
-    * once per table directory per JVM instead of once per apply
-    * (r16, §6 small-file round-trips: ~100 ms of driver I/O × tables
-    * × releases on the store's hottest write path). [[initTable]]
-    * invalidates the entry when it (re)creates the table, the only
-    * writer of a graph table's `_empty`. */
+    * once per `_empty` and is reused while the footer's files are
+    * unchanged (r16, §6 small-file round-trips: ~100 ms of driver I/O
+    * × tables × releases on the store's hottest write path). Each
+    * reuse costs one listing of `_empty`: a table rebuilt by another
+    * process (the remedy the guard's own error names) or an `_empty`
+    * rewritten by hand shows a new (name, length, mtime) set, and the
+    * footer is read again — the guard never checks against a stale
+    * schema. */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+    String, (Set[(String, Long, Long)], org.apache.spark.sql.types.StructType)]()
 
-  private def tableSchema(spark: SparkSession, tdir: String) =
-    schemaCache.computeIfAbsent(tdir,
-      _ => spark.read.parquet(s"$tdir/_empty").schema)
+  private def tableSchema(spark: SparkSession, tdir: String) = {
+    val (fs, p) = EventStreams.hadoopFs(spark, s"$tdir/_empty")
+    val stamp = fs.listStatus(p).iterator.filter(_.isFile)
+      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
+      .toSet
+    schemaCache.compute(tdir, (_, hit) =>
+      if (hit != null && hit._1 == stamp) hit
+      else (stamp, spark.read.parquet(s"$tdir/_empty").schema))._2
+  }
 
   private def latestManifest(spark: SparkSession, tdir: String) =
     EventStreams.readManifest(spark,
@@ -230,11 +142,12 @@ object GraphStore {
   private def stateForKeys(spark: SparkSession, tdir: String,
       keyRows: DataFrame, keys: Seq[String],
       manifest: Option[Map[Int, Int]] = None,
-      meta: Option[(Int, Seq[String], Option[Int])] = None): DataFrame = {
+      meta: Option[StoreMeta] = None): DataFrame = {
     // callers that already read the table meta pass it down — probe
     // sits on the traversal hot path, where every avoided small-file
     // round-trip matters on a remote store
-    val (_, bucketKeys, bloomBits) = meta.getOrElse(tableMeta(spark, tdir))
+    val m0 = meta.getOrElse(tableMeta(spark, tdir))
+    val bucketKeys = m0.keys.get
     // hashing anchors with the WRONG key would probe the wrong
     // buckets and silently MISS rows — fail loudly instead
     require(keys == bucketKeys,
@@ -246,7 +159,7 @@ object GraphStore {
     // to it hashes with the exact width it was written under —
     // readers stay consistent THROUGH a rebucket (and across a
     // crashed one); the meta width only seeds new layouts
-    val hit: Set[Int] = bloomBits match {
+    val hit: Set[Int] = m0.bloomBits match {
       case None =>
         keyRows
           .select(EventStreams.bucketCol(keys, m.size).as("_b"))
@@ -297,23 +210,13 @@ object GraphStore {
     * asserts — , committed version). */
   private def applyTable(spark: SparkSession, tdir: String,
       delta: DataFrame,
-      merge: (DataFrame, DataFrame) => DataFrame,
-      deltaMaterialized: Boolean = false): (Int, Int) =
-    ApplyTiming.time("total") {
-      applyTableBody(spark, tdir, delta, merge, deltaMaterialized)
-    }
-
-  private def applyTableBody(spark: SparkSession, tdir: String,
-      delta: DataFrame,
-      merge: (DataFrame, DataFrame) => DataFrame,
-      deltaMaterialized: Boolean): (Int, Int) = {
+      merge: (DataFrame, DataFrame) => DataFrame): (Int, Int) = {
     // one meta + one `_empty` footer read per apply (r15 opt: the
     // schema guard, the dirty-state read, and the zone/bloom passes
     // each re-read them before — 3-4 small round-trips per table per
     // release on the store's hottest write path)
-    val (_, bucketKeys, bloomBits, zones) =
-      ApplyTiming.time("meta")(tableMetaFull(spark, tdir))
-    val expectT = ApplyTiming.time("schema")(tableSchema(spark, tdir))
+    val meta = tableMeta(spark, tdir)
+    val expectT = tableSchema(spark, tdir)
     // SCHEMA GUARD, before the claim (a mismatched apply must not
     // burn a version claim): the table's READ schema is fixed at init
     // (`_empty` is what every stateAt read pins to), so an apply whose
@@ -328,7 +231,7 @@ object GraphStore {
     // empty state frame — pure analysis, no job runs — and fails
     // loudly naming the remedy, whether the drift surfaces as a
     // mismatched output schema or as a merge that no longer analyzes.
-    ApplyTiming.time("guard") {
+    locally {
       def remedy(detail: String, cause: Throwable = null): Nothing =
         throw new IllegalArgumentException(
           s"requirement failed: $tdir: $detail the table's persisted " +
@@ -351,91 +254,28 @@ object GraphStore {
         remedy(s"the merged output schema (${merged.simpleString}) " +
           "does not match;")
     }
-    val v = ApplyTiming.time("version")(latestVersion(spark, tdir))
-    // CLAIM version v+1 create-exclusively BEFORE touching its bucket
-    // directory: the loser of a concurrent-applier race must fail
-    // HERE, before its writeBuckets can overwrite the winner's files
-    // (an exclusive manifest commit alone detects the race, but too
-    // late — the loser's bucket write can land after the winner's
-    // commit, leaving a committed manifest pointing at the loser's
-    // data). The claim is PERMANENT — deleting it after commit would
-    // let a straggler that read the old base re-claim the version and
-    // overwrite committed bucket files — so a crash between claim and
-    // commit leaves a stale claim that fails retries loudly with the
-    // remedy named (deliberate: a blocked retry beats a silent lost
-    // update, and only an operator can know no writer is alive).
-    // vacuum() clears claims below the kept-version window.
-    val claim = s"$tdir/manifest/.claim_v${v + 1}"
-    try ApplyTiming.time("claim")(
-      EventStreams.writeSmallFileExclusive(spark, claim, ""))
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        throw new java.util.ConcurrentModificationException(
-          s"$tdir: version ${v + 1} is already claimed — a concurrent " +
-            "applier is committing it (the store is single-writer, " +
-            "like the reference's MaxConcurrency-1 pipeline), or a " +
-            s"crashed one left a stale claim; if no writer is alive, " +
-            s"delete $claim and retry", e)
+    val v = latestVersion(spark, tdir)
+    // The claim is PERMANENT and anonymous, so never reentrant —
+    // deleting it after commit would let a straggler that read the
+    // old base re-claim the version and overwrite committed bucket
+    // files — so a crash between claim and commit leaves a stale
+    // claim that fails retries loudly with the remedy named
+    // (deliberate: a blocked retry beats a silent lost update, and
+    // only an operator can know no writer is alive). vacuum() clears
+    // claims below the kept-version window.
+    BucketStore.claim(spark, tdir, v + 1) { claim =>
+      s"$tdir: version ${v + 1} is already claimed — a concurrent " +
+        "applier is committing it (the store is single-writer, like " +
+        "the reference's MaxConcurrency-1 pipeline), or a crashed one " +
+        s"left a stale claim; if no writer is alive, delete $claim and " +
+        "retry"
     }
-    val base =
-      ApplyTiming.time("manifest_read")(latestManifestFull(spark, tdir))
-    // merge hashing at the BASE manifest's width (manifest.size):
-    // the delta must land in the same buckets the base's rows were
-    // hashed into, whatever the current meta says — keeps a merge
-    // consistent even when it runs right after a crashed rebucket
-    // flipped the meta but the latest manifest is still the old
-    // layout (or vice versa)
-    val buckets = base.size
-    // LAZY checkpoint (r16, the BPE-loop trick): the dirty-bucket
-    // collect right below is the delta's first action and materializes
-    // the checkpoint blocks as it runs — an eager copy here paid one
-    // extra job latency per table per release (~10 concurrent
-    // release-sized jobs per apply, half the fold's thread-seconds at
-    // fixture scale). Callers that hand in an ALREADY-materialized
-    // delta (the dual-anchor twin fan-out shares one checkpoint across
-    // two tables) skip the re-copy outright.
-    val d =
-      if (deltaMaterialized) delta
-      else ApplyTiming.time("delta_ckpt")(
-        delta.localCheckpoint(eager = false))
-    val dirty = ApplyTiming.time("dirty_collect")(d
-      .select(EventStreams.bucketCol(bucketKeys, buckets).as("_b"))
-      .distinct().collect().map(_.getInt(0)).toSet)
-    val next =
-      if (dirty.isEmpty) base
-      else {
-        val dirtyState = EventStreams.stateAt(spark, tdir,
-          EventStreams.versionsOf(base.filter { case (k, _) => dirty(k) }),
-          Some(expectT))
-        val written = ApplyTiming.time("merge_write")(
-          EventStreams.writeBuckets(
-            merge(dirtyState, d), bucketKeys, buckets, s"$tdir/v${v + 1}"))
-        // bloom-maintaining stores sidecar every REWRITTEN bucket
-        // (full key set of the rewrite — the bucket is copy-on-write);
-        // inherited buckets keep the sidecars their versions carry.
-        // The sidecar job and the zone-stat job both read the buckets
-        // just written and are independent — run them as concurrent
-        // job streams (r15 opt), awaiting the sidecars before the
-        // manifest publishes so a returned apply always has them.
-        val bloomF = bloomSidecarsAsync(spark, s"$tdir/v${v + 1}",
-          bucketKeys, bloomBits.filter(_ => written.nonEmpty), expectT)
-        // zone-map stores re-stat every rewritten bucket (the rewrite
-        // IS the full bucket state — copy-on-write)
-        val zs = ApplyTiming.time("zones")(
-          collectZones(spark, tdir, s"$tdir/v${v + 1}",
-            written.nonEmpty && zones, Some(expectT)))
-        ApplyTiming.time("bloom_await")(scala.concurrent.Await.result(
-          bloomF, scala.concurrent.duration.Duration.Inf))
-        // unchanged buckets inherit version + file/zone stats by
-        // reference
-        base ++ dirty.map(k =>
-          k -> written.get(k).fold(EventStreams.BucketFiles(-1, None))(
-            fs => EventStreams.BucketFiles(v + 1, Some(fs), zs.get(k))))
-      }
-    ApplyTiming.time("manifest_commit")(
-      EventStreams.writeManifestExclusiveFull(
-        spark, s"$tdir/manifest/v${v + 1}", next))
-    (dirty.size, v + 1)
+    val (dirty, next) = BucketStore.rewriteDirty(spark, tdir,
+      latestManifestFull(spark, tdir), v + 1, delta, meta.keys.get, meta,
+      expectT)(merge)
+    EventStreams.writeManifestExclusiveFull(
+      spark, s"$tdir/manifest/v${v + 1}", next)
+    (dirty, v + 1)
   }
 
   // ---- release markers: store-level atomicity ----
@@ -541,7 +381,7 @@ object GraphStore {
     * `sequence` column). Every choice is a function of the table's
     * merge key, so bucket-local merges stay exact. */
   def init(spark: SparkSession, dir: String, g: GraphLoad.Graph,
-      buckets: Int = numBuckets, dualAnchor: Boolean = false,
+      buckets: Int = EventStreams.defaultNumBuckets, dualAnchor: Boolean = false,
       keyBlooms: Boolean = false, bloomBits: Int = 1 << 17,
       zoneMaps: Boolean = false): Unit = {
     // keyBlooms (opt-in): every bucket write also publishes a
@@ -638,11 +478,8 @@ object GraphStore {
     "HAS_FEATURE" -> Seq("locus", "rank", "term", "accession"))
 
   private def hasTwin(spark: SparkSession, dir: String,
-      table: String): Boolean = {
-    val (fs, p) = EventStreams.hadoopFs(spark,
-      metaPath(s"$dir/${table}__rev"))
-    fs.exists(p)
-  }
+      table: String): Boolean =
+    StoreMeta.read(spark, s"$dir/${table}__rev").nonEmpty
 
   /** Every table directory the store keeps — dynamic, because the
     * dual-anchor layout adds `__rev` twins (a directory is a table
@@ -652,8 +489,7 @@ object GraphStore {
     fs.listStatus(root).toSeq
       .filter(st => st.isDirectory && st.getPath.getName != "_release")
       .map(_.getPath.getName)
-      .filter(t => fs.exists(new org.apache.hadoop.fs.Path(
-        metaPath(s"$dir/$t"))))
+      .filter(t => StoreMeta.read(spark, s"$dir/$t").nonEmpty)
       .sorted
   }
 
@@ -700,19 +536,17 @@ object GraphStore {
     val stats =
       new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
     def apply1(table: String, delta: DataFrame,
-        merge: (DataFrame, DataFrame) => DataFrame,
-        deltaMaterialized: Boolean = false): Future[Unit] =
+        merge: (DataFrame, DataFrame) => DataFrame): Future[Unit] =
       Future {
-        stats.put(table,
-          applyTable(spark, s"$dir/$table", delta, merge,
-            deltaMaterialized))
+        stats.put(table, applyTable(spark, s"$dir/$table", delta, merge))
         ()
       }
     // Dual-anchor twins receive the SAME delta under the SAME merge —
     // sound because every twin bucket key is a function of the merge
     // key, so both layouts' bucket-local merges compute the identical
     // relation. The delta is checkpointed once so the (possibly deep)
-    // delta pipeline doesn't run once per layout.
+    // delta pipeline doesn't run once per layout (the dirty rewrite
+    // sees the checkpoint and does not copy it again).
     val twins = revAnchors.map(_._1)
       .filter(t => hasTwin(spark, dir, t)).toSet
     def applyEdge(table: String, delta: DataFrame,
@@ -720,8 +554,7 @@ object GraphStore {
       if (!twins(table)) Seq(apply1(table, delta, merge))
       else {
         val d = delta.localCheckpoint()
-        Seq(apply1(table, d, merge, deltaMaterialized = true),
-          apply1(s"${table}__rev", d, merge, deltaMaterialized = true))
+        Seq(apply1(table, d, merge), apply1(s"${table}__rev", d, merge))
       }
 
     // Bijection guard BEFORE any apply commits (serial — probing the
@@ -781,23 +614,13 @@ object GraphStore {
           .select("src", "dst")
         if (twins("HAS_SEQUENCE")) hsDelta.localCheckpoint() else hsDelta
       }
-    val hsTwin = twins("HAS_SEQUENCE")
-    val hsApplies =
-      Seq(hsDeltaF.map { hs =>
-        stats.put("HAS_SEQUENCE",
-          applyTable(spark, s"$dir/HAS_SEQUENCE",
-            hs, createOnly(Seq("src", "dst")),
-            deltaMaterialized = hsTwin))
+    val hsApplies = ("HAS_SEQUENCE" +:
+        (if (twins("HAS_SEQUENCE")) Seq("HAS_SEQUENCE__rev") else Nil))
+      .map(t => hsDeltaF.map { hs =>
+        stats.put(t, applyTable(spark, s"$dir/$t", hs,
+          createOnly(Seq("src", "dst"))))
         ()
-      }) ++
-        (if (!hsTwin) Nil
-         else Seq(hsDeltaF.map { hs =>
-           stats.put("HAS_SEQUENCE__rev",
-             applyTable(spark, s"$dir/HAS_SEQUENCE__rev",
-               hs, createOnly(Seq("src", "dst")),
-               deltaMaterialized = true))
-           ()
-         }))
+      })
 
     val independent = (Seq(
       apply1("GFE", gfeDelta, createOnly(Seq("name"))),
@@ -832,7 +655,6 @@ object GraphStore {
         .getOrElse(latestVersion(spark, s"$dir/$t"))
     }.toMap
     writeMarker(spark, dir, versions)
-    ApplyTiming.dump(s"applyRelease $dir")
     ApplyStats(applied.map { case (t, (n, _)) => t -> n }, versions)
   }
 
@@ -966,7 +788,7 @@ object GraphStore {
     // anchored traversal become bucket-pruned reads. No twin, wrong
     // key → the loud layout failure below, as before.
     val meta = tableMeta(spark, s"$dir/$table")
-    if (keys != meta._2 && !table.endsWith("__rev") &&
+    if (keys != meta.keys.get && !table.endsWith("__rev") &&
         hasTwin(spark, dir, table) &&
         tableBucketKeys(spark, s"$dir/${table}__rev") == keys)
       return probe(spark, dir, s"${table}__rev", keyRows, keys, asOf)
@@ -1023,7 +845,7 @@ object GraphStore {
       : (String, Map[Int, EventStreams.BucketFiles], Seq[String],
          org.apache.spark.sql.types.StructType, Option[Int]) = {
     val tdir = s"$dir/$table"
-    val (_, bucketKeys, bloomBits) = tableMeta(spark, tdir)
+    val meta = tableMeta(spark, tdir)
     // FULL manifest (version + persisted file stats): the FileIndex
     // answers sizeInBytes and file enumeration from the stats with
     // zero listStatus round-trips on a stats-carrying store; the
@@ -1031,7 +853,7 @@ object GraphStore {
     // sidecars (declarative miss-gating)
     (tdir, manifestAtFull(spark, tdir,
         servingVersion(spark, dir, table, asOf)),
-      bucketKeys, tableSchema(spark, tdir), bloomBits)
+      meta.keys.get, tableSchema(spark, tdir), meta.bloomBits)
   }
 
   /** One store table as a plain DataFrame through the registered data
@@ -1155,15 +977,10 @@ object GraphStore {
     val claimed = tables.map { t =>
       val tdir = s"$dir/$t"
       val v = latestVersion(spark, tdir)
-      val claim = s"$tdir/manifest/.claim_v${v + 1}"
-      try EventStreams.writeSmallFileExclusive(spark, claim, "")
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          throw new java.util.ConcurrentModificationException(
-            s"$tdir: version ${v + 1} is already claimed — a concurrent " +
-              "applier (or crashed one) holds it; rebucket needs the " +
-              s"store quiesced of writers. If none is alive, delete " +
-              s"$claim and retry", e)
+      BucketStore.claim(spark, tdir, v + 1) { claim =>
+        s"$tdir: version ${v + 1} is already claimed — a concurrent " +
+          "applier (or crashed one) holds it; rebucket needs the store " +
+          s"quiesced of writers. If none is alive, delete $claim and retry"
       }
       t -> v
     }
@@ -1180,32 +997,18 @@ object GraphStore {
     val rewrites = claimed.map { case (t, v) =>
       Future {
         val tdir = s"$dir/$t"
-        val (_, keys, bloomBits, zones) = tableMetaFull(spark, tdir)
+        val meta = tableMeta(spark, tdir)
         val schema = tableSchema(spark, tdir)
         val state = EventStreams.stateAt(spark, tdir,
           servingManifest(spark, dir, t), Some(schema))
-        val written = EventStreams.writeBuckets(
-          state, keys, newBuckets, s"$tdir/v${v + 1}")
-        // bloom sidecars rebuild with the layout (every bucket is
-        // rewritten — this is also what restores a bloom's fp ratio
-        // after the per-bucket key count outgrew its bit width);
-        // zone stats rebuild with the layout — the two passes overlap
-        // like applyTable's
-        val bloomF = bloomSidecarsAsync(spark, s"$tdir/v${v + 1}",
-          keys, bloomBits.filter(_ => written.nonEmpty), schema)
-        val zs = collectZones(spark, tdir, s"$tdir/v${v + 1}",
-          written.nonEmpty && zones, Some(schema))
-        Await.result(bloomF, Duration.Inf)
+        // bloom sidecars and zone stats rebuild with the layout (every
+        // bucket is rewritten — this is also what restores a bloom's
+        // fp ratio after the per-bucket key count outgrew its width)
         EventStreams.writeManifestExclusiveFull(spark,
           s"$tdir/manifest/v${v + 1}",
-          (0 until newBuckets).map(k =>
-            k -> written.get(k).fold(EventStreams.BucketFiles(-1, None))(
-              fs => EventStreams.BucketFiles(v + 1, Some(fs), zs.get(k))))
-            .toMap)
-        EventStreams.writeSmallFile(spark, metaPath(tdir),
-          s"$newBuckets\n${keys.mkString(",")}\n" +
-            bloomBits.fold("")(b => s"bloom=$b\n") +
-            (if (zones) "zones=*\n" else ""))
+          BucketStore.writeVersion(spark, tdir, v + 1, state,
+            meta.keys.get, newBuckets, meta, schema))
+        StoreMeta.write(spark, tdir, meta.copy(buckets = newBuckets))
         t -> (v + 1)
       }
     }

@@ -298,14 +298,17 @@ object DedupQueries {
     // bucket-count meta are complete on disk (a crash mid-init
     // restarts cleanly instead of wedging the dir). The bucket count
     // is a LAYOUT property persisted at creation and read on resume
-    // (cdcApply's _graft_store_meta rule): a resume under a different
-    // env value would probe/rewrite the wrong buckets silently.
+    // (cdcApply's store-meta rule): a resume under a different env
+    // value would probe/rewrite the wrong buckets silently.
+    import graft.streaming.BucketStore
+    import graft.streaming.BucketStore.StoreMeta
     val (fs, mdir) = hadoopFs(s, s"$stateDir/A/manifest")
     val resumed = fs.exists(mdir) && fs.listStatus(mdir).nonEmpty
-    val metaPath = s"$stateDir/_graft_store_meta"
-    val nb =
-      if (resumed) readSmallFile(s, metaPath).trim.toInt
-      else defaultNumBuckets
+    val meta =
+      if (resumed) StoreMeta.read(s, stateDir).getOrElse(
+        throw new java.io.FileNotFoundException(StoreMeta.path(stateDir)))
+      else StoreMeta(defaultNumBuckets)
+    val nb = meta.buckets
     if (!resumed) {
       empty(bandSchema).coalesce(1)
         .write.mode("overwrite").parquet(s"$stateDir/BANDS/_empty")
@@ -313,7 +316,7 @@ object DedupQueries {
         (0 until nb).map(_ -> -1).toMap)
       empty(bSchema).coalesce(1)
         .write.mode("overwrite").parquet(s"$stateDir/B/v0")
-      writeSmallFile(s, metaPath, s"$nb\n")
+      StoreMeta.write(s, stateDir, meta)
       empty(aSchema).coalesce(1)
         .write.mode("overwrite").parquet(s"$stateDir/A/_empty")
       writeManifest(s, s"$stateDir/A/manifest/v0",
@@ -450,21 +453,19 @@ object DedupQueries {
             coalesce(col("_ol"), col("lbl")).as("lbl"),
             (coalesce(col("_op"), lit(false)) ||
               coalesce(col("paired"), lit(false))).as("paired"))
-        val aWritten = writeBuckets(aMerged, Seq("doc_id"), nb,
-          s"$stateDir/A/v${id + 1}")
+        val aWritten = BucketStore.writeVersion(ss, s"$stateDir/A",
+          id.toInt + 1, aMerged, Seq("doc_id"), nb, meta, aSchema)
         writeManifest(ss, s"$stateDir/A/manifest/v${id + 1}",
-          aBase ++ aDirty.map(k =>
-            k -> (if (aWritten.contains(k)) id.toInt + 1 else -1)))
+          aBase ++ aDirty.map(k => k -> aWritten(k).version))
         // BANDS append (create-only on the full key; same
         // checkpointed dirty slice the probe read)
         val bandMerged = bandState
           .unionByName(bands.select("doc_id", "band", "bk"))
           .dropDuplicates("doc_id", "band", "bk")
-        val bandWritten = writeBuckets(bandMerged, Seq("band", "bk"), nb,
-          s"$stateDir/BANDS/v${id + 1}")
+        val bandWritten = BucketStore.writeVersion(ss, s"$stateDir/BANDS",
+          id.toInt + 1, bandMerged, Seq("band", "bk"), nb, meta, bandSchema)
         writeManifest(ss, s"$stateDir/BANDS/manifest/v${id + 1}",
-          bandBase ++ hit.map(k =>
-            k -> (if (bandWritten.contains(k)) id.toInt + 1 else -1)))
+          bandBase ++ hit.map(k => k -> bandWritten(k).version))
         bNext.toDF("root", "canon").coalesce(1)
           .write.mode("overwrite").parquet(s"$stateDir/B/v${id + 1}")
         ()

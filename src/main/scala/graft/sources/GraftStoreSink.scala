@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{StringType, StructType}
 
-import graft.streaming.EventStreams
+import graft.streaming.{BucketStore, EventStreams}
+import graft.streaming.BucketStore.StoreMeta
 
 /** The versioned bucket store as a Structured Streaming SINK —
   * `df.writeStream.format("graftstore").option("path", dir)` — the
@@ -172,18 +173,17 @@ class GraftStoreSink(
       "forfeiting the versioned layout's O(dirty-bucket) contract; use " +
       "Append/Update (the batch is a delta under the declared policy)")
 
-  private def metaPath = s"$dir/_graft_store_meta"
   private def commitRecord(id: Long) = s"$dir/_sink_commits/b$id"
 
-  /** Creation-fixed store facts — (keys, persisted schema, bloom
-    * declaration, zone-map declaration) — resolved ONCE per query: the
-    * Sink instance lives for the query's lifetime and the store is
-    * single-writer, so re-reading the meta file, `_empty` schema, and
-    * declaration lines every micro-batch would pay 4-5 small-file
-    * round trips per trigger for immutable data (pure added latency on
-    * a remote store). */
+  /** Creation-fixed store facts — (keys, persisted schema, store meta
+    * with its bloom and zone-map declarations) — resolved ONCE per
+    * query: the Sink instance lives for the query's lifetime and the
+    * store is single-writer, so re-reading the meta file and `_empty`
+    * schema every micro-batch would pay small-file round trips per
+    * trigger for immutable data (pure added latency on a remote
+    * store). */
   @volatile private var resolved
-      : Option[(Seq[String], StructType, Option[Int], Boolean)] = None
+      : Option[(Seq[String], StructType, StoreMeta)] = None
 
   override def addBatch(batchId: Long, data: Dataset[Row]): Unit = {
     // re-wrap the IncrementalExecution-planned frame as a plain batch
@@ -206,37 +206,43 @@ class GraftStoreSink(
       .filterNot(f => policy == "cdc" && f.name == "change"))
 
     // ---- resolve or create the store (once per query) ----
-    val (keys, storeSchema, bloomBits, zones) = resolved.getOrElse {
+    val (keys, storeSchema, meta) = resolved.getOrElse {
       val (mfs, mdir) = EventStreams.hadoopFs(spark, s"$dir/manifest")
       val exists = mfs.exists(mdir) && mfs.listStatus(mdir).nonEmpty
       val optKeys = parameters.get("keys").toSeq
         .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-      val ks: Seq[String] =
-        if (!exists) {
+      // the persisted declaration (creation-time, this store's or an
+      // earlier writer's) decides sidecar/stats maintenance — never
+      // the per-query option
+      val persisted =
+        if (!exists) None
+        else Some(StoreMeta.read(spark, dir).getOrElse(
+          throw new java.io.FileNotFoundException(StoreMeta.path(dir))))
+      val ks: Seq[String] = persisted match {
+        case None =>
           require(optKeys.nonEmpty,
             "graftstore sink: creating a store needs option 'keys' " +
               "(comma-separated merge/bucket columns, declaration order)")
           optKeys
-        } else GraftStoreSource.persistedKeys(spark, dir) match {
-          case Some(pk) =>
-            require(optKeys.isEmpty || optKeys == pk,
-              s"graftstore sink: $dir is keyed (${pk.mkString(",")}) per " +
-                s"its persisted meta; keys option " +
-                s"(${optKeys.mkString(",")}) would bucket and merge " +
-                "wrong — pass the persisted keys in that order, or omit")
-            pk
-          case None =>
-            require(optKeys.nonEmpty,
-              s"graftstore sink: $dir predates key persistence (one-line " +
-                "meta) — pass option 'keys' (the store's cdcApply " +
-                "stateKeys, declaration order)")
-            optKeys
-        }
+        case Some(StoreMeta(_, Some(pk), _, _)) =>
+          require(optKeys.isEmpty || optKeys == pk,
+            s"graftstore sink: $dir is keyed (${pk.mkString(",")}) per " +
+              s"its persisted meta; keys option " +
+              s"(${optKeys.mkString(",")}) would bucket and merge " +
+              "wrong — pass the persisted keys in that order, or omit")
+          pk
+        case Some(_) =>
+          require(optKeys.nonEmpty,
+            s"graftstore sink: $dir predates key persistence (one-line " +
+              "meta) — pass option 'keys' (the store's cdcApply " +
+              "stateKeys, declaration order)")
+          optKeys
+      }
       ks.foreach(k => require(dataSchema.fieldNames.contains(k),
         s"graftstore sink: key '$k' is not a column of the stream " +
           s"(columns: ${dataSchema.fieldNames.mkString(",")})"))
 
-      if (!exists) {
+      val m = persisted.getOrElse {
         val buckets = parameters.get("buckets").map(_.trim.toInt)
           .getOrElse(EventStreams.defaultNumBuckets)
         require(buckets > 0, "graftstore sink: buckets must be positive")
@@ -246,34 +252,25 @@ class GraftStoreSink(
         // the two-line (GraphStore-form) meta: count + keys — every
         // later reader/writer cross-checks keys instead of trusting
         // its caller, the validation hole the raw one-line layout
-        // has. keyBlooms adds the bloom declaration (third line),
-        // making every batch's bucket writes publish `_bloom` key
-        // sidecars.
-        val bloomLine =
-          if (!parameters.get("keyBlooms").exists(_.trim.toBoolean)) ""
-          else s"bloom=${parameters.get("bloomBits").map(_.trim.toInt)
-            .getOrElse(1 << 17)}\n"
-        // zoneMaps adds the zone-map declaration: every batch's
-        // manifest then carries per-bucket min/max stats and the SQL
-        // surface range-prunes the maintained store (ZoneMaps)
-        val zoneLine =
-          if (!parameters.get("zoneMaps").exists(_.trim.toBoolean)) ""
-          else "zones=*\n"
-        EventStreams.writeSmallFile(spark, metaPath,
-          s"$buckets\n${ks.mkString(",")}\n$bloomLine$zoneLine")
+        // has. keyBlooms adds the bloom declaration (every batch's
+        // bucket writes publish `_bloom` key sidecars); zoneMaps the
+        // zone-map one (every batch's manifest carries per-bucket
+        // min/max stats and the SQL surface range-prunes the store)
+        def opt(k: String) = parameters.get(k).exists(_.trim.toBoolean)
+        val created = StoreMeta(buckets, Some(ks),
+          if (!opt("keyBlooms")) None
+          else Some(parameters.get("bloomBits").map(_.trim.toInt)
+            .getOrElse(1 << 17)),
+          opt("zoneMaps"))
+        StoreMeta.write(spark, dir, created)
         // v0 = the empty state; the first batch commits v1. Manifest
         // LAST: its existence certifies _empty + meta are complete.
         EventStreams.writeManifestFull(spark, s"$dir/manifest/v0",
           (0 until buckets).map(_ -> EventStreams.BucketFiles(-1, None))
             .toMap)
+        created
       }
-      // the persisted declaration (creation-time, this store's or an
-      // earlier writer's) decides sidecar/stats maintenance — never
-      // the per-query option
-      val r = (ks, EventStreams.storeSchema(spark, dir),
-        GraftStoreSource.persistedBloom(spark, dir),
-        EventStreams.readSmallFile(spark, metaPath)
-          .linesIterator.exists(_.startsWith("zones=")))
+      val r = (ks, EventStreams.storeSchema(spark, dir), m)
       resolved = Some(r)
       r
     }
@@ -319,7 +316,7 @@ class GraftStoreSink(
         EventStreams.evolveStoreSchema(spark, dir, evolved)
         // later batches of THIS query must see the evolved schema, or
         // each would re-detect extras and publish a duplicate footer
-        resolved = Some((keys, evolved, bloomBits, zones))
+        resolved = Some((keys, evolved, meta))
         evolved
       }
 
@@ -342,7 +339,6 @@ class GraftStoreSink(
 
     // ---- claim the next version (single-writer, crash-reentrant) ----
     val v = EventStreams.manifestVersions(spark, dir).max
-    val claim = s"$dir/manifest/.claim_v${v + 1}"
     // the claim body identifies THIS query's attempt at THIS batch:
     // scoped by the checkpoint location (stable across restarts of
     // the same query, distinct across queries), so a second sink
@@ -351,75 +347,46 @@ class GraftStoreSink(
     // single-writer exclusion like any foreign claim
     val claimBody = s"sink b$batchId " +
       parameters.getOrElse("checkpointLocation", "-") + "\n"
-    try EventStreams.writeSmallFileExclusive(spark, claim, claimBody)
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        // our own crashed attempt at THIS batch may hold the claim —
-        // the engine serializes a checkpoint's batches, so a claim
-        // recording this batch id can only be ours: resume through it
-        // (the rewrite below overwrites our own partial bucket files)
-        val own =
-          try EventStreams.readSmallFile(spark, claim) == claimBody
-          catch { case _: java.io.IOException => false }
-        if (!own) throw new java.util.ConcurrentModificationException(
-          s"graftstore sink: version ${v + 1} of $dir is already " +
-            "claimed by another writer — the store is single-writer " +
-            "(one sink query, or one batch applier, at a time); if no " +
-            s"writer is alive, delete $claim and retry", e)
+    // our own crashed attempt at THIS batch may hold the claim — the
+    // engine serializes a checkpoint's batches, so a claim recording
+    // this batch id can only be ours: resume through it (the rewrite
+    // below overwrites our own partial bucket files)
+    BucketStore.claim(spark, dir, v + 1, claimBody) {
+      claim =>
+        s"graftstore sink: version ${v + 1} of $dir is already " +
+          "claimed by another writer — the store is single-writer " +
+          "(one sink query, or one batch applier, at a time); if no " +
+          s"writer is alive, delete $claim and retry"
     }
 
-    val base = EventStreams.readManifestFull(spark, s"$dir/manifest/v$v")
-    val width = base.size
     val delta = batch.localCheckpoint()
     // every state-facing frame binds the PERSISTED schema's column
     // order — except() and the parquet write align by position, and a
     // later query's select order must not be able to skew them
-    val rows = delta.select(effSchema.fieldNames.map(col).toIndexedSeq: _*)
-    val dirty = rows
-      .select(EventStreams.bucketCol(keys, width).as("_b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val next =
-      if (dirty.isEmpty) base
-      else {
-        val state = EventStreams.stateAt(spark, dir,
-          EventStreams.versionsOf(
-            base.filter { case (k, _) => dirty(k) }),
-          Some(effSchema))
-        val merged = policy match {
-          case "upsert" =>
-            val d = rows.dropDuplicates(keys)
-            d.unionByName(
-              state.join(d.select(keys.map(col): _*), keys, "left_anti"))
-          case "createOnly" =>
-            state.unionByName(
-              rows.dropDuplicates(keys).join(
-                state.select(keys.map(col): _*), keys, "left_anti"))
-          case "cdc" =>
-            // row-SET semantics, the change feed's own: '-' rows leave,
-            // '+' rows enter; except/distinct make the fold idempotent
-            // (a crash-window re-apply of the same diff is a no-op),
-            // matching cdcDiff's set-based emission
-            val minus = delta.where(col("change") === "-")
-              .select(effSchema.fieldNames.map(col).toIndexedSeq: _*)
-            val plus = delta.where(col("change") === "+")
-              .select(effSchema.fieldNames.map(col).toIndexedSeq: _*)
-            state.except(minus).unionByName(plus).distinct()
-        }
-        val written = EventStreams.writeBuckets(
-          merged, keys, width, s"$dir/v${v + 1}")
-        bloomBits.filter(_ => written.nonEmpty).foreach(bits =>
-          EventStreams.writeBucketBlooms(spark, s"$dir/v${v + 1}",
-            keys, bits, Some(effSchema)))
-        // zone-declared stores re-stat every rewritten bucket
-        val zs =
-          if (!zones || written.isEmpty)
-            Map.empty[Int, graft.streaming.ZoneMaps.BucketStats]
-          else graft.streaming.ZoneMaps.collect(spark,
-            s"$dir/v${v + 1}", effSchema)
-        base ++ dirty.map(k =>
-          k -> written.get(k).fold(EventStreams.BucketFiles(-1, None))(
-            fs => EventStreams.BucketFiles(v + 1, Some(fs), zs.get(k))))
+    def storeOrder(df: DataFrame) =
+      df.select(effSchema.fieldNames.map(col).toIndexedSeq: _*)
+    val (_, next) = BucketStore.rewriteDirty(spark, dir,
+        EventStreams.readManifestFull(spark, s"$dir/manifest/v$v"), v + 1,
+        delta, keys, meta, effSchema) { (state, d) =>
+      policy match {
+        case "upsert" =>
+          val rows = storeOrder(d).dropDuplicates(keys)
+          rows.unionByName(
+            state.join(rows.select(keys.map(col): _*), keys, "left_anti"))
+        case "createOnly" =>
+          state.unionByName(
+            storeOrder(d).dropDuplicates(keys).join(
+              state.select(keys.map(col): _*), keys, "left_anti"))
+        case "cdc" =>
+          // row-SET semantics, the change feed's own: '-' rows leave,
+          // '+' rows enter; except/distinct make the fold idempotent
+          // (a crash-window re-apply of the same diff is a no-op),
+          // matching cdcDiff's set-based emission
+          state.except(storeOrder(d.where(col("change") === "-")))
+            .unionByName(storeOrder(d.where(col("change") === "+")))
+            .distinct()
       }
+    }
     // manifest commits exclusively like every store writer; a loss
     // here (claim raced a writer that somehow bypassed claims) stays
     // loud rather than silently splicing history

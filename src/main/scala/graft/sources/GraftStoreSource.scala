@@ -124,30 +124,30 @@ class GraftStoreSource extends RelationProvider with StreamSourceProvider
               s"of $sd (columns: ${schema.fieldNames.mkString(",")}); " +
               "pass the store's cdcApply bucket key(s) or omit keys to " +
               "read without pruning"))
-          // when the target dir carries a GraphStore table meta (a
-          // two-line `_graft_store_meta` with a bucket-key line), the
-          // TRUE bucket key is knowable — cross-check it (including
+          // when the target dir carries a store meta with a bucket-key
+          // line (GraphStore tables, sink-created stores), the TRUE
+          // bucket key is knowable — cross-check it (including
           // declaration ORDER: the hash is order-sensitive) and fail
           // loudly like stateForKeys' 'would miss rows' require,
           // instead of silently pruning to wrong buckets and dropping
           // rows. Bare cdcApply stores persist only the count (one
           // line) — existence-check above is all that's possible there.
-          if (keys.nonEmpty)
-            GraftStoreSource.persistedKeys(spark, sd).foreach { pk =>
-              require(keys == pk,
-                s"graftstore: $sd is bucketed by (${pk.mkString(",")}) " +
-                  s"per its persisted table meta; keys option " +
-                  s"(${keys.mkString(",")}) would prune the wrong " +
-                  "buckets and silently miss rows — pass the persisted " +
-                  "key(s) in that exact order, or omit keys")
-            }
+          val meta =
+            if (keys.isEmpty) None
+            else graft.streaming.BucketStore.StoreMeta.read(spark, sd)
+          meta.flatMap(_.keys).foreach { pk =>
+            require(keys == pk,
+              s"graftstore: $sd is bucketed by (${pk.mkString(",")}) " +
+                s"per its persisted table meta; keys option " +
+                s"(${keys.mkString(",")}) would prune the wrong " +
+                "buckets and silently miss rows — pass the persisted " +
+                "key(s) in that exact order, or omit keys")
+          }
           // raw layout: the bloom declaration (when the store was
           // created with one — GraphStore tables read raw, or
           // sink-created stores with the keyBlooms option) gates the
           // literal pruning on the same sidecars
-          (sd, m, keys, schema,
-            if (keys.isEmpty) None
-            else GraftStoreSource.persistedBloom(spark, sd))
+          (sd, m, keys, schema, meta.flatMap(_.bloomBits))
       }
     val index = new GraftStoreFileIndex(spark, tdir, manifest, bucketKeys,
       schema, bloomBits)
@@ -202,41 +202,6 @@ object GraftStoreSource {
         sys.error("graftstore: pass either dir+table (GraphStore " +
           "layout) or path (raw cdcApply store)")))
     }
-
-  /** The bucket keys persisted in a GraphStore-layout table meta at
-    * `sd`, when one exists — Some(keys) only for the two-line meta
-    * GraphStore.initTable writes (line 1 bucket count, line 2 the
-    * comma-joined bucket keys in hash order); a bare cdcApply store's
-    * one-line meta (count only) and a meta-less dir both yield None
-    * (nothing to validate against). */
-  private[sources] def persistedKeys(spark: SparkSession,
-      sd: String): Option[Seq[String]] = {
-    val (fs, p) = EventStreams.hadoopFs(spark, s"$sd/_graft_store_meta")
-    if (!fs.exists(p)) None
-    else {
-      val lines = EventStreams.readSmallFile(spark,
-          s"$sd/_graft_store_meta")
-        .linesIterator.filter(_.nonEmpty).toSeq
-      if (lines.length >= 2)
-        Some(lines(1).split(',').map(_.trim).toSeq)
-      else None
-    }
-  }
-
-  /** The persisted bloom sidecar width (the optional `bloom=` third
-    * meta line — written by GraphStore.init(keyBlooms) and the sink's
-    * keyBlooms option), when the store at `sd` maintains key blooms —
-    * lets the raw-layout SQL read gate its literal pruning on the
-    * same sidecars. */
-  private[sources] def persistedBloom(spark: SparkSession,
-      sd: String): Option[Int] = {
-    val (fs, p) = EventStreams.hadoopFs(spark, s"$sd/_graft_store_meta")
-    if (!fs.exists(p)) None
-    else EventStreams.readSmallFile(spark, s"$sd/_graft_store_meta")
-      .linesIterator.filter(_.nonEmpty).toSeq.drop(2)
-      .find(_.startsWith("bloom="))
-      .map(_.stripPrefix("bloom=").trim.toInt)
-  }
 
   /** Raw-layout manifest + schema resolution with the loud failures
     * the rest of the store uses: a non-store path or a vacuumed /

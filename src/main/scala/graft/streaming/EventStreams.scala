@@ -404,7 +404,7 @@ object EventStreams {
     * reference, which is what makes a micro-batch's I/O proportional
     * to the DIRTY state, not the whole table. */
   // ONE tested stream-IO path for every small control file the store
-  // keeps (manifests, _graft_store_meta) — a future move to e.g.
+  // keeps (manifests, the store meta) — a future move to e.g.
   // atomic rename-based writes lands in one place.
   private[graft] def writeSmallFile(
       spark: SparkSession, path: String, body: String): Unit = {
@@ -781,9 +781,11 @@ object EventStreams {
       bloomPositions(h, k, bits.toLong).forall(pos => bs.get(pos.toInt)))
   }
 
-  /** Store-width default for [[cdcApply]]: 16 at fixture scale
-    * (thousands on a 100 TB store — `numBuckets` trades per-batch
-    * write amplification against small-file count). Env-tunable
+  /** Store-width default for every bucket store ([[cdcApply]],
+    * [[graft.graph.GraphStore.init]], the `graftstore` sink): 16 at
+    * fixture scale (thousands on a 100 TB store — `numBuckets` trades
+    * per-batch write amplification against small-file count; a
+    * caller's explicit width always wins). Env-tunable
     * (`GRAFT_CDC_BUCKETS`) so the bucketing's constant overhead is
     * measurable without a code edit: a 1-bucket store is exactly the
     * pre-bucketing single-table layout. */
@@ -826,8 +828,8 @@ object EventStreams {
       toDelta: DataFrame => DataFrame,
       merge: (DataFrame, DataFrame) => DataFrame,
       numBuckets: Int = defaultNumBuckets): DataFrame = {
+    import BucketStore.StoreMeta
     val stateSchema = initState.schema
-    def metaPath = s"$stateDir/_graft_store_meta"
     def manifestPath(v: Int) = s"$stateDir/manifest/v$v"
     // Init is write-once: a `_chk` restart of a partially-processed
     // stream must NOT re-materialize v0 — committed manifests
@@ -849,71 +851,46 @@ object EventStreams {
     // store was created with, whatever today's parameter/env says —
     // a mismatched bucketCol would route keys to the wrong bucket
     // and duplicate state. Persisted at creation, read on resume.
-    val storeBuckets =
-      if (!resumed) numBuckets
-      else {
-        val (fs, mp) = hadoopFs(spark, metaPath)
-        if (!fs.exists(mp)) numBuckets // pre-meta store: trust caller
-        else {
-          val stored = readSmallFile(spark, metaPath).trim.toInt
-          if (stored != numBuckets) System.err.println(
-            s"[cdcApply] $stateDir was created with $stored buckets; " +
-              s"ignoring requested $numBuckets")
-          stored
-        }
+    val meta =
+      if (!resumed) StoreMeta(numBuckets)
+      else StoreMeta.read(spark, stateDir) match {
+        case None => StoreMeta(numBuckets) // pre-meta store: trust caller
+        case Some(m) =>
+          require(m.keys.forall(_ == stateKeys),
+            s"$stateDir is bucketed by (${m.keys.get.mkString(",")}) per " +
+              s"its meta; stateKeys (${stateKeys.mkString(",")}) would " +
+              "route keys to the wrong buckets")
+          if (m.buckets != numBuckets) System.err.println(
+            s"[cdcApply] $stateDir was created with ${m.buckets} " +
+              s"buckets; ignoring requested $numBuckets")
+          m
       }
-    if (!resumed) graft.graph.GraphStore.ApplyTiming.time("cdc_init") {
+    if (!resumed) {
       // Schema-carrying empty state: the read side for buckets that
       // have never held rows (an empty partitionBy write creates no
       // leaf directory to point at).
       initState.limit(0).coalesce(1)
         .write.mode("overwrite").parquet(s"$stateDir/_empty")
-      writeSmallFile(spark, metaPath, s"$storeBuckets\n")
-      val initPresent = writeBuckets(
-        initState, stateKeys, storeBuckets, s"$stateDir/v0")
+      StoreMeta.write(spark, stateDir, meta)
       writeManifestFull(spark, manifestPath(0),
-        (0 until storeBuckets).map(k =>
-          k -> initPresent.get(k).fold(BucketFiles(-1, None))(fs =>
-            BucketFiles(0, Some(fs)))).toMap)
+        BucketStore.writeVersion(spark, stateDir, 0, initState, stateKeys,
+          meta.buckets, meta, stateSchema))
     }
     val q = changes.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         val ss = batch.sparkSession
-        val timing = graft.graph.GraphStore.ApplyTiming
-        val base = readManifestFull(ss, manifestPath(id.toInt))
-        // lazy checkpoint (r16, same trick as GraphStore.applyTable):
-        // the dirty-bucket collect is the delta's first action and
-        // materializes the blocks — an eager copy paid one extra job
-        // latency per micro-batch
-        val delta = timing.time("cdc_delta")(
-          toDelta(batch.toDF()).localCheckpoint(eager = false))
-        val dirty = timing.time("cdc_dirty")(delta
-          .select(bucketCol(stateKeys, storeBuckets).as("_b"))
-          .distinct().collect().map(_.getInt(0)).toSet)
-        val next =
-          if (dirty.isEmpty) base
-          else {
-            val dirtyState = stateAt(ss, stateDir, versionsOf(base.filter {
-              case (k, _) => dirty(k) }), Some(stateSchema))
-            val written = timing.time("cdc_write")(writeBuckets(
-              merge(dirtyState, delta), stateKeys, storeBuckets,
-              s"$stateDir/v${id + 1}"))
-            // unchanged buckets INHERIT their entry (version AND file
-            // stats) from the base manifest; dirty ones get the stats
-            // the write just recorded
-            base ++ dirty.map(k =>
-              k -> written.get(k).fold(BucketFiles(-1, None))(fs =>
-                BucketFiles(id.toInt + 1, Some(fs))))
-          }
+        // version = batch id + 1 (the replay contract above); the
+        // manifest write OVERWRITES, so a retry of this batch replaces
+        // its own partial commit
+        val (_, next) = BucketStore.rewriteDirty(ss, stateDir,
+          readManifestFull(ss, manifestPath(id.toInt)), id.toInt + 1,
+          toDelta(batch.toDF()), stateKeys, meta, stateSchema)(merge)
         writeManifestFull(ss, manifestPath(id.toInt + 1), next)
         ()
       }
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$stateDir/_chk")
-    graft.graph.GraphStore.ApplyTiming.time("cdc_stream") {
-      q.start().awaitTermination()
-    }
-    graft.graph.GraphStore.ApplyTiming.dump(s"cdcApply $stateDir")
+    q.start().awaitTermination()
     cdcState(spark, stateDir)
   }
 

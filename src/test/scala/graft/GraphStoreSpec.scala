@@ -560,6 +560,29 @@ class GraphStoreSpec extends AnyFunSuite {
       e.getMessage.contains("rebuild"), e.getMessage)
   }
 
+  test("schema guard sees an _empty rewritten behind the schema " +
+      "cache's back (not through init)") {
+    val Seq(r1, r2, r3) = LoadFixtures.policyMatrix(spark)
+    val dir = tmp("graphstore_schema_cache")
+    GraphStore.init(spark, dir, GraphLoad.loadAll(spark, Seq(r1)),
+      buckets = 4)
+    GraphStore.applyRelease(spark, dir, r2) // every table's schema cached
+    // another process rebuilds GFE's footer with a column the merge
+    // policies do not produce
+    val footer = s"$dir/GFE/_empty"
+    val drifted = spark.read.parquet(footer).schema
+      .add("extra_col", org.apache.spark.sql.types.StringType)
+    spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], drifted)
+      .coalesce(1).write.mode("overwrite").parquet(footer)
+    val e = intercept[IllegalArgumentException] {
+      GraphStore.applyRelease(spark, dir, r3)
+    }
+    assert(e.getMessage.contains("/GFE") &&
+      e.getMessage.contains("extra_col") &&
+      e.getMessage.contains("rebuild the store"), e.getMessage)
+  }
+
   test("dual-anchor store: reverse probes served bucket-pruned from " +
       "the __rev twin; applyRelease keeps twins consistent; " +
       "either-direction expansion reads only the anchor's buckets") {
