@@ -10,10 +10,13 @@ import scala.collection.mutable.ArrayBuffer
   * surface (SURVEY.md §2.10: installed in the reference, no scripted
   * calls; parity target is capability, via GraphX).
   *
-  * Inputs/outputs are DataFrames; GraphX (RDD-based Pregel) runs the
-  * iterative core. String vertex ids are dictionary-encoded to longs
-  * with a deterministic first-seen index, never hashed (no collision
-  * risk at 10^11 vertices).
+  * Inputs/outputs are DataFrames. The distributed fixpoints run their
+  * rounds through one superstep driver ([[converge]] / [[iterate]]);
+  * GraphX (RDD-based Pregel) runs the [[connectedComponents]] and
+  * [[pageRank]] cross-implementation references, whose string vertex
+  * ids are dictionary-encoded to longs with a deterministic
+  * first-seen index, never hashed (no collision risk at 10^11
+  * vertices).
   *
   * Scale notes: connected components is the dedup-clustering closure
   * over candidate pairs — the pair list is orders of magnitude
@@ -66,31 +69,6 @@ object GraphAlgorithms {
     math.max(2, math.min(spark.sparkContext.defaultParallelism,
       (edgeCount / 1000000L).toInt + 1))
 
-  /** Run `body` with `spark.sql.shuffle.partitions` sized to the
-    * derived graph (≈[[graphParallelism]], floored at 4 for join
-    * intermediates), restoring the session value after. The iterative
-    * fixpoints shuffle SMALL frames dozens of times per run; at the
-    * session default (32 on the bench, 200 on a stock cluster) each
-    * round pays partitions × stages of task-scheduling latency for
-    * kilobyte tasks, and AQE's coalescing cannot help because every
-    * round's `localCheckpoint` materializes before the next plan is
-    * seen. Right-sizing the shuffle up front is worth 1.5-2× on the
-    * multi-round ops at the 1.2M-edge xdist scale. */
-  /** `perPartition` sizes the trade: label-frame fixpoints (CC, the
-    * SCC peel) want few partitions (~1M edges each — the rounds are
-    * scheduling-bound, measured 23→9 s at 1.2M edges going 32→4);
-    * gain-scan fixpoints whose per-round work is several edge-sized
-    * joins (Louvain) stay compute-bound and want real parallelism
-    * (~150k edges/partition measured best at the same scale).
-    *
-    * NOT concurrency-safe: the session conf is shared, so a query
-    * submitted on the same SparkSession while a fixpoint is inside
-    * this scope silently plans with the graph-sized partition count,
-    * and overlapping/nested calls restore a stale value. The engine's
-    * own callers run their fixpoints single-threaded per session (the
-    * bench, Verify, and every spec do); a caller that shares one
-    * session across query threads should hand the algorithm a
-    * `spark.newSession()` clone, which scopes the conf for free. */
   /** Materialize `df` hash-partitioned on `key` with the partitioning
     * RECORDED on the checkpointed plan, so every subsequent join on
     * `key` satisfies its distribution from the checkpoint and only
@@ -165,8 +143,9 @@ object GraphAlgorithms {
     * result is checkpointed because zipWithIndex ids must be minted
     * exactly once. Sorted range partitions stay globally ordered
     * through AQE coalescing (adjacent ranges merge), so the
-    * per-partition offset ranks are the global sort ranks. */
-  private def orderedVertexDict(verts: DataFrame): DataFrame = {
+    * per-partition offset ranks are the global sort ranks (pinned in
+    * GraphAlgorithmsSpec on a sort AQE coalesces). */
+  private[graft] def orderedVertexDict(verts: DataFrame): DataFrame = {
     val spark = verts.sparkSession
     import spark.implicits._
     val sorted = verts.toDF("sid").sort("sid")
@@ -184,6 +163,32 @@ object GraphAlgorithms {
       .join(dict.select(col("sid").as("b"), col("vid").as("_b")), "b")
       .select(col("_a").as("a"), col("_b").as("b"))
 
+  /** Run `body` with `spark.sql.shuffle.partitions` sized to the
+    * derived graph (≈[[graphParallelism]], floored at 4 for join
+    * intermediates), restoring the session value after. The iterative
+    * fixpoints shuffle SMALL frames dozens of times per run; at the
+    * session default (32 on the bench, 200 on a stock cluster) each
+    * round pays partitions × stages of task-scheduling latency for
+    * kilobyte tasks, and AQE's coalescing cannot help because every
+    * round's `localCheckpoint` materializes before the next plan is
+    * seen. Right-sizing the shuffle up front is worth 1.5-2× on the
+    * multi-round ops at the 1.2M-edge xdist scale.
+    *
+    * `perPartition` sizes the trade: label-frame fixpoints (CC, the
+    * SCC peel) want few partitions (~1M edges each — the rounds are
+    * scheduling-bound, measured 23→9 s at 1.2M edges going 32→4);
+    * gain-scan fixpoints whose per-round work is several edge-sized
+    * joins (Louvain) stay compute-bound and want real parallelism
+    * (~150k edges/partition measured best at the same scale).
+    *
+    * NOT concurrency-safe: the session conf is shared, so a query
+    * submitted on the same SparkSession while a fixpoint is inside
+    * this scope silently plans with the graph-sized partition count,
+    * and overlapping/nested calls restore a stale value. The engine's
+    * own callers run their fixpoints single-threaded per session (the
+    * bench, Verify, and every spec do); a caller that shares one
+    * session across query threads should hand the algorithm a
+    * `spark.newSession()` clone, which scopes the conf for free. */
   private def withGraphShuffle[T](spark: SparkSession, edgeCount: Long,
       perPartition: Long = 1000000L)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
@@ -193,6 +198,50 @@ object GraphAlgorithms {
     spark.conf.set(key, math.max(4, p).toString)
     try body finally spark.conf.set(key, prev)
   }
+
+  // ---- Superstep driver ----------------------------------------------
+  // Every distributed round loop below is one Pregel superstep cast as
+  // a dataflow round (Pregelix): vertex state ⋈ messages → aggregate.
+  // The call sites supply only that relational step; the two entry
+  // points own the loop, the round counter and bound, and the one
+  // materialization policy: every round's frame is an EAGER local
+  // checkpoint. Eager because some steps are planned inside a
+  // [[withGraphShuffle]] scope, and a lazy round would run only after
+  // that scope has restored the session conf. Both hold no state
+  // outside their own call, so concurrent callers (SCC's fwd/bwd
+  // futures) are safe.
+
+  /** Run `step` to a fixpoint, at most `maxRounds` rounds. `step` gets
+    * (state, frontier, round), rounds counted from 1, where the
+    * frontier is last round's changed rows (all of `init` in round 1),
+    * and returns the next FULL state with a boolean `chg` column. The
+    * change test is one `limit(1).count()` scan of the round's
+    * checkpoint, and the next frontier is a lazy filtered scan of it.
+    * Returns the last state (without `chg`) and whether it converged
+    * within the bound. */
+  private def converge(init: DataFrame, maxRounds: Int)(
+      step: (DataFrame, DataFrame, Int) => DataFrame): (DataFrame, Boolean) = {
+    var state = init
+    var frontier = init
+    var converged = false
+    var round = 0
+    while (!converged && round < maxRounds) {
+      round += 1
+      val next = step(state, frontier, round).localCheckpoint(eager = true)
+      state = next.drop("chg")
+      frontier = next.where(col("chg")).drop("chg")
+      converged = frontier.limit(1).count() == 0
+    }
+    (state, converged)
+  }
+
+  /** Run exactly `rounds` rounds of `step`, which gets the previous
+    * frame and the round number (from 1). Returns the frames of rounds
+    * 0 to `rounds`, where round 0 is `init` itself. */
+  private def iterate(init: DataFrame, rounds: Int)(
+      step: (DataFrame, Int) => DataFrame): Seq[DataFrame] =
+    (1 to rounds).scanLeft(init)((prev, round) =>
+      step(prev, round).localCheckpoint(eager = true))
 
   /** Connected components over an undirected string-keyed pair list.
     * Returns (id, component) where component = min member id
@@ -296,35 +345,19 @@ object GraphAlgorithms {
         "b")
       val labels0 = und.select(col("a").as("id")).distinct()
         .withColumn("component", col("id")).cache()
-      var labels = labels0
       // delta-sourced hop (SCC minProp's r15 trick): labels only ever
       // decrease, so an unchanged neighbor's contribution is already
-      // folded in — the round join only needs edges out of last
-      // round's changed set (a lazy filtered scan of the checkpoint,
-      // no extra job; round 1 seeds it with everything)
-      var chgRows = labels
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIter) {
-        val nbrMin = und.join(chgRows.withColumnRenamed("id", "b"), "b")
-          .groupBy(col("a").as("id")).agg(min("component").as("nbr"))
-        // The chg flag rides the round's checkpoint (SCC minProp's
-        // trick): the convergence test is a scan of materialized
-        // partitions, not a THIRD V-sized join re-shuffling `next`
-        // against the previous labels (r15 opt, guide §2.4 — the old
-        // shape paid join+exchange per round purely to ask "anything
-        // changed?"; the answer is already in the row being built).
-        val newLbl = least(col("old"), coalesce(col("nbr"), col("old")))
-        val next = labels.withColumnRenamed("component", "old")
-          .join(nbrMin, Seq("id"), "left")
-          .select(col("id"), newLbl.as("component"),
-            (newLbl =!= col("old")).as("chg"))
-          .localCheckpoint(eager = true) // truncate the iterative lineage
-        val changed = next.where(col("chg")).limit(1).count()
-        labels = next.select("id", "component")
-        chgRows = next.where(col("chg")).select("id", "component")
-        converged = changed == 0
-        i += 1
+      // folded in — the round join only needs edges out of the
+      // frontier
+      val (labels, converged) = converge(labels0, maxIter) {
+        (labels, chg, _) =>
+          val nbrMin = und.join(chg.withColumnRenamed("id", "b"), "b")
+            .groupBy(col("a").as("id")).agg(min("component").as("nbr"))
+          val newLbl = least(col("old"), coalesce(col("nbr"), col("old")))
+          labels.withColumnRenamed("component", "old")
+            .join(nbrMin, Seq("id"), "left")
+            .select(col("id"), newLbl.as("component"),
+              (newLbl =!= col("old")).as("chg"))
       }
       labels0.unpersist()
       und.unpersist()
@@ -367,27 +400,6 @@ object GraphAlgorithms {
     out
   }
 
-  /** Integer-scaled PageRank twin of [[pageRank]] — DataFrame-native
-    * and bit-exact deterministic, the cross-engine-verifiable form
-    * (same trick as the quantized betweenness pair-sum): ranks live in
-    * long micro-units (`scale` = 10^6 per unit rank), and each
-    * iteration computes
-    *
-    *   r'(v) = floor(0.15·scale) + Σ_{u→v} floor(85·r(u) / (100·deg(u)))
-    *
-    * — integer division per edge, long sums, so no float accumulation
-    * order exists on ANY engine and repeated runs (or a DuckDB replay
-    * with unrolled iterations) agree to the bit. This matches GraphX's
-    * `staticPageRank` semantics (un-normalized, rank mass ≈ V) up to
-    * the deterministic floor quantization, whose error is bounded by
-    * deg·iterations micro-units. Each iteration is one equi-join on
-    * the fixed-width vertex key + one partial-agg'd sum — O(E) work,
-    * checkpoint-truncated lineage; the production float path for big
-    * graphs stays [[pageRank]] (GraphX, EdgePartition2D).
-    *
-    * Returns (id, rank_ppm) with rank in parts-per-million of unit
-    * rank. Vertices with no in-edges hold the bare reset mass.
-    */
   /** Integer-exact eigenvector centrality (GDS `gds.eigenvector`
     * capability parity): fixed-iteration power method over the
     * undirected pair graph with per-round max-normalization —
@@ -409,10 +421,9 @@ object GraphAlgorithms {
     * computes y·scale — exact only while deg_max·scale² < 2⁶³, i.e.
     * hub degree below ~9.2·10⁶ at the default scale. Rather than
     * trusting the caller, each round guards the multiply in-plan
-    * (codegen'd CASE + raise_error — no driver action, preserving the
-    * single-action execution profile): a hub beyond the bound fails
-    * loudly naming the remedy (lower `scale`) instead of silently
-    * wrapping. */
+    * (codegen'd CASE + raise_error — no extra driver action): a hub
+    * beyond the bound fails loudly naming the remedy (lower `scale`)
+    * instead of silently wrapping. */
   def eigenvectorDF(edges: DataFrame, src: String, dst: String,
       iterations: Int = 8, scale: Long = 1000000L): DataFrame = {
     val e = edges.select(col(src).cast("string").as("a"),
@@ -426,38 +437,48 @@ object GraphAlgorithms {
       e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
         .distinct(), "b")
     val verts = und.select(col("a").as("id")).distinct()
-    // Unlike the fixpoint algorithms (CC/SCC/k-core), the power
-    // method reads NOTHING on the driver between rounds, so no round
-    // needs an EAGER barrier. Each round's neighbor-sum frame is
-    // LAZILY checkpointed: y is consumed twice (the 1-row max
-    // broadcast and the main path), so the lazy checkpoint both
-    // truncates the logical plan per round (two consumers of an
-    // un-truncated y would double the embedded subplan every round —
-    // exponential by round 8) and computes the round's shuffle once.
-    // Measured latency-neutral vs eager checkpoints at sf0.1 (1.90 vs
-    // 1.91 s — the round's shuffle dominates either way); kept for
-    // the single-action execution profile and the linear plan.
-    var x = verts.select(col("id"), lit(scale).as("val"))
-    var k = 0
-    while (k < iterations) {
+    val cap = Long.MaxValue / scale
+    // y is read twice in a round (the 1-row max broadcast and the main
+    // path) from one plan, so the round's shuffle is computed once.
+    // The round's eager checkpoint measured latency-neutral against a
+    // lazy one at sf0.1 (1.90 vs 1.91 s — the shuffle dominates).
+    val xs = iterate(verts.select(col("id"), lit(scale).as("val")),
+        iterations) { (x, _) =>
       val y = und.join(x.select(col("id").as("b"), col("val")), "b")
         .groupBy(col("a").as("id")).agg(sum("val").as("val"))
-        .localCheckpoint(eager = false)
-      val m = y.agg(max("val").as("m"))
-      val cap = Long.MaxValue / scale
-      x = y.crossJoin(broadcast(m))
+      y.crossJoin(broadcast(y.agg(max("val").as("m"))))
         .select(col("id"), expr(
           s"CASE WHEN val > ${cap}L THEN raise_error(concat(" +
             s"'eigenvectorDF: neighbor sum ', val, ' overflows the " +
             s"val*$scale renormalization (hub degree above " +
             s"${cap / scale} at scale=$scale); call with a smaller " +
             s"scale')) ELSE val * ${scale}L div m END").as("val"))
-      k += 1
     }
-    verts.join(x, Seq("id"), "left")
+    verts.join(xs.last, Seq("id"), "left")
       .select(col("id"), coalesce(col("val"), lit(0L)).as("eig_q"))
   }
 
+  /** Integer-scaled PageRank twin of [[pageRank]] — DataFrame-native
+    * and bit-exact deterministic, the cross-engine-verifiable form
+    * (same trick as the quantized betweenness pair-sum): ranks live in
+    * long micro-units (`scale` = 10^6 per unit rank), and each
+    * iteration computes
+    *
+    *   r'(v) = floor(0.15·scale) + Σ_{u→v} floor(85·r(u) / (100·deg(u)))
+    *
+    * — integer division per edge, long sums, so no float accumulation
+    * order exists on ANY engine and repeated runs (or a DuckDB replay
+    * with unrolled iterations) agree to the bit. This matches GraphX's
+    * `staticPageRank` semantics (un-normalized, rank mass ≈ V) up to
+    * the deterministic floor quantization, whose error is bounded by
+    * deg·iterations micro-units. Each iteration is one equi-join on
+    * the fixed-width vertex key + one partial-agg'd sum — O(E) work,
+    * checkpoint-truncated lineage; the production float path for big
+    * graphs stays [[pageRank]] (GraphX, EdgePartition2D).
+    *
+    * Returns (id, rank_ppm) with rank in parts-per-million of unit
+    * rank. Vertices with no in-edges hold the bare reset mass.
+    */
   def pageRankIntDF(edges: DataFrame, src: String, dst: String,
       iterations: Int = 10, directed: Boolean = true,
       scale: Long = 1000000L, localThreshold: Long = 1000000L,
@@ -565,21 +586,17 @@ object GraphAlgorithms {
       // once so each round's merge join exchanges and sorts only the
       // round's contrib aggregate, never this side
       val vm = partitionedCheckpoint(mask, "id")
-      var rank = vm.select(col("id"), (col("_seed") * scale).as("r"))
-      var i = 0
-      while (i < iterations) {
+      iterate(vm.select(col("id"), (col("_seed") * scale).as("r")),
+          iterations) { (rank, _) =>
         val contrib = eP
           .join(rank.select(col("id").as("a"), col("r")), "a")
           .groupBy(col("b").as("id"))
           .agg(sum(expr(if (hasW) "(r * 85 * w) div (100 * deg)"
             else "(r * 85) div (100 * deg)")).as("in_mass"))
-        rank = vm.join(contrib, Seq("id"), "left")
+        vm.join(contrib, Seq("id"), "left")
           .select(col("id"),
             (col("_seed") * reset + coalesce(col("in_mass"), lit(0L))).as("r"))
-          .localCheckpoint(eager = true)
-        i += 1
-      }
-      rank.select(col("id"), col("r").as("rank_ppm"))
+      }.last.select(col("id"), col("r").as("rank_ppm"))
     }
   }
 
@@ -635,25 +652,19 @@ object GraphAlgorithms {
     val dimsDf = spark.range(dims).toDF("dim")
     val h = pmod(call_udf("graft_hex60",
       concat(col("id"), lit(":"), col("dim").cast("string"))), lit(4))
-    var ek = verts.crossJoin(broadcast(dimsDf))
+    val e0 = verts.crossJoin(broadcast(dimsDf))
       .select(col("id"), col("dim"),
         when(h === 0, lit(scale)).when(h === 1, lit(-scale))
           .otherwise(lit(0L)).as("val"))
       .localCheckpoint(eager = true)
-    var acc: DataFrame = null
-    var k = 0
-    while (k < iterations) {
-      ek = undDeg
+    iterate(e0, iterations) { (ek, _) =>
+      undDeg
         .join(ek.select(col("id").as("b"), col("dim"), col("val")), "b")
         .groupBy(col("a").as("id"), col("dim"), col("deg"))
         .agg(sum("val").as("s"))
         .select(col("id"), col("dim"), expr("s div deg").as("val"))
-        .localCheckpoint(eager = true)
-      acc = if (acc == null) ek else acc.unionByName(ek)
-      k += 1
-    }
-    if (acc == null) ek
-    else acc.groupBy("id", "dim").agg(sum("val").as("val"))
+    }.tail.reduce(_ unionByName _)
+      .groupBy("id", "dim").agg(sum("val").as("val"))
   }
 
   /** DataFrame-native BFS / unweighted single-source shortest path
@@ -732,21 +743,18 @@ object GraphAlgorithms {
       import spark.implicits._
       return spark.createDataset(dist.toSeq).toDF("id", "distance")
     }
-    var visited = sources
+    val seeds = sources
       .select(col(sources.columns.head).cast("string").as("id")).distinct()
       .withColumn("distance", lit(0))
       .localCheckpoint(eager = true)
-    var frontier = visited
-    var depth = 0
-    while (depth < maxDepth && frontier.limit(1).count() > 0) {
-      depth += 1
+    // the state is the visited set; the newly reached layer is `chg`
+    val (visited, _) = converge(seeds, maxDepth) { (visited, frontier, depth) =>
       val next = und.join(frontier.withColumnRenamed("id", "a"), "a")
         .select(col("b").as("id")).distinct()
         .join(visited, Seq("id"), "left_anti")
         .withColumn("distance", lit(depth))
-        .localCheckpoint(eager = true)
-      visited = visited.unionByName(next).localCheckpoint(eager = true)
-      frontier = next
+      visited.withColumn("chg", lit(false))
+        .unionByName(next.withColumn("chg", lit(true)))
     }
     und.unpersist()
     visited
@@ -758,8 +766,9 @@ object GraphAlgorithms {
     * from `sources` (sources at dist 0).
     *
     * Bellman-Ford relaxation with convergence early-exit: each round
-    * is one equi-join (current distances ⨝ edges, shuffled on the
-    * fixed-width vertex id) + a min-aggregate — no priority queue,
+    * is one equi-join (last round's improved distances ⨝ edges,
+    * shuffled on the fixed-width vertex id) + a min-aggregate — no
+    * priority queue,
     * which is the right trade distributed: a global PQ serializes on
     * the driver, while whole-frontier relaxation is embarrassingly
     * parallel and settles in (shortest-path hop diameter) rounds.
@@ -829,24 +838,24 @@ object GraphAlgorithms {
       import spark.implicits._
       return spark.createDataset(distM.toSeq).toDF("id", "dist")
     }
-    var dist = sources
+    val seeds = sources
       .select(col(sources.columns.head).cast("string").as("id")).distinct()
       .withColumn("dist", lit(0L))
       .localCheckpoint(eager = true)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      i += 1
-      val relaxed = und.join(dist.withColumnRenamed("id", "a"), "a")
-        .select(col("b").as("id"), (col("dist") + col("w")).as("dist"))
-        .unionByName(dist)
-        .groupBy("id").agg(min("dist").as("dist"))
-        .localCheckpoint(eager = true)
-      converged = relaxed.as("n")
-        .join(dist.as("o"), col("n.id") === col("o.id"), "left")
-        .where(col("o.dist").isNull || col("n.dist") < col("o.dist"))
-        .limit(1).count() == 0
-      dist = relaxed
+    // Relax only out of last round's changed rows: an unchanged
+    // vertex's relaxations were already folded in the round before, so
+    // round i still settles the min over paths of ≤ i edges — exact
+    // under maxIter truncation too. `old` (null for a newly reached
+    // vertex) carries the previous distance through the same
+    // aggregate, so the change flag needs no re-join.
+    val (dist, _) = converge(seeds, maxIter) { (dist, frontier, _) =>
+      und.join(frontier.withColumnRenamed("id", "a"), "a")
+        .select(col("b").as("id"), (col("dist") + col("w")).as("dist"),
+          lit(null).cast("long").as("old"))
+        .unionByName(dist.withColumn("old", col("dist")))
+        .groupBy("id").agg(min("dist").as("dist"), min("old").as("old"))
+        .select(col("id"), col("dist"),
+          (col("old").isNull || col("dist") < col("old")).as("chg"))
     }
     und.unpersist()
     dist
@@ -1031,36 +1040,6 @@ object GraphAlgorithms {
     out
   }
 
-  /** Louvain community detection (GDS `gds.louvain` parity),
-    * DataFrame-native and fully deterministic.
-    *
-    * Standard two-phase structure: (1) local moving — each round every
-    * vertex evaluates the modularity gain of joining each neighbor
-    * community and takes the best strictly-positive move; (2) graph
-    * contraction — communities become super-nodes (inter-community
-    * weights summed, intra-community weight kept as self-loop mass)
-    * and phase 1 repeats on the smaller graph, up to `maxPasses`
-    * levels.
-    *
-    * Determinism and scale choices:
-    *   - Gain comparison is INTEGER-scaled: argmax over
-    *     `2m·k_{v,c} − k_v·Σtot_c` (longs) — no float accumulation
-    *     order can flip a decision, so repeated runs agree exactly
-    *     (products stay in-range up to ~2^31 total edge weight; far
-    *     beyond any LSH-bounded pair graph).
-    *   - Ties break on the smaller community label; rounds alternate
-    *     move DIRECTION in community-label order (even rounds admit
-    *     only moves to smaller labels, odd rounds to larger), so the
-    *     synchronous-update swap oscillation cannot fire — the
-    *     deterministic variant of the usual random-subset guard.
-    *   - Each round is two joins + two aggregates on fixed-width
-    *     (vertex, community) keys; `localCheckpoint` truncates the
-    *     iterative lineage. Work per round is O(E); passes shrink the
-    *     graph geometrically.
-    *
-    * Returns (id, community), community = min ORIGINAL member id —
-    * the same stable labeling as [[connectedComponentsDF]].
-    */
   /** Driver-local replay of [[louvainDF]]'s exact move schedule over a
     * collected (x < y, w) edge list. Returns None when no move ever
     * improved modularity (the caller emits the every-vertex-its-own
@@ -1167,6 +1146,36 @@ object GraphAlgorithms {
     }
   }
 
+  /** Louvain community detection (GDS `gds.louvain` parity),
+    * DataFrame-native and fully deterministic.
+    *
+    * Standard two-phase structure: (1) local moving — each round every
+    * vertex evaluates the modularity gain of joining each neighbor
+    * community and takes the best strictly-positive move; (2) graph
+    * contraction — communities become super-nodes (inter-community
+    * weights summed, intra-community weight kept as self-loop mass)
+    * and phase 1 repeats on the smaller graph, up to `maxPasses`
+    * levels.
+    *
+    * Determinism and scale choices:
+    *   - Gain comparison is INTEGER-scaled: argmax over
+    *     `2m·k_{v,c} − k_v·Σtot_c` (longs) — no float accumulation
+    *     order can flip a decision, so repeated runs agree exactly
+    *     (products stay in-range up to ~2^31 total edge weight; far
+    *     beyond any LSH-bounded pair graph).
+    *   - Ties break on the smaller community label; rounds alternate
+    *     move DIRECTION in community-label order (even rounds admit
+    *     only moves to smaller labels, odd rounds to larger), so the
+    *     synchronous-update swap oscillation cannot fire — the
+    *     deterministic variant of the usual random-subset guard.
+    *   - Each round is two joins + two aggregates on fixed-width
+    *     (vertex, community) keys; `localCheckpoint` truncates the
+    *     iterative lineage. Work per round is O(E); passes shrink the
+    *     graph geometrically.
+    *
+    * Returns (id, community), community = min ORIGINAL member id —
+    * the same stable labeling as [[connectedComponentsDF]].
+    */
   def louvainDF(pairs: DataFrame, src: String, dst: String,
       maxPasses: Int = 3, maxRounds: Int = 8,
       broadcastVertsMax: Long = 4000000L,
@@ -1257,8 +1266,7 @@ object GraphAlgorithms {
       // eager per-pass repartition+sort of the 2|E|-row frame buys
       // almost nothing downstream — the r11 "graph-sized shuffle
       // widths lose here" conclusion extends to recorded-layout
-      // checkpoints. REVERTED to the bare cache; plan dump of one
-      // gain-scan round committed as plans/r16/xdist_louvain_round.txt.
+      // checkpoints. REVERTED to the bare cache.
       val und = edges.select(col("x").as("n"), col("y").as("m"), col("w"))
         .unionByName(edges.select(col("y").as("n"), col("x").as("m"), col("w")))
         .cache()
@@ -1468,21 +1476,6 @@ object GraphAlgorithms {
     }
   }
 
-  /** Betweenness centrality (GDS `gds.betweenness` parity), sampled
-    * Brandes, DataFrame-native. `sources` is the pivot set as a
-    * DataFrame (first column) — the distributed-seed shape; exact
-    * betweenness = pass every vertex. Forward phase: one multi-source
-    * BFS keyed (source, vertex) accumulating σ (shortest-path counts,
-    * exact longs) layer by layer — one equi-join + partial-agg per
-    * layer, all sources advance together. Backward phase: dependency
-    * accumulation δ from the deepest layer up, one join per layer.
-    * σ stays integral; δ is rational so the final score is a double,
-    * rounded to `scale` decimals for run-stable output.
-    *
-    * Returns (id, betweenness) — raw ordered-pair dependency sums
-    * (GDS convention; undirected symmetric pairs are counted twice,
-    * callers sampling k of n sources scale by n/k).
-    */
   /** Multi-source BFS with shortest-path counting — the Brandes
     * forward phase, exposed because the exact pair-sum betweenness
     * formulation (see `d_dup_betweenness`) and any σ-weighted path
@@ -1561,29 +1554,41 @@ object GraphAlgorithms {
         return spark.createDataset(rows.result()).toDF("s", "v", "dist", "sigma")
       }
     }
-    var visited = sources
+    val seeds = sources
       .select(col(sources.columns.head).cast("string").as("s")).distinct()
       .select(col("s"), col("s").as("v"), lit(0).as("dist"),
         lit(1L).as("sigma"))
       .localCheckpoint(eager = true)
-    var frontier = visited
-    var depth = 0
-    while (depth < maxDepth && frontier.limit(1).count() > 0) {
-      depth += 1
+    // shortestPathsDF's shape: the visited set is the state, the newly
+    // reached layer is `chg`
+    val (visited, _) = converge(seeds, maxDepth) { (visited, frontier, depth) =>
       val next = und.join(frontier.withColumnRenamed("v", "a"), "a")
         .groupBy(col("s"), col("b").as("v"))
         .agg(sum("sigma").as("sigma"))
         .join(visited.select("s", "v"), Seq("s", "v"), "left_anti")
-        .withColumn("dist", lit(depth))
-        .select("s", "v", "dist", "sigma")
-        .localCheckpoint(eager = true)
-      visited = visited.unionByName(next).localCheckpoint(eager = true)
-      frontier = next
+        .select(col("s"), col("v"), lit(depth).as("dist"), col("sigma"))
+      visited.withColumn("chg", lit(false))
+        .unionByName(next.withColumn("chg", lit(true)))
     }
     und.unpersist()
     visited
   }
 
+  /** Betweenness centrality (GDS `gds.betweenness` parity), sampled
+    * Brandes, DataFrame-native. `sources` is the pivot set as a
+    * DataFrame (first column) — the distributed-seed shape; exact
+    * betweenness = pass every vertex. Forward phase: one multi-source
+    * BFS keyed (source, vertex) accumulating σ (shortest-path counts,
+    * exact longs) layer by layer — one equi-join + partial-agg per
+    * layer, all sources advance together. Backward phase: dependency
+    * accumulation δ from the deepest layer up, one join per layer.
+    * σ stays integral; δ is rational so the final score is a double,
+    * rounded to `scale` decimals for run-stable output.
+    *
+    * Returns (id, betweenness) — raw ordered-pair dependency sums
+    * (GDS convention; undirected symmetric pairs are counted twice,
+    * callers sampling k of n sources scale by n/k).
+    */
   def betweennessDF(edges: DataFrame, src: String, dst: String,
       sources: DataFrame, maxDepth: Int = 30, scale: Int = 6,
       localThreshold: Long = 1000000L): DataFrame = {
@@ -1664,10 +1669,11 @@ object GraphAlgorithms {
     // backward: δ accumulation from the deepest layer down. delta
     // carries (s, v, delta); vertices at the deepest layer have δ=0.
     val maxDist = visited.agg(max("dist")).head.getInt(0)
-    var delta = visited.select(col("s"), col("v"), lit(0.0).as("delta"))
+    val delta0 = visited.select(col("s"), col("v"), lit(0.0).as("delta"))
       .localCheckpoint(eager = true)
-    var d = maxDist
-    while (d > 0) {
+    // round r folds layer d = maxDist − r + 1 into its predecessors
+    val delta = iterate(delta0, maxDist) { (delta, r) =>
+      val d = maxDist - r + 1
       val lower = visited.where(col("dist") === d)
         .join(delta, Seq("s", "v"))
         .select(col("s"), col("v").as("b"), col("sigma").as("sig_w"),
@@ -1681,12 +1687,10 @@ object GraphAlgorithms {
         .groupBy(col("s"), col("a").as("v"))
         .agg(sum(col("sigma").cast("double") / col("sig_w") *
           (lit(1.0) + col("del_w"))).as("add"))
-      delta = delta.join(contrib, Seq("s", "v"), "left")
+      delta.join(contrib, Seq("s", "v"), "left")
         .select(col("s"), col("v"),
           (col("delta") + coalesce(col("add"), lit(0.0))).as("delta"))
-        .localCheckpoint(eager = true)
-      d -= 1
-    }
+    }.last
     val out = delta.where(col("s") =!= col("v"))
       .groupBy(col("v").as("id"))
       .agg(round(sum("delta"), scale).as("betweenness"))
@@ -1695,7 +1699,6 @@ object GraphAlgorithms {
     out
   }
 
-  /** Label propagation communities (GDS parity; k iterations). */
   /** Per-vertex degree over an undirected pair list (GDS degree
     * centrality parity): distinct neighbors, self-loops dropped. One
     * symmetrize + one fixed-width-key groupBy — the cheapest
@@ -1883,34 +1886,27 @@ object GraphAlgorithms {
     val und = sizedCheckpoint(
       e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
         .distinct(), "a")
-    var cur = sources
+    val start = sources
       .select(col(sources.columns.head).cast("string").as("walk"))
       .distinct()
       .select(col("walk"), col("walk").as("node"), lit(0).as("step"))
-    var acc = cur
-    for (k <- 1 to steps) {
-      // argmin by (hash, neighbor) as a map-side-combining aggregate:
-      // min over struct<h, b> orders field-by-field, so it selects
-      // exactly the row a (h, b)-ordered rank-1 window would — minus
-      // the per-walk sort and with partial aggregation before the
-      // shuffle (a walk's candidates combine within each map task).
-      // Lazily checkpointed per step (eigenvectorDF's trick): each
-      // step is consumed by the next join AND the final union, and an
-      // un-truncated plan would embed every prior step's subplan
-      // twice over — quadratic plan growth the optimizer then chews
-      // on; the lazy form truncates the logical plan with no extra
-      // job.
-      cur = cur.join(und, cur("node") === und("a"))
+    // argmin by (hash, neighbor) as a map-side-combining aggregate:
+    // min over struct<h, b> orders field-by-field, so it selects
+    // exactly the row a (h, b)-ordered rank-1 window would — minus the
+    // per-walk sort and with partial aggregation before the shuffle (a
+    // walk's candidates combine within each map task). Each step is
+    // consumed by the next join AND the final union; the per-step
+    // checkpoint keeps the union's plan from embedding every prior
+    // step's subplan.
+    iterate(start, steps) { (cur, k) =>
+      cur.join(und, cur("node") === und("a"))
         .select(col("walk"), struct(
           md5(concat_ws("|", col("walk"), lit(k), col("node"), col("b")))
             .as("h"),
           col("b")).as("hb"))
         .groupBy("walk").agg(min("hb").as("hb"))
         .select(col("walk"), col("hb.b").as("node"), lit(k).as("step"))
-        .localCheckpoint(eager = false)
-      acc = acc.unionByName(cur)
-    }
-    acc.select(col("walk"), col("step"), col("node"))
+    }.reduce(_ unionByName _).select(col("walk"), col("step"), col("node"))
   }
 
   /** Walk-context node embeddings — the walk-based member of the GDS
@@ -1934,11 +1930,9 @@ object GraphAlgorithms {
       sources: DataFrame, steps: Int = 4, window: Int = 2,
       dims: Int = 16): DataFrame = {
     graft.functions.NativeFunctions.register(edges.sparkSession)
-    // lazily checkpointed: the self-join consumes the walk frame
-    // twice; un-truncated, each side would embed the full steps-deep
-    // walk subplan
+    // the walk frame is a union of per-step checkpoints, so both sides
+    // of the self-join read materialized partitions
     val w = hashWalkDF(edges, src, dst, sources, steps)
-      .localCheckpoint(eager = false)
     w.as("x").join(w.as("y"), col("x.walk") === col("y.walk") &&
         col("x.step") =!= col("y.step") &&
         abs(col("x.step") - col("y.step")) <= window)
@@ -2093,30 +2087,24 @@ object GraphAlgorithms {
     // done SERIALLY by the caller: the helper toggles a session conf,
     // and the fwd/bwd fixpoints run as concurrent futures)
     def minProp(eP: DataFrame, verts: DataFrame): DataFrame = {
-      val tProp = System.nanoTime()
       // label init stays LAZY (r16): `verts` is already a checkpoint
       // (or a cheap projection of one), and round 1 scans this frame
       // exactly once per orientation — an eager copy here paid two
-      // V-sized materializations per outer round for nothing
-      var lbl = verts.withColumn("lbl", col("id"))
+      // V-sized materializations per outer round for nothing.
       // DELTA-SOURCED edge hop (r15 opt, guide §2.3): labels only ever
       // DECREASE, so an unchanged source's contribution is already
       // folded into its neighbors' labels — the hop only needs edges
-      // OUT OF last round's changed set. `chg` is a lazy filtered
-      // scan of the round checkpoint (no extra job, no extra frame);
-      // on a long-diameter tail (the 10M tier's condensation chain
-      // beside millions of already-converged cycles) the late rounds'
-      // join+aggregate shrink from V-sized to frontier-sized. A
-      // heavier variant (broadcast frontier + delta pointer-doubling
-      // with trigger-set bookkeeping) was built and MEASURED WORSE
-      // same-window (xdist_scc 22.4 → 31.4 s at 1.2M edges: ~5 extra
-      // driver jobs per round outweigh the avoided exchanges at
-      // in-memory frame sizes), so the doubling below stays full.
-      var chg = lbl // rows whose label changed last round (all, at start)
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIter) {
-        val tRound = System.nanoTime()
+      // OUT OF the frontier; on a long-diameter tail (the 10M tier's
+      // condensation chain beside millions of already-converged
+      // cycles) the late rounds' join+aggregate shrink from V-sized to
+      // frontier-sized. A heavier variant (broadcast frontier + delta
+      // pointer-doubling with trigger-set bookkeeping) was built and
+      // MEASURED WORSE same-window (xdist_scc 22.4 → 31.4 s at 1.2M
+      // edges: ~5 extra driver jobs per round outweigh the avoided
+      // exchanges at in-memory frame sizes), so the doubling below
+      // stays full.
+      val (lbl, converged) = converge(verts.withColumn("lbl", col("id")),
+          maxIter) { (lbl, chg, _) =>
         val nbrMin = eP
           .join(chg.select(col("id").as("a"), col("lbl").as("albl")), "a")
           .groupBy(col("b").as("id")).agg(min("albl").as("nbr"))
@@ -2128,29 +2116,15 @@ object GraphAlgorithms {
           .localCheckpoint(eager = true)
         // lbl(v) ← min(lbl(v), lbl(lbl(v))): lbl(v) reaches v and
         // lbl(lbl(v)) reaches lbl(v), so the composed hop is a real
-        // reachability — labels cross 2^i hops after i rounds. The
-        // chg flag rides the checkpoint (louvainDF's trick), so the
-        // convergence test is a scan of materialized partitions, not
-        // a re-join against the previous round.
+        // reachability — labels cross 2^i hops after i rounds
         val dbl = least(col("lbl"), coalesce(col("_plbl"), col("lbl")))
-        val next = hop
+        hop
           .join(hop.select(col("id").as("_p"), col("lbl").as("_plbl")),
             col("lbl") === col("_p"), "left")
-          .select(col("id"), dbl.as("lbl"),
-            (dbl =!= col("old")).as("chg"))
-          .localCheckpoint(eager = true)
-        val changed = next.where(col("chg")).limit(1).count()
-        lbl = next.select("id", "lbl")
-        chg = next.where(col("chg")).select(col("id"), col("lbl"))
-        converged = changed == 0
-        i += 1
-        System.err.println(f"[scc] minProp round $i: " +
-          f"${(System.nanoTime() - tRound) / 1e9}%.1f s")
+          .select(col("id"), dbl.as("lbl"), (dbl =!= col("old")).as("chg"))
       }
       if (!converged) throw new IllegalStateException(
         s"scc min-label propagation did not converge in $maxIter rounds")
-      System.err.println(f"[scc] minProp: $i rounds in " +
-        f"${(System.nanoTime() - tProp) / 1e9}%.1f s")
       lbl
     }
     var alive = verts0
@@ -2163,7 +2137,6 @@ object GraphAlgorithms {
       // sources/sinks; anything deeper is the propagation's job.
       var trimming = true
       var trimRounds = 0
-      val tTrim = System.nanoTime()
       while (trimming && trimRounds < 3) {
         // single-shuffle degree test: present as source AND as sink
         val keep = e
@@ -2209,8 +2182,6 @@ object GraphAlgorithms {
         }
         trimRounds += 1
       }
-      System.err.println(f"[scc] round $round trim: $trimRounds passes " +
-        f"in ${(System.nanoTime() - tTrim) / 1e9}%.1f s")
       if (alive.limit(1).count() > 0) {
         // fwd and bwd are independent fixpoints over the same edges —
         // run them as concurrent job streams: the rounds are
@@ -2225,17 +2196,13 @@ object GraphAlgorithms {
           // scopes a session conf — see minProp's contract), then run
           // the two fixpoints as concurrent job streams: each round
           // exchanges only its label frame (guide §2.4)
-          val tPart = System.nanoTime()
           val eF = partitionedCheckpoint(e, "a")
           val eB = partitionedCheckpoint(
             e.select(col("b").as("a"), col("a").as("b")), "a")
-          System.err.println(f"[scc] round $round edge partition: " +
-            f"${(System.nanoTime() - tPart) / 1e9}%.1f s")
           val f = Future(minProp(eF, alive))
           val g = Future(minProp(eB, alive))
           (Await.result(f, Duration.Inf), Await.result(g, Duration.Inf))
         }
-        val tPeel = System.nanoTime()
         val both = fwd.join(bwd.withColumnRenamed("lbl", "blbl"), "id")
           .localCheckpoint(eager = true)
         val scc = both.where(col("lbl") === col("blbl"))
@@ -2256,16 +2223,9 @@ object GraphAlgorithms {
           .select("a", "b")
           .join(alive.select(col("id").as("a")), Seq("a"), "left_semi")
           .localCheckpoint(eager = true)
-        System.err.println(f"[scc] round $round peel+drop: " +
-          f"${(System.nanoTime() - tPeel) / 1e9}%.1f s")
       }
       round += 1
     }
-    // scale-shape evidence for off-gate runs (the 10M-edge bench
-    // tier's round-count claim reads from here): outer peel rounds
-    // stay O(1) on trim+pair-drop-compressible condensations
-    System.err.println(
-      s"[scc] distributed peel finished: $round outer rounds, $nE edges")
     if (alive.limit(1).count() > 0) throw new IllegalStateException(
       s"stronglyConnectedComponentsDF did not peel all SCCs in $maxIter " +
         "rounds; raise maxIter (trim + pair-class dropping compress " +
@@ -2283,28 +2243,5 @@ object GraphAlgorithms {
           col("sid").as("_c")), "component")
         .select(col("sid").as("id"), col("_c").as("component"))
     }
-  }
-
-  def labelPropagation(pairs: DataFrame, src: String, dst: String,
-      iterations: Int = 5): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val vids = vertexIds(pairs, src, dst).cache()
-    val edgeDf = pairs
-      .join(vids.withColumnRenamed("id", src).withColumnRenamed("vid", "svid"), src)
-      .join(vids.withColumnRenamed("id", dst).withColumnRenamed("vid", "dvid"), dst)
-      .select("svid", "dvid")
-      .cache()
-    val p = graphParallelism(edgeDf.count(), spark)
-    val edgeRdd = edgeDf.rdd.coalesce(p)
-      .map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val graph = XGraph.fromEdges(edgeRdd, ())
-    val labels = org.apache.spark.graphx.lib.LabelPropagation
-      .run(graph, iterations).vertices.toDF("vid", "label")
-    val out = labels.join(vids, "vid").select(col("id"), col("label"))
-      .localCheckpoint(eager = true) // see connectedComponents: vids not recompute-stable
-    vids.unpersist()
-    edgeDf.unpersist()
-    out
   }
 }

@@ -37,6 +37,12 @@ class GraphAlgorithmsSpec extends AnyFunSuite {
     assert(viaLocal == viaGraphX)
     assert(viaLoop == viaGraphX)
     assert(viaLocal("t") == "p", "chain must fully converge")
+    // the diameter-4 chain needs 4 label rounds: a 2-round bound must
+    // fail loudly, never return split components
+    val ex = intercept[IllegalStateException](GraphAlgorithms
+      .connectedComponentsDF(pairs, "d1", "d2", maxIter = 2,
+        localThreshold = 0))
+    assert(ex.getMessage.contains("maxIter"), ex.getMessage)
   }
 
   test("pagerank: sinks rank below hubs, ranks deterministic") {
@@ -50,12 +56,6 @@ class GraphAlgorithmsSpec extends AnyFunSuite {
     val again = GraphAlgorithms.pageRank(edges, "src", "dst")
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(pr == again)
-  }
-
-  test("label propagation assigns every vertex a community") {
-    val pairs = Seq(("a", "b"), ("c", "d")).toDF("d1", "d2")
-    val lp = GraphAlgorithms.labelPropagation(pairs, "d1", "d2").collect()
-    assert(lp.length == 4)
   }
 
   test("triangle counts: golden K4 + wedge + duplicate/reversed edges") {
@@ -202,7 +202,10 @@ class GraphAlgorithmsSpec extends AnyFunSuite {
       df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     def toI(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    for (dir <- Seq(false, true); maxIter <- Seq(1, 64)) {
+    // maxIter 2 and 3 truncate while the 3-hop a→c→d→b path is still
+    // overtaking the 1-hop a→b edge: the frontier-sourced relaxation
+    // must match the full-relaxation replay round by round
+    for (dir <- Seq(false, true); maxIter <- Seq(1, 2, 3, 64)) {
       val local = toL(GraphAlgorithms.weightedShortestPathsDF(
         edges, "s", "t", "w", Seq("a"), maxIter = maxIter, directed = dir))
       val dist = toL(GraphAlgorithms.weightedShortestPathsDF(
@@ -835,6 +838,60 @@ class GraphAlgorithmsSpec extends AnyFunSuite {
     val sizes = local.groupBy(_._2).map(_._2.size).toSeq
     assert(sizes.length == 40 && sizes.forall(_ == 6),
       "every six-cycle is its own SCC despite the links")
+  }
+
+  test("orderedVertexDict: vid rank == global sort rank when AQE " +
+    "coalesces the sort's shuffle") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
+      AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.functions._
+    // The SCC peel's dense ids rest on zipWithIndex over the sorted
+    // frame's partitions yielding global sort ranks, also when AQE
+    // merges adjacent range partitions. A session clone scopes the
+    // conf: 64 range partitions, width-skewed ids (one row in ten is
+    // ~7× wider, so partition byte sizes differ) and a small advisory
+    // size make AQE coalesce them into several uneven reads.
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "true")
+    s.conf.set("spark.sql.shuffle.partitions", "64")
+    s.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst",
+      "false")
+    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8k")
+    s.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+      "1k")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    s.listenerManager.register(
+      new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          plans.add(qe.executedPlan)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      })
+    val n = 20000
+    val verts = s.range(n).select(
+      when(col("id") % 10 =!= 0, format_string("a%06d", col("id")))
+        .otherwise(format_string("z%047d", col("id"))).as("id"))
+    val dict = GraphAlgorithms.orderedVertexDict(verts)
+    def reads(p: SparkPlan): Seq[AQEShuffleReadExec] = p match {
+      case a: AdaptiveSparkPlanExec => reads(a.executedPlan)
+      case q: QueryStageExec => reads(q.plan)
+      case r: AQEShuffleReadExec => r +: r.children.flatMap(reads)
+      case o => o.children.flatMap(reads)
+    }
+    // listener events arrive asynchronously
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    def coalesced = plans.toArray(Array.empty[SparkPlan]).toSeq
+      .flatMap(reads).filter(_.hasCoalescedPartition)
+    while (coalesced.isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(100)
+    assert(coalesced.exists(r => r.partitionSpecs.length > 1 &&
+      r.partitionSpecs.length < 64),
+      "AQE must have coalesced the sort's 64 range partitions into " +
+        "several reads")
+    val bySid = dict.collect().map(r => r.getString(0) -> r.getLong(1))
+      .sortBy(_._1)(GraphAlgorithms.utf8Ordering)
+    assert(bySid.length == n)
+    assert(bySid.map(_._2).toSeq == (0L until n.toLong))
   }
 
   test("weighted integer pagerank: weights steer mass; w≡1 ≡ unweighted; " +
