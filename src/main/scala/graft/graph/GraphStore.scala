@@ -136,63 +136,72 @@ object GraphStore {
           "later apply was half-committed; refold the store", e)
     }
 
-  /** Read ONLY the buckets a key frame hashes to — the index-probe
-    * read: at scale this is a handful of bucket files, not the
-    * table. */
-  private def stateForKeys(spark: SparkSession, tdir: String,
-      keyRows: DataFrame, keys: Seq[String],
-      manifest: Option[Map[Int, Int]] = None,
-      meta: Option[StoreMeta] = None): DataFrame = {
-    // callers that already read the table meta pass it down — probe
-    // sits on the traversal hot path, where every avoided small-file
-    // round-trip matters on a remote store
-    val m0 = meta.getOrElse(tableMeta(spark, tdir))
-    val bucketKeys = m0.keys.get
-    // hashing anchors with the WRONG key would probe the wrong
-    // buckets and silently MISS rows — fail loudly instead
-    require(keys == bucketKeys,
-      s"$tdir is bucketed by (${bucketKeys.mkString(",")}); a probe " +
+  // hashing anchors with the WRONG key would probe the wrong buckets
+  // and silently MISS rows — fail loudly instead
+  private def requireBucketKeys(tdir: String, meta: StoreMeta,
+      keys: Seq[String]): Unit =
+    require(keys == meta.keys.get,
+      s"$tdir is bucketed by (${meta.keys.get.mkString(",")}); a probe " +
         s"keyed (${keys.mkString(",")}) would miss rows")
-    val m = manifest.getOrElse(latestManifest(spark, tdir))
+
+  /** The buckets of manifest `m` a keyed read must open, from the
+    * (bucket → anchor key-tuple xxhash64s) its anchors aim at. Without
+    * blooms that is every aimed-at bucket. With them the read is
+    * BLOOM-GATED (the miss-skipping read): each bucket carries at most
+    * bloomProbeCap + 1 hashes (driver transfer stays ≤ width × cap
+    * longs; a bucket aimed at by more anchors than the cap is read
+    * untested, since a frontier that dense hits it with near-certainty
+    * anyway), and a bucket whose `_bloom` sidecar rejects every anchor
+    * aimed at it is definitely-miss: skipped with zero data I/O (one
+    * small sidecar read instead of the bucket file). A false positive
+    * just reads the bucket; the key filter keeps the answer exact, so
+    * the gate can only save I/O, never change a result. Sidecars
+    * resolve at the bucket's MANIFEST-pinned version (immutable,
+    * vacuumed with it); a missing one (pre-bloom version) degrades to
+    * a read. */
+  private def openBuckets(spark: SparkSession, tdir: String,
+      m: Map[Int, Int], meta: StoreMeta,
+      perBucket: Seq[(Int, Seq[Long])]): Set[Int] = meta.bloomBits match {
+    case None => perBucket.map(_._1).toSet
+    case Some(_) =>
+      val (testable, overCap) =
+        perBucket.partition(_._2.size <= EventStreams.bloomProbeCap)
+      EventStreams.bloomGate(spark, tdir, m, testable) ++ overCap.map(_._1)
+  }
+
+  /** Read ONLY the buckets a (release-sized) key frame hashes to — the
+    * apply path's index read: at scale a handful of bucket files, not
+    * the table. The bucket set is one distinct-collect job over the
+    * frame (≤ width ints, never the keys); [[probe]] hashes its
+    * probe-sized anchors on the driver instead. */
+  private def stateForKeys(spark: SparkSession, tdir: String,
+      keyRows: DataFrame, keys: Seq[String]): DataFrame = {
+    val meta = tableMeta(spark, tdir)
+    requireBucketKeys(tdir, meta, keys)
+    val m = latestManifest(spark, tdir)
     // hash WIDTH comes from the manifest, not the meta: a manifest
     // always carries every bucket id of its layout, so a read pinned
     // to it hashes with the exact width it was written under —
     // readers stay consistent THROUGH a rebucket (and across a
     // crashed one); the meta width only seeds new layouts
-    val hit: Set[Int] = m0.bloomBits match {
+    val perBucket: Seq[(Int, Seq[Long])] = meta.bloomBits match {
       case None =>
         keyRows
           .select(EventStreams.bucketCol(keys, m.size).as("_b"))
-          .distinct().collect().map(_.getInt(0)).toSet
+          .distinct().collect().map(r => (r.getInt(0), Seq.empty[Long]))
+          .toSeq
       case Some(_) =>
-        // BLOOM-GATED probe (the miss-skipping read): the collect
-        // also carries each anchor's key-tuple xxhash64 — aggregated
-        // per bucket and CAPPED at bloomProbeCap hashes (driver
-        // transfer stays ≤ width × cap longs; a bucket aimed at by
-        // more anchors than the cap is read untested, since a
-        // frontier that dense hits it with near-certainty anyway) —
-        // and a hit bucket whose `_bloom` sidecar rejects every
-        // anchor aimed at it is definitely-miss: skipped with zero
-        // data I/O (one small sidecar read instead of the bucket
-        // file). A false positive just reads the bucket; the
-        // left-semi join keeps the answer exact, so the gate can only
-        // save I/O, never change a result. Sidecars resolve at the
-        // bucket's MANIFEST-pinned version (immutable, vacuumed with
-        // it); a missing one (pre-bloom version) degrades to a read.
         import org.apache.spark.sql.functions.{collect_set, slice, sort_array, xxhash64}
-        val cap = EventStreams.bloomProbeCap
-        val perBucket = keyRows
+        keyRows
           .select(EventStreams.bucketCol(keys, m.size).as("_b"),
             xxhash64(keys.map(col): _*).as("_h"))
           .groupBy(col("_b"))
-          .agg(slice(sort_array(collect_set(col("_h"))), 1, cap + 1)
-            .as("_hs"))
+          .agg(slice(sort_array(collect_set(col("_h"))), 1,
+            EventStreams.bloomProbeCap + 1).as("_hs"))
           .collect()
-          .map(r => (r.getInt(0), r.getSeq[Long](1)))
-        val (testable, overCap) = perBucket.partition(_._2.size <= cap)
-        EventStreams.bloomGate(spark, tdir, m, testable.toSeq) ++
-          overCap.map(_._1)
+          .map(r => (r.getInt(0), r.getSeq[Long](1))).toSeq
     }
+    val hit = openBuckets(spark, tdir, m, meta, perBucket)
     EventStreams.stateAt(spark, tdir,
       m.filter { case (k, _) => hit(k) },
       Some(tableSchema(spark, tdir)))
@@ -777,32 +786,80 @@ object GraphStore {
     * Like [[read]], pinned to the newest release marker — or, with
     * `asOf = Some(marker)`, to a retained historical marker (the
     * anchored form of [[readAt]]: "run this traversal as release k
-    * saw the graph"). `keyRows` is collected to a bucket set — it
-    * must be probe-sized (an anchor list), not a table. */
+    * saw the graph").
+    *
+    * `keyRows` is collected to the driver once — it must be
+    * probe-sized (an anchor list), not a table; a local frame (a
+    * `Seq.toDF`) collects with no job. Each key column is cast to the
+    * table's STORED type first (an int anchor against a long column
+    * hashes as the long the writer hashed, instead of missing its
+    * bucket), and the deduplicated anchors are hashed on the driver
+    * ([[EventStreams.localBuckets]]). The returned frame is one scan
+    * of the hit buckets filtered by the anchor values (an IN-list), so
+    * building it runs no Spark job and collecting it runs one. Anchors
+    * with a NULL key part, or a value the stored type cannot hold,
+    * match nothing (equi-join semantics). */
   def probe(spark: SparkSession, dir: String, table: String,
       keyRows: DataFrame, keys: Seq[String],
-      asOf: Option[Int] = None): DataFrame = {
-    // dual-anchor routing: a probe keyed by the OPPOSITE traversal
-    // end is served from the `__rev` twin (same rows, reverse bucket
+      asOf: Option[Int] = None): DataFrame =
+    keyedRead(spark, dir, table, keyRows, keys, asOf, scanUnservable = false)
+
+  /** [[probe]]'s read, also for a `keys` no layout of `table` is
+    * bucketed by when `scanUnservable`: that read opens every live
+    * bucket of the serving version ([[probeJoin]]'s I/O class) under
+    * the same anchor filter, still with no job to build it. This is
+    * the anchored expansion's per-orientation read
+    * ([[Motif.varPathAnchored]]); without `scanUnservable` an
+    * unservable key fails loudly, as [[probe]] promises. */
+  private[graph] def keyedRead(spark: SparkSession, dir: String,
+      table: String, keyRows: DataFrame, keys: Seq[String],
+      asOf: Option[Int], scanUnservable: Boolean): DataFrame = {
+    // dual-anchor routing: a read keyed by the OPPOSITE traversal end
+    // is served from the `__rev` twin (same rows, reverse bucket
     // layout) when the store keeps one — both directions of an
-    // anchored traversal become bucket-pruned reads. No twin, wrong
-    // key → the loud layout failure below, as before.
-    val meta = tableMeta(spark, s"$dir/$table")
-    if (keys != meta.keys.get && !table.endsWith("__rev") &&
-        hasTwin(spark, dir, table) &&
-        tableBucketKeys(spark, s"$dir/${table}__rev") == keys)
-      return probe(spark, dir, s"${table}__rev", keyRows, keys, asOf)
-    val anchors = keyRows.select(keys.map(col): _*)
-      .dropDuplicates(keys).localCheckpoint()
-    stateForKeys(spark, s"$dir/$table", anchors, keys,
-      Some(servingManifest(spark, dir, table, asOf)), Some(meta))
-      .join(broadcast(anchors), keys, "left_semi")
+    // anchored traversal become bucket-pruned reads
+    val meta0 = tableMeta(spark, s"$dir/$table")
+    val twin = s"${table}__rev"
+    val (t, meta) =
+      if (keys != meta0.keys.get && !table.endsWith("__rev") &&
+          hasTwin(spark, dir, table) &&
+          tableBucketKeys(spark, s"$dir/$twin") == keys)
+        (twin, tableMeta(spark, s"$dir/$twin"))
+      else (table, meta0)
+    val tdir = s"$dir/$t"
+    val pruned = keys == meta.keys.get
+    if (!scanUnservable) requireBucketKeys(tdir, meta, keys)
+    val schema = tableSchema(spark, tdir)
+    val anchors = keyRows
+      .select(keys.map(k => col(k).try_cast(schema(k).dataType).as(k)): _*)
+      .collect().toSeq.distinct.filterNot(_.anyNull)
+    val m = servingManifest(spark, dir, t, asOf)
+    val live =
+      if (!pruned) m
+      else {
+        val cap = EventStreams.bloomProbeCap
+        val keySchema = org.apache.spark.sql.types.StructType(
+          keys.map(k => schema(k).copy(nullable = true)))
+        val perBucket = EventStreams
+          .localBuckets(spark, keySchema, anchors, keys, m.size)
+          .groupMap(_._1)(_._2).toSeq
+          .map { case (b, hs) => (b, hs.distinct.sorted.take(cap + 1)) }
+        val hit = openBuckets(spark, tdir, m, meta, perBucket)
+        m.filter { case (k, _) => hit(k) }
+      }
+    // an IN-list, not a broadcast semi-join: broadcasting even a local
+    // relation runs a job, and the values are on the driver already
+    val filter = keys match {
+      case Seq(k) => col(k).isin(anchors.map(_.get(0)): _*)
+      case _ => struct(keys.map(col): _*).isin(anchors.map(r =>
+        struct(keys.indices.map(i => lit(r.get(i)).as(keys(i))): _*)): _*)
+    }
+    EventStreams.stateAt(spark, tdir, live, Some(schema)).where(filter)
   }
 
   /** True iff [[probe]] can serve `table` entered by `keys` as a
     * bucket-pruned read — by the table's own anchor or a dual-anchor
-    * twin's. Traversal planners ([[Motif.varPathAnchored]]) use this
-    * to pick probe vs the semi-join fallback per orientation. */
+    * twin's; any other key is a full read ([[probeJoin]]). */
   def probeServable(spark: SparkSession, dir: String, table: String,
       keys: Seq[String]): Boolean =
     tableBucketKeys(spark, s"$dir/$table") == keys ||
@@ -828,7 +885,7 @@ object GraphStore {
     else None
 
   /** `table`'s persisted column schema — traversal planners resolve
-    * composite far-end keys (and their types) from it. */
+    * composite far-end keys from it. */
   private[graph] def storeSchema(spark: SparkSession, dir: String,
       table: String): org.apache.spark.sql.types.StructType =
     tableSchema(spark, s"$dir/$table")
@@ -895,7 +952,7 @@ object GraphStore {
 
   /** JOIN-shaped store read: the rows of `table` whose `keys` values
     * appear in `keyFrame` — [[probe]]'s semantics with NO driver-side
-    * materialization of the key side (no eager bucket-id collect, no
+    * materialization of the key side (no anchor collect, no
     * broadcast, fully lazy), so the key frame may itself be
     * table-sized: "HAS_SEQUENCE rows for every GFE in release X" at
     * 100 TB is this call, not [[probe]]. Served as a shuffle
@@ -905,8 +962,8 @@ object GraphStore {
     * bucket-id set there is no FILE-level pruning — the right trade
     * exactly when the key frame hits most buckets anyway, which a
     * table-sized frame does; a probe-sized anchor list should keep
-    * using [[probe]], whose bounded bucket-id collect (≤ bucket
-    * count ints, never the keys) buys the file pruning.
+    * using [[probe]], whose driver-side collect of the anchors buys
+    * the file pruning.
     *
     * Unlike [[probe]], `keys` need not be the table's bucket key:
     * with every live bucket read, any key choice is exact (the

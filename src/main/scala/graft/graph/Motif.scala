@@ -66,7 +66,7 @@ object Motif {
     * follow-up vertex probe.
     *
     * `anchors`: ONE key column, probe-sized (an anchor list — probe
-    * collects its bucket ids); each hop's frontier is the previous
+    * collects it to the driver); each hop's frontier is the previous
     * hop's far-end key set, also probe-sized under anchored fan-out.
     * Hops run sequentially by construction (hop i's frontier is data
     * from hop i−1) — at scale each hop is a few bucket-file reads,
@@ -144,20 +144,17 @@ object Motif {
       .where(col("a") =!= col("b"))
     val e = (if (either) e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
       else e0).distinct()
-    varExpand(e, _ => e, checkpointFrontier = false,
-      minLen, maxLen, either, edgeDistinct)
+    varExpand(e, (_, _) => e, minLen, maxLen, either, edgeDistinct)
   }
 
   /** The ONE expansion core both [[varPath]] and [[varPathAnchored]]
     * run — the uniqueness semantics live here once, so the two
     * entrypoints' spec-pinned count equality is structural, not
     * copy-maintained. `firstEdges` seeds the length-1 frontier;
-    * `edgesFor` yields the (a, b) edge pairs incident to a frontier
-    * key set (column `k`; the whole-table closure ignores it);
-    * `checkpointFrontier` materializes each step's key set before the
-    * fan-out (the store-served path probes per key set and needs a
-    * bounded, flat frame — the in-memory path keeps its lazy lineage
-    * for Catalyst).
+    * `stepEdges(frontier, last)` yields the (a, b) edge pairs incident
+    * to the frontier's end keys (`n_end`), `last` telling whether this
+    * is the final hop (the whole-table closure ignores both; the
+    * store-served path reads the pairs for the frontier's keys).
     *
     * Trail mode's visited mark is the traversed RELATIONSHIP: the
     * canonical endpoint pair when either-direction traversal folds
@@ -167,7 +164,7 @@ object Motif {
     * (a separator-based key would silently merge distinct edges whose
     * ids contain the separator). */
   private def varExpand(firstEdges: DataFrame,
-      edgesFor: DataFrame => DataFrame, checkpointFrontier: Boolean,
+      stepEdges: (DataFrame, Boolean) => DataFrame,
       minLen: Int, maxLen: Int, either: Boolean,
       edgeDistinct: Boolean): DataFrame = {
     def ekey(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
@@ -181,10 +178,8 @@ object Motif {
       seed.as("visited"), lit(1).as("len"))
     var out = frontier
     for (l <- 2 to maxLen) {
-      val fk0 = frontier.select(col("n_end").as("k")).dropDuplicates("k")
-      val step =
-        edgesFor(if (checkpointFrontier) fk0.localCheckpoint() else fk0)
-          .select(col("a").as("_sa"), col("b").as("_sb"))
+      val step = stepEdges(frontier, l == maxLen)
+        .select(col("a").as("_sa"), col("b").as("_sb"))
       val mark =
         if (edgeDistinct) ekey(col("_sa"), col("_sb")) else col("_sb")
       frontier = frontier
@@ -205,37 +200,43 @@ object Motif {
     * served from the store without ever scanning an edge table when
     * the layout allows it. Each expansion step fetches only the edges
     * incident to the CURRENT frontier: an orientation entering a
-    * table by its persisted traversal-anchor key is a bucket-pruned
-    * [[GraphStore.probe]] (a handful of bucket files at any scale);
-    * an orientation entering by the other end falls back to
-    * [[GraphStore.probeJoin]] (lazy semi-join over the live bucket
-    * files — exact, no driver materialization, but no file pruning:
-    * the store's anchor orientation is the hot direction by design,
-    * and the fallback's cost is stated, not hidden). Uniqueness
-    * semantics, self-loop handling, output relation
+    * table by its persisted traversal-anchor key (or its dual-anchor
+    * twin's) is a bucket-pruned [[GraphStore.probe]] read (a handful
+    * of bucket files at any scale); an orientation entering by the
+    * other end reads every live bucket under the same key filter
+    * ([[GraphStore.probeJoin]]'s I/O class — exact, but no file
+    * pruning: the store's anchor orientation is the hot direction by
+    * design, and the fallback's cost is stated, not hidden).
+    * Uniqueness semantics, self-loop handling, output relation
     * (n_start, n_end, len, n_paths) and counts are EXACTLY
     * [[varPath]]'s restricted to `n_start ∈ anchors` — the store
     * serving is an I/O strategy, not a semantics change (spec-pinned).
     *
-    * `anchors`: one key column, probe-sized (each step's frontier key
-    * set is localCheckpoint'd before the fan-out, so per-step lineage
-    * stays flat and each orientation's probe sees a materialized,
-    * bounded key list). A COMPOSITE far end (HAS_FEATURE: no dst —
-    * the far node key is its attribute tuple) gets [[varPath]]'s own
-    * ':'-joined encoding on exit, and reverse entry splits the
-    * frontier key back into its typed parts, probing the dual-anchor
-    * twin when the store keeps one (single-layout stores fall back to
-    * the lazy semi-join) — so label-free variable-length expansion
-    * spans feature edges against the standing store too. Node keys
-    * are compared as strings, matching [[varPath]]'s cast; the
-    * encoding shares varPath's caveat (values must not contain ':').
+    * Job shape: each hop's frontier key list is collected to the
+    * driver once (the anchors with no job when they are a local
+    * frame; hop 2's keys come from the collected hop-1 edges, also
+    * with none), and every orientation's read is built from that list
+    * with no job. Each hop's incident edges are read once: every hop
+    * but the last is collected as distinct (a, b) pairs into a local
+    * relation, and the last hop's read stays in the returned frame. A
+    * 1..2-hop expansion therefore runs one job to build and a few to
+    * collect. `anchors`: one key column, probe-sized — each hop's key
+    * list and every non-final hop's edge pairs sit on the driver. A
+    * COMPOSITE far end (HAS_FEATURE: no dst — the far node key is its
+    * attribute tuple) gets [[varPath]]'s own ':'-joined encoding on
+    * exit, and reverse entry splits the frontier key back into its
+    * parts, read bucket-pruned from the dual-anchor twin when the
+    * store keeps one — so label-free variable-length expansion spans
+    * feature edges against the standing store too. Node keys are
+    * compared as strings, matching [[varPath]]'s cast; the encoding
+    * shares varPath's caveat (values must not contain ':').
     *
-    * `asOf = Some(marker)` pins EVERY step's read (probe and
-    * semi-join fallback alike) to one retained release marker —
-    * time-traveled expansion, equal by construction to running the
-    * same expansion over [[GraphStore.readAt]]'s tables. Layout facts
-    * (bucket keys, twins, schema) are version-independent: they are
-    * fixed at init/rebucket, and a rebucket resets the marker axis. */
+    * `asOf = Some(marker)` pins EVERY step's read (pruned and full
+    * alike) to one retained release marker — time-traveled
+    * expansion, equal by construction to running the same expansion
+    * over [[GraphStore.readAt]]'s tables. Layout facts (bucket keys,
+    * twins, schema) are version-independent: they are fixed at
+    * init/rebucket, and a rebucket resets the marker axis. */
   def varPathAnchored(spark: org.apache.spark.sql.SparkSession,
       dir: String, anchors: DataFrame, labels: Seq[String],
       minLen: Int, maxLen: Int, either: Boolean = false,
@@ -245,28 +246,22 @@ object Motif {
     require(anchors.columns.length == 1,
       s"anchors must be a single key column, got " +
         s"(${anchors.columns.mkString(",")})")
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
     // orientation plan, resolved once from the store meta/schema:
-    // (label, enter-end, far-cols) with enter-end ∈ {src, dst, far} —
-    // `far` is a COMPOSITE far end (no dst column: the far node key
-    // is the ':'-joined attribute tuple, exactly varPath(g, labels)'s
-    // encoding, so counts stay equal between the two entrypoints).
-    // An orientation is probe-served when the table's own anchor OR a
-    // dual-anchor twin matches its entering key (probe routes to the
-    // twin itself); composite reverse entry splits the frontier key
-    // back into its typed parts and probes the twin by its persisted
-    // key ORDER (bucket hashing is order-sensitive), falling back to
-    // the lazy semi-join on a single-layout store. The encoding
-    // caveat is varPath's own: node-key values must not contain ':'.
-    // every loop-invariant resolved ONCE, before the expansion: the
-    // per-label schema (one `_empty` footer read), far-key columns
-    // and types, and each orientation's routing decision (probe vs
-    // semi-join; twin key order) — an expansion step re-reading them
+    // (label, enter-end, far-cols, entering key) with enter-end ∈
+    // {src, dst, far} — `far` is a COMPOSITE far end (no dst column:
+    // the far node key is the ':'-joined attribute tuple, exactly
+    // varPath(g, labels)'s encoding, so counts stay equal between the
+    // two entrypoints). Composite reverse entry enters by the twin's
+    // persisted key ORDER when the store keeps one (bucket hashing is
+    // order-sensitive), else by the far columns, which no layout
+    // prunes. Resolved before the expansion: a step re-reading them
     // would pay O(maxLen × labels) driver round-trips to the store's
-    // small files for constants
+    // small files for constants.
     final case class Orient(lbl: String, en: String, hasDst: Boolean,
-        farCols: Seq[String],
-        farTypes: Seq[org.apache.spark.sql.types.DataType],
-        probed: Boolean, twinKeys: Option[Seq[String]])
+        farCols: Seq[String], keys: Seq[String])
     val orientations = labels.flatMap { lbl =>
       val schema = GraphStore.storeSchema(spark, dir, lbl)
       val hasDst = schema.fieldNames.contains("dst")
@@ -276,77 +271,51 @@ object Motif {
         if (either) Seq("src", if (hasDst) "dst" else "far")
         else Seq("src")
       dirs.map(en => Orient(lbl, en, hasDst, farCols,
-        farCols.map(c => schema(c).dataType),
-        probed = en != "far" &&
-          GraphStore.probeServable(spark, dir, lbl, Seq(en)),
-        twinKeys =
-          if (en != "far") None
-          else GraphStore.twinAnchorKeys(spark, dir, lbl)))
+        if (en != "far") Seq(en)
+        else GraphStore.twinAnchorKeys(spark, dir, lbl).getOrElse(farCols)))
     }
-    // distinct (a, b) edge pairs incident to a frontier key set —
-    // varPath's `e` restricted to rows entered by the frontier.
-    // The per-orientation probes run as CONCURRENT job streams (r15
-    // opt, guide §2.6): building each probe leg is eager driver work
-    // (the anchor checkpoint + the bounded bucket-id/bloom-hash
-    // collect inside GraphStore.probe), and with 2 labels × either
-    // that was 4 serial collect latencies PER STEP for jobs that are
-    // independent by construction — the union below consumes the legs
-    // lazily either way. probe mutates no session conf (unlike the
-    // fixpoints' partitionedCheckpoint), so the overlap is safe.
-    def edgesFor(frontKeys: DataFrame): DataFrame = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val legs = orientations.map { o => Future {
+    // distinct (a, b) edge pairs incident to the key list `ks` —
+    // varPath's `e` restricted to rows entered by the frontier
+    def hop(ks: Seq[String], last: Boolean): DataFrame = {
+      val front = spark.createDataFrame(ks.map(Row(_)).asJava,
+        StructType(Seq(StructField("k", StringType))))
+      val e = orientations.map { o =>
+        def read(keyRows: DataFrame) = GraphStore.keyedRead(spark, dir,
+          o.lbl, keyRows, o.keys, asOf, scanUnservable = true)
         val farExpr = concat_ws(":", o.farCols.map(col): _*)
-        if (o.en == "far") {
-          // typed-part probe for PRUNING, string equality for
-          // SEMANTICS: the frontier key splits into try_cast parts
-          // (get() tolerates short arrays, try_cast tolerates junk —
-          // a plain node id yields NULL parts that match nothing,
-          // not an ANSI error), which find the candidate bucket rows;
-          // the final semi-join on the re-encoded key keeps varPath's
-          // string-equality contract exact — a cast-normalized
-          // near-miss anchor ('X:01:…' against stored rank 1, whose
-          // encoding is 'X:1:…') must NOT match. Rows with NULL
-          // far-key parts stay unreachable by reverse entry — their
-          // ':'-encoding is ambiguous (concat_ws skips nulls), a
-          // limitation of the encoding itself, shared with varPath.
-          val parts = frontKeys.select(
-            o.farCols.zip(o.farTypes).zipWithIndex.map {
-              case ((c, dt), i) =>
-                get(split(col("k"), ":"), lit(i)).try_cast(dt).as(c)
-            }: _*)
-          val t = o.twinKeys match {
-            case Some(tk) =>
-              GraphStore.probe(spark, dir, o.lbl, parts, tk, asOf)
-            case None =>
-              GraphStore.probeJoin(spark, dir, o.lbl, parts, o.farCols,
-                asOf)
-          }
-          t.select(farExpr.as("a"), col("src").cast("string").as("b"))
-            .join(frontKeys.select(col("k").as("a")), Seq("a"), "left_semi")
-        } else {
-          val f = frontKeys.select(col("k").as(o.en))
-          val t =
-            if (o.probed)
-              GraphStore.probe(spark, dir, o.lbl, f, Seq(o.en), asOf)
-            else
-              GraphStore.probeJoin(spark, dir, o.lbl, f, Seq(o.en), asOf)
+        if (o.en == "far")
+          // typed parts for PRUNING, string equality for SEMANTICS:
+          // the frontier key splits into parts the read casts to the
+          // stored types (get() tolerates short arrays; a part the
+          // type cannot hold is NULL and matches nothing), which find
+          // the candidate rows; the filter on the re-encoded key keeps
+          // varPath's string-equality contract exact — a
+          // cast-normalized near-miss anchor ('X:01:…' against stored
+          // rank 1, whose encoding is 'X:1:…') must NOT match. Rows
+          // with NULL far-key parts stay unreachable by reverse entry
+          // — their ':'-encoding is ambiguous (concat_ws skips nulls),
+          // a limitation of the encoding itself, shared with varPath.
+          read(front.select(o.farCols.zipWithIndex.map { case (c, i) =>
+              get(split(col("k"), ":"), lit(i)).as(c) }: _*))
+            .select(farExpr.as("a"), col("src").cast("string").as("b"))
+            .where(col("a").isin(ks: _*))
+        else {
           val ex =
             if (o.en == "src") {
               if (o.hasDst) col("dst").cast("string") else farExpr
             } else col("src").cast("string")
-          t.select(col(o.en).cast("string").as("a"), ex.as("b"))
+          read(front.select(col("k").as(o.en)))
+            .select(col(o.en).cast("string").as("a"), ex.as("b"))
         }
-      } }
-      legs.map(Await.result(_, Duration.Inf)).reduce(_ unionByName _)
-        .where(col("a") =!= col("b")).distinct()
+      }.reduce(_ unionByName _).where(col("a") =!= col("b"))
+      if (last) e.distinct()
+      else spark.createDataFrame(e.collect().toSeq.distinct.asJava, e.schema)
     }
-    val a0 = anchors
-      .select(col(anchors.columns.head).cast("string").as("k"))
-      .dropDuplicates("k").localCheckpoint()
-    varExpand(edgesFor(a0), edgesFor, checkpointFrontier = true,
+    def keyList(df: DataFrame, c: String): Seq[String] =
+      df.select(col(c).cast("string")).collect().toSeq
+        .map(_.getString(0)).filter(_ != null).distinct
+    varExpand(hop(keyList(anchors, anchors.columns.head), maxLen == 1),
+      (f, last) => hop(keyList(f, "n_end"), last),
       minLen, maxLen, either, edgeDistinct)
   }
 

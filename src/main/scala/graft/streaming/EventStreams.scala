@@ -392,6 +392,23 @@ object EventStreams {
   private[graft] def bucketCol(stateKeys: Seq[String], numBuckets: Int): Column =
     pmod(hash(stateKeys.map(col): _*), lit(numBuckets))
 
+  /** [[bucketCol]] of driver-held key rows, each with its key tuple's
+    * xxhash64 (the `_bloom` sidecars' hash), in `rows` order. One
+    * projection over a local relation of `rows`, which Catalyst folds
+    * on the driver: no Spark job runs, and the writers' own hash
+    * expressions stay the only hash implementation. `schema` types the
+    * rows, and a hash depends on its input type (an int 7 and a long 7
+    * land in different buckets), so pass the stored key types. */
+  private[graft] def localBuckets(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.Row], keys: Seq[String],
+      numBuckets: Int): Seq[(Int, Long)] = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
+      .select(bucketCol(keys, numBuckets), xxhash64(keys.map(col): _*))
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+  }
+
   private[graft] def hadoopFs(spark: SparkSession, dir: String) = {
     val p = new org.apache.hadoop.fs.Path(dir)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
