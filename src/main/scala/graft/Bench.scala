@@ -109,7 +109,7 @@ object Bench {
       // Three untimed warm iterations first: nothing has warmed the
       // JVM yet at this point, and the first 35k run pays ~12-25 s of
       // JIT/codegen (that, not the plan, was the 30 s "build" outlier
-      // across rounds 4/5). Dbg telemetry (round 6) shows the
+      // across rounds 4/5). Round-6 per-iteration telemetry showed the
       // compilation tail reaches through iteration ~2 (15.5 → 9.7 →
       // 5-7.5 s steady, GC flat at <250 ms throughout), so two
       // warm-ups left the first timed run at the tail's edge.

@@ -115,18 +115,10 @@ object GraphStore {
   }
 
   private def latestManifest(spark: SparkSession, tdir: String) =
-    EventStreams.readManifest(spark,
-      s"$tdir/manifest/v${latestVersion(spark, tdir)}")
-
-  private def latestManifestFull(spark: SparkSession, tdir: String) =
     EventStreams.readManifestFull(spark,
       s"$tdir/manifest/v${latestVersion(spark, tdir)}")
 
   private def manifestAt(spark: SparkSession, tdir: String,
-      v: Int): Map[Int, Int] =
-    EventStreams.versionsOf(manifestAtFull(spark, tdir, v))
-
-  private def manifestAtFull(spark: SparkSession, tdir: String,
       v: Int): Map[Int, EventStreams.BucketFiles] =
     try EventStreams.readManifestFull(spark, s"$tdir/manifest/v$v")
     catch {
@@ -144,66 +136,19 @@ object GraphStore {
       s"$tdir is bucketed by (${meta.keys.get.mkString(",")}); a probe " +
         s"keyed (${keys.mkString(",")}) would miss rows")
 
-  /** The buckets of manifest `m` a keyed read must open, from the
-    * (bucket → anchor key-tuple xxhash64s) its anchors aim at. Without
-    * blooms that is every aimed-at bucket. With them the read is
-    * BLOOM-GATED (the miss-skipping read): each bucket carries at most
-    * bloomProbeCap + 1 hashes (driver transfer stays ≤ width × cap
-    * longs; a bucket aimed at by more anchors than the cap is read
-    * untested, since a frontier that dense hits it with near-certainty
-    * anyway), and a bucket whose `_bloom` sidecar rejects every anchor
-    * aimed at it is definitely-miss: skipped with zero data I/O (one
-    * small sidecar read instead of the bucket file). A false positive
-    * just reads the bucket; the key filter keeps the answer exact, so
-    * the gate can only save I/O, never change a result. Sidecars
-    * resolve at the bucket's MANIFEST-pinned version (immutable,
-    * vacuumed with it); a missing one (pre-bloom version) degrades to
-    * a read. */
-  private def openBuckets(spark: SparkSession, tdir: String,
-      m: Map[Int, Int], meta: StoreMeta,
-      perBucket: Seq[(Int, Seq[Long])]): Set[Int] = meta.bloomBits match {
-    case None => perBucket.map(_._1).toSet
-    case Some(_) =>
-      val (testable, overCap) =
-        perBucket.partition(_._2.size <= EventStreams.bloomProbeCap)
-      EventStreams.bloomGate(spark, tdir, m, testable) ++ overCap.map(_._1)
-  }
-
   /** Read ONLY the buckets a (release-sized) key frame hashes to — the
     * apply path's index read: at scale a handful of bucket files, not
-    * the table. The bucket set is one distinct-collect job over the
-    * frame (≤ width ints, never the keys); [[probe]] hashes its
-    * probe-sized anchors on the driver instead. */
+    * the table. The bucket set is one job over the frame
+    * ([[BucketStore.bucketsFor]], bloom-gated on a keyBlooms store);
+    * [[probe]] hashes its probe-sized anchors on the driver instead. */
   private def stateForKeys(spark: SparkSession, tdir: String,
       keyRows: DataFrame, keys: Seq[String]): DataFrame = {
     val meta = tableMeta(spark, tdir)
     requireBucketKeys(tdir, meta, keys)
     val m = latestManifest(spark, tdir)
-    // hash WIDTH comes from the manifest, not the meta: a manifest
-    // always carries every bucket id of its layout, so a read pinned
-    // to it hashes with the exact width it was written under —
-    // readers stay consistent THROUGH a rebucket (and across a
-    // crashed one); the meta width only seeds new layouts
-    val perBucket: Seq[(Int, Seq[Long])] = meta.bloomBits match {
-      case None =>
-        keyRows
-          .select(EventStreams.bucketCol(keys, m.size).as("_b"))
-          .distinct().collect().map(r => (r.getInt(0), Seq.empty[Long]))
-          .toSeq
-      case Some(_) =>
-        import org.apache.spark.sql.functions.{collect_set, slice, sort_array, xxhash64}
-        keyRows
-          .select(EventStreams.bucketCol(keys, m.size).as("_b"),
-            xxhash64(keys.map(col): _*).as("_h"))
-          .groupBy(col("_b"))
-          .agg(slice(sort_array(collect_set(col("_h"))), 1,
-            EventStreams.bloomProbeCap + 1).as("_hs"))
-          .collect()
-          .map(r => (r.getInt(0), r.getSeq[Long](1))).toSeq
-    }
-    val hit = openBuckets(spark, tdir, m, meta, perBucket)
-    EventStreams.stateAt(spark, tdir,
-      m.filter { case (k, _) => hit(k) },
+    val hit = BucketStore.bucketsFor(spark, tdir, m, keys, Right(keyRows),
+      meta.bloomBits)
+    BucketStore.stateAt(spark, tdir, m.filter { case (k, _) => hit(k) },
       Some(tableSchema(spark, tdir)))
   }
 
@@ -280,7 +225,7 @@ object GraphStore {
         "retry"
     }
     val (dirty, next) = BucketStore.rewriteDirty(spark, tdir,
-      latestManifestFull(spark, tdir), v + 1, delta, meta.keys.get, meta,
+      latestManifest(spark, tdir), v + 1, delta, meta.keys.get, meta,
       expectT)(merge)
     EventStreams.writeManifestExclusiveFull(
       spark, s"$tdir/manifest/v${v + 1}", next)
@@ -338,7 +283,8 @@ object GraphStore {
     * ([[read]]) route through it so the fallback semantics cannot
     * drift between them. */
   private def manifestFor(spark: SparkSession, dir: String,
-      table: String, pinned: Option[Map[String, Int]]): Map[Int, Int] =
+      table: String, pinned: Option[Map[String, Int]])
+      : Map[Int, EventStreams.BucketFiles] =
     pinned match {
       case Some(vs) if vs.contains(table) =>
         manifestAt(spark, s"$dir/$table", vs(table))
@@ -367,7 +313,8 @@ object GraphStore {
     * newest release marker when one exists, or to an explicit
     * historical marker (`asOf`) for time-travel reads. */
   private def servingManifest(spark: SparkSession, dir: String,
-      table: String, asOf: Option[Int] = None): Map[Int, Int] =
+      table: String, asOf: Option[Int] = None)
+      : Map[Int, EventStreams.BucketFiles] =
     manifestAt(spark, s"$dir/$table",
       servingVersion(spark, dir, table, asOf))
 
@@ -678,7 +625,7 @@ object GraphStore {
     // cross-table snapshot must come from one marker, exactly like
     // readAt's.
     val pinned = latestMarker(spark, dir)
-    def t(n: String) = EventStreams.stateAt(spark, s"$dir/$n",
+    def t(n: String) = BucketStore.stateAt(spark, s"$dir/$n",
       manifestFor(spark, dir, n, pinned),
       Some(tableSchema(spark, s"$dir/$n")))
     GraphLoad.Graph(t("GFE"), t("Sequence"), t("Feature"), t("IPD_Allele"),
@@ -727,7 +674,7 @@ object GraphStore {
     require(vs.contains(table),
       s"$dir: marker r$marker records no version for $table " +
         s"(tables: ${vs.keys.toSeq.sorted.mkString(",")})")
-    EventStreams.stateAt(spark, s"$dir/$table",
+    BucketStore.stateAt(spark, s"$dir/$table",
       manifestAt(spark, s"$dir/$table", vs(table)),
       Some(tableSchema(spark, s"$dir/$table")))
   }
@@ -761,7 +708,7 @@ object GraphStore {
   def diff(spark: SparkSession, dir: String, table: String,
       fromMarker: Int, toMarker: Int): DataFrame = {
     val tdir = s"$dir/$table"
-    def manifestOf(k: Int): Map[Int, Int] = {
+    def manifestOf(k: Int): Map[Int, EventStreams.BucketFiles] = {
       val vs = markerOrFail(spark, dir, k)
       require(vs.contains(table),
         s"$dir: marker r$k records no version for $table")
@@ -794,7 +741,7 @@ object GraphStore {
     * table's STORED type first (an int anchor against a long column
     * hashes as the long the writer hashed, instead of missing its
     * bucket), and the deduplicated anchors are hashed on the driver
-    * ([[EventStreams.localBuckets]]). The returned frame is one scan
+    * ([[BucketStore.bucketsFor]]). The returned frame is one scan
     * of the hit buckets filtered by the anchor values (an IN-list), so
     * building it runs no Spark job and collecting it runs one. Anchors
     * with a NULL key part, or a value the stored type cannot hold,
@@ -837,14 +784,10 @@ object GraphStore {
     val live =
       if (!pruned) m
       else {
-        val cap = EventStreams.bloomProbeCap
-        val keySchema = org.apache.spark.sql.types.StructType(
-          keys.map(k => schema(k).copy(nullable = true)))
-        val perBucket = EventStreams
-          .localBuckets(spark, keySchema, anchors, keys, m.size)
-          .groupMap(_._1)(_._2).toSeq
-          .map { case (b, hs) => (b, hs.distinct.sorted.take(cap + 1)) }
-        val hit = openBuckets(spark, tdir, m, meta, perBucket)
+        val hit = BucketStore.bucketsFor(spark, tdir, m, keys,
+          Left((keys.map(schema(_).dataType), anchors.map(_.toSeq.map(
+            org.apache.spark.sql.catalyst.CatalystTypeConverters
+              .convertToCatalyst)))), meta.bloomBits)
         m.filter { case (k, _) => hit(k) }
       }
     // an IN-list, not a broadcast semi-join: broadcasting even a local
@@ -854,26 +797,8 @@ object GraphStore {
       case _ => struct(keys.map(col): _*).isin(anchors.map(r =>
         struct(keys.indices.map(i => lit(r.get(i)).as(keys(i))): _*)): _*)
     }
-    EventStreams.stateAt(spark, tdir, live, Some(schema)).where(filter)
+    BucketStore.stateAt(spark, tdir, live, Some(schema)).where(filter)
   }
-
-  /** True iff [[probe]] can serve `table` entered by `keys` as a
-    * bucket-pruned read — by the table's own anchor or a dual-anchor
-    * twin's; any other key is a full read ([[probeJoin]]). */
-  def probeServable(spark: SparkSession, dir: String, table: String,
-      keys: Seq[String]): Boolean =
-    tableBucketKeys(spark, s"$dir/$table") == keys ||
-      (hasTwin(spark, dir, table) &&
-        tableBucketKeys(spark, s"$dir/${table}__rev") == keys)
-
-  /** The persisted traversal-anchor bucket key of `table` — the key
-    * [[probe]] accepts. Public so traversal planners
-    * ([[Motif.varPathAnchored]]) can choose per orientation between
-    * the bucket-pruned [[probe]] (entering by this key) and the
-    * semi-join [[probeJoin]] (entering by any other). */
-  def anchorKeys(spark: SparkSession, dir: String,
-      table: String): Seq[String] =
-    tableBucketKeys(spark, s"$dir/$table")
 
   /** The dual-anchor twin's key order, when `table` has a twin — the
     * exact Seq [[probe]] routes on (bucket hashing is order-
@@ -908,7 +833,7 @@ object GraphStore {
     // zero listStatus round-trips on a stats-carrying store; the
     // bloom bits let its literal pruning also consult the `_bloom`
     // sidecars (declarative miss-gating)
-    (tdir, manifestAtFull(spark, tdir,
+    (tdir, manifestAt(spark, tdir,
         servingVersion(spark, dir, table, asOf)),
       meta.keys.get, tableSchema(spark, tdir), meta.bloomBits)
   }
@@ -973,7 +898,7 @@ object GraphStore {
       keyFrame: DataFrame, keys: Seq[String],
       asOf: Option[Int] = None): DataFrame = {
     val tdir = s"$dir/$table"
-    val state = EventStreams.stateAt(spark, tdir,
+    val state = BucketStore.stateAt(spark, tdir,
       servingManifest(spark, dir, table, asOf),
       Some(tableSchema(spark, tdir)))
     state.join(
@@ -1056,7 +981,7 @@ object GraphStore {
         val tdir = s"$dir/$t"
         val meta = tableMeta(spark, tdir)
         val schema = tableSchema(spark, tdir)
-        val state = EventStreams.stateAt(spark, tdir,
+        val state = BucketStore.stateAt(spark, tdir,
           servingManifest(spark, dir, t), Some(schema))
         // bloom sidecars and zone stats rebuild with the layout (every
         // bucket is rewritten — this is also what restores a bloom's
@@ -1109,7 +1034,7 @@ object GraphStore {
     require(targetBucketBytes > 0, "targetBucketBytes must be positive")
     tablesOf(spark, dir).map { t =>
       val tdir = s"$dir/$t"
-      val m = manifestAtFull(spark, tdir,
+      val m = manifestAt(spark, tdir,
         servingVersion(spark, dir, t, None))
       val sizes: Seq[Long] = m.toSeq.sortBy(_._1).map {
         case (_, bf) if bf.version < 0 => 0L

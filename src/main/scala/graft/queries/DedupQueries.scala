@@ -301,7 +301,7 @@ object DedupQueries {
     // (cdcApply's store-meta rule): a resume under a different env
     // value would probe/rewrite the wrong buckets silently.
     import graft.streaming.BucketStore
-    import graft.streaming.BucketStore.StoreMeta
+    import graft.streaming.BucketStore.{StoreMeta, bucketsFor, stateAt}
     val (fs, mdir) = hadoopFs(s, s"$stateDir/A/manifest")
     val resumed = fs.exists(mdir) && fs.listStatus(mdir).nonEmpty
     val meta =
@@ -331,8 +331,9 @@ object DedupQueries {
           .select(col("doc_id").cast("string").as("doc_id"), col("text"))
           .localCheckpoint()
         val bands = bandRows(docs).localCheckpoint()
-        val aBase = readManifest(ss, s"$stateDir/A/manifest/v$id")
-        val bandBase = readManifest(ss, s"$stateDir/BANDS/manifest/v$id")
+        val aBase = readManifestFull(ss, s"$stateDir/A/manifest/v$id")
+        val bandBase =
+          readManifestFull(ss, s"$stateDir/BANDS/manifest/v$id")
         val bPrev = ss.read.schema(bSchema).parquet(s"$stateDir/B/v$id")
           .collect().map(r => r.getString(0) -> r.getString(1)).toMap
         require(bPrev.size <= cap, s"root remap exceeded $cap entries")
@@ -346,8 +347,8 @@ object DedupQueries {
             col("x.doc_id") < col("y.doc_id"))
           .select(col("x.doc_id").as("p"), col("y.doc_id").as("q"))
           .distinct().localCheckpoint()
-        val hit = bands.select(bucketCol(Seq("band", "bk"), nb).as("_b"))
-          .distinct().collect().map(_.getInt(0)).toSet
+        val hit = bucketsFor(ss, s"$stateDir/BANDS", bandBase,
+          Seq("band", "bk"), Right(bands), None)
         val bandState = stateAt(ss, s"$stateDir/BANDS",
           bandBase.filter { case (k, _) => hit(k) }, Some(bandSchema))
           .localCheckpoint()
@@ -364,8 +365,8 @@ object DedupQueries {
             "parameters admit too-wide buckets for this corpus")
         // old endpoints' write-time labels, resolved through bPrev
         val oldDocs = cross.select(col("p").as("doc_id")).distinct()
-        val aHit = oldDocs.select(bucketCol(Seq("doc_id"), nb).as("_b"))
-          .distinct().collect().map(_.getInt(0)).toSet
+        val aHit = bucketsFor(ss, s"$stateDir/A", aBase, Seq("doc_id"),
+          Right(oldDocs), None)
         val oldLbl = stateAt(ss, s"$stateDir/A",
           aBase.filter { case (k, _) => aHit(k) }, Some(aSchema))
           .join(oldDocs, Seq("doc_id"))
@@ -437,8 +438,8 @@ object DedupQueries {
             col("_r").isNotNull.as("paired"))
           .unionByName(oldDocs.select(col("doc_id"),
             lit(null).cast("string").as("lbl"), lit(true).as("paired")))
-        val aDirty = aDelta.select(bucketCol(Seq("doc_id"), nb).as("_b"))
-          .distinct().collect().map(_.getInt(0)).toSet
+        val aDirty = bucketsFor(ss, s"$stateDir/A", aBase, Seq("doc_id"),
+          Right(aDelta), None)
         val aOld = stateAt(ss, s"$stateDir/A",
           aBase.filter { case (k, _) => aDirty(k) }, Some(aSchema))
           .localCheckpoint()
@@ -456,7 +457,7 @@ object DedupQueries {
         val aWritten = BucketStore.writeVersion(ss, s"$stateDir/A",
           id.toInt + 1, aMerged, Seq("doc_id"), nb, meta, aSchema)
         writeManifest(ss, s"$stateDir/A/manifest/v${id + 1}",
-          aBase ++ aDirty.map(k => k -> aWritten(k).version))
+          versionsOf(aBase ++ aDirty.map(k => k -> aWritten(k))))
         // BANDS append (create-only on the full key; same
         // checkpointed dirty slice the probe read)
         val bandMerged = bandState
@@ -465,7 +466,7 @@ object DedupQueries {
         val bandWritten = BucketStore.writeVersion(ss, s"$stateDir/BANDS",
           id.toInt + 1, bandMerged, Seq("band", "bk"), nb, meta, bandSchema)
         writeManifest(ss, s"$stateDir/BANDS/manifest/v${id + 1}",
-          bandBase ++ hit.map(k => k -> bandWritten(k).version))
+          versionsOf(bandBase ++ hit.map(k => k -> bandWritten(k))))
         bNext.toDF("root", "canon").coalesce(1)
           .write.mode("overwrite").parquet(s"$stateDir/B/v${id + 1}")
         ()
@@ -480,7 +481,7 @@ object DedupQueries {
       fs.exists(new org.apache.hadoop.fs.Path(s"$stateDir/B/v$v"))).max
     val bFinal = s.read.schema(bSchema).parquet(s"$stateDir/B/v$vB")
     stateAt(s, s"$stateDir/A",
-      readManifest(s, s"$stateDir/A/manifest/v$vA"), Some(aSchema))
+      readManifestFull(s, s"$stateDir/A/manifest/v$vA"), Some(aSchema))
       .where(col("paired"))
       .join(broadcast(bFinal), col("lbl") === col("root"), "left")
       .select(col("doc_id"), coalesce(col("canon"), col("lbl")).as("component"))

@@ -170,8 +170,8 @@ class GraftStoreChangeSource(
 
   private def snapshotAt(id: Long): DataFrame = graphTable match {
     case Some((dir, t)) => GraphStore.tableAt(spark, dir, t, id.toInt)
-    case None => EventStreams.stateAt(spark, rawDir,
-      EventStreams.readManifest(spark, s"$rawDir/manifest/v$id"),
+    case None => graft.streaming.BucketStore.stateAt(spark, rawDir,
+      EventStreams.readManifestFull(spark, s"$rawDir/manifest/v$id"),
       Some(pinnedState))
   }
 

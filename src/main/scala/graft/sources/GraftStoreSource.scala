@@ -3,16 +3,15 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualNullSafe, EqualTo, Expression, In, InSet, Literal, Murmur3Hash}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualNullSafe, EqualTo, Expression, In, InSet, Literal}
+import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.execution.streaming.{Sink, Source}
 import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, RelationProvider, StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.SQLContext
 
-import graft.streaming.EventStreams
+import graft.streaming.{BucketStore, EventStreams}
 
 /** The versioned bucket store as a first-class Spark DATA SOURCE —
   * `spark.read.format("graftstore")` and
@@ -149,19 +148,14 @@ class GraftStoreSource extends RelationProvider with StreamSourceProvider
           // literal pruning on the same sidecars
           (sd, m, keys, schema, meta.flatMap(_.bloomBits))
       }
-    val index = new GraftStoreFileIndex(spark, tdir, manifest, bucketKeys,
-      schema, bloomBits)
     // every graftstore read arms the runtime bucket-pruning rule on
     // its session (idempotent): a BI tool's plain `spark.read.format`
     // gets join-driven pruning without ever importing a graft API
     GraftStoreSource.armRuntimePruning(spark)
-    HadoopFsRelation(
-      location = index,
-      partitionSchema = GraftStoreFileIndex.bucketPartitionSchema,
-      dataSchema = schema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat(),
-      options = parameters)(spark)
+    // the native reads' relation, with the bucket keys that arm the
+    // index's literal pruning
+    BucketStore.relation(spark, tdir, manifest, schema, bucketKeys,
+      bloomBits, parameters)
   }
 }
 
@@ -245,10 +239,11 @@ object GraftStoreSource {
   * `listFiles` is where the store's index-probe read meets Catalyst:
   * the planner hands every scan predicate down as `dataFilters`, and a
   * conjunction that pins EVERY bucket key to literals (`=`, `IN`,
-  * `<=>`) is hashed driver-side with the SAME expression the writers
-  * bucket by ([[EventStreams.bucketCol]]: murmur3(keys) mod width, the
-  * width taken from THIS manifest so the read stays correct across a
-  * rebucket) — only the hit buckets' files survive planning. Anything
+  * `<=>`) is resolved to buckets by the resolver probes use
+  * ([[BucketStore.bucketsFor]]: the writers' murmur3(keys) mod width,
+  * hashed on the driver, the width taken from THIS manifest so the
+  * read stays correct across a rebucket) — only the hit buckets' files
+  * survive planning. Anything
   * else — a miss on one key, a non-literal comparison, a cross-product
   * of IN-lists past [[GraftStoreFileIndex.MaxKeyCombos]] — falls back
   * to the full live listing, never to a wrong answer.
@@ -436,27 +431,16 @@ class GraftStoreFileIndex(
       .foldLeft(Seq(Seq.empty[Any])) { (acc, vs) =>
         for (a <- acc; v <- vs) yield a :+ v
       }
-    bloomBits match {
-      case None => Some(combos.map(bucketOf).toSet)
-      case Some(_) =>
-        // BLOOM-GATED literal pruning (declarative miss-skipping): on
-        // a keyBlooms store, a hit bucket whose `_bloom` sidecar
-        // rejects every literal combo aimed at it is definitely-miss
-        // and its files never reach the scan — `WHERE name IN (10k
-        // new keys)` against a 100 TB table opens ZERO files for the
-        // absent ones, the SQL twin of probe's miss gate. Sidecars
-        // resolve at the bucket's manifest-pinned version; a missing
-        // one degrades to a read; a false positive just scans the
-        // bucket — the engine's own filter keeps the answer exact.
-        val pairs = combos.map(c => (bucketOf(c), comboHash(c)))
-          .groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
-        // combos are MaxKeyCombos-bounded, so no per-bucket cap is
-        // needed here; the gate core is shared with probe's
-        // (EventStreams.bloomGate — one definition, the two read
-        // paths cannot skip differently on the same store)
-        Some(EventStreams.bloomGate(spark, tdir,
-          EventStreams.versionsOf(manifest), pairs))
-    }
+    // the values came out of analyzed literals, so they are already in
+    // Catalyst internal form — the resolver's driver-hashed form. On a
+    // keyBlooms store the literal pruning is BLOOM-GATED like probe's
+    // (one resolver, so the two read paths cannot skip differently):
+    // `WHERE name IN (10k new keys)` opens zero files for the absent
+    // ones; the engine's own filter keeps the answer exact.
+    val types = bucketKeys.map(k => schema(
+      schema.fieldNames.find(resolver(_, k)).getOrElse(k)).dataType)
+    Some(BucketStore.bucketsFor(spark, tdir, manifest, bucketKeys,
+      Left((types, combos)), bloomBits))
   }
 
   /** Per-column literal equality sets from the scan's conjunctive
@@ -485,31 +469,6 @@ class GraftStoreFileIndex(
     }
     filters.flatMap(one)
   }
-
-  private def keyLiterals(values: Seq[Any]): Seq[Literal] =
-    bucketKeys.zip(values).map { case (k, v) =>
-      val f = schema(schema.fieldIndex(
-        schema.fieldNames.find(resolver(_, k)).getOrElse(k)))
-      Literal(v, f.dataType)
-    }
-
-  /** The bucket one key tuple hashes to — driver-side evaluation of
-    * the exact writer expression, `pmod(murmur3(keys), width)`. The
-    * values are already in Catalyst internal form (they came out of
-    * analyzed literals), so they feed [[Murmur3Hash]] unconverted. */
-  private def bucketOf(values: Seq[Any]): Int = {
-    val h = Murmur3Hash(keyLiterals(values), 42).eval(InternalRow.empty)
-      .asInstanceOf[Int]
-    ((h % width) + width) % width
-  }
-
-  /** The sidecar-test hash of one key tuple — the same xxhash64(seed
-    * 42) the bloom builder aggregates on the write path
-    * ([[EventStreams.writeBucketBlooms]]), evaluated driver-side. */
-  private def comboHash(values: Seq[Any]): Long =
-    org.apache.spark.sql.catalyst.expressions
-      .XxHash64(keyLiterals(values), 42L)
-      .eval(InternalRow.empty).asInstanceOf[Long]
 }
 
 object GraftStoreFileIndex {
@@ -517,7 +476,7 @@ object GraftStoreFileIndex {
     * carries: the manifest bucket id a row's file lives under. */
   val BucketCol = "_graft_bucket"
 
-  private[sources] val bucketPartitionSchema: StructType =
+  private[graft] val bucketPartitionSchema: StructType =
     StructType(Seq(org.apache.spark.sql.types.StructField(
       BucketCol, org.apache.spark.sql.types.IntegerType,
       nullable = false)))

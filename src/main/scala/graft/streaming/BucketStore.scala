@@ -1,8 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, XxHash64}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.{col, collect_set, slice, sort_array, xxhash64}
+import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.sources.GraftStoreFileIndex
 import EventStreams.{BucketFiles, readSmallFile, writeSmallFile}
 
 /** The key-bucketed, manifest-versioned store layout — ONE definition
@@ -17,7 +22,12 @@ import EventStreams.{BucketFiles, readSmallFile, writeSmallFile}
   *    the version's manifest entries;
   *  - [[rewriteDirty]]: one MERGE step — the buckets a delta's keys
   *    hash to are read at the base manifest, merged, rewritten as a
-  *    new version, and every other bucket is inherited by reference.
+  *    new version, and every other bucket is inherited by reference;
+  *  - [[stateAt]] and [[relation]]: the one reader — a pinned manifest
+  *    as a relation over its recorded files, for native reads and the
+  *    `graftstore` source alike;
+  *  - [[bucketsFor]]: the one key → bucket resolver of probes, path
+  *    reads, SQL literal pruning and merges.
   *
   * What stays with each writer is what genuinely differs: how it
   * names and claims a version, and how it commits the manifest. */
@@ -157,16 +167,116 @@ object BucketStore {
       : (Int, Map[Int, BucketFiles]) = {
     val d = if (isCheckpoint(delta)) delta
       else delta.localCheckpoint(eager = false)
-    val dirty = d.select(EventStreams.bucketCol(keys, base.size).as("_b"))
-      .distinct().collect().map(_.getInt(0)).toSet
+    val dirty = bucketsFor(spark, dir, base, keys, Right(d), None)
     if (dirty.isEmpty) (0, base)
     else {
-      val state = EventStreams.stateAt(spark, dir,
-        EventStreams.versionsOf(base.filter { case (k, _) => dirty(k) }),
-        Some(schema))
+      val state = stateAt(spark, dir,
+        base.filter { case (k, _) => dirty(k) }, Some(schema))
       val written = writeVersion(spark, dir, version, merge(state, d), keys,
         base.size, meta, schema)
       (dirty.size, base ++ dirty.map(k => k -> written(k)))
+    }
+  }
+
+  // ---- the read side: one relation, one key → bucket resolver ----
+
+  /** The one relation every store read plans over: a
+    * [[HadoopFsRelation]] whose [[GraftStoreFileIndex]] serves
+    * `manifest`'s live buckets under `dir` from the files the manifest
+    * records (no bucket directory is listed; a legacy entry without
+    * file stats lists its own bucket). The bucket id is the
+    * `_graft_bucket` partition column. `bucketKeys` and `bloomBits`
+    * arm the index's literal pruning, which the `graftstore` source
+    * wants; native reads ([[stateAt]]) pass neither. */
+  private[graft] def relation(spark: SparkSession, dir: String,
+      manifest: Map[Int, BucketFiles], schema: StructType,
+      bucketKeys: Seq[String] = Nil, bloomBits: Option[Int] = None,
+      options: Map[String, String] = Map.empty): HadoopFsRelation =
+    HadoopFsRelation(
+      location = new GraftStoreFileIndex(spark, dir, manifest, bucketKeys,
+        schema, bloomBits),
+      partitionSchema = GraftStoreFileIndex.bucketPartitionSchema,
+      dataSchema = schema, bucketSpec = None,
+      fileFormat = new ParquetFileFormat(), options = options)(spark)
+
+  /** The rows of `manifest`'s live buckets — every native read, the
+    * apply's state reads included. [[relation]] without bucket keys,
+    * so neither literal pruning nor [[graft.plans.StoreBucketPruning]]
+    * fires inside a merge's joins: the caller's restriction of the
+    * manifest is the pruning, and `inputFiles` lists exactly the
+    * buckets it kept. `schema` defaults to the store's current one
+    * ([[EventStreams.storeSchema]]); older bucket files read NULL for
+    * appended columns. `_graft_bucket` is projected away. */
+  private[graft] def stateAt(spark: SparkSession, dir: String,
+      manifest: Map[Int, BucketFiles],
+      schema: Option[StructType] = None): DataFrame =
+    spark.baseRelationToDataFrame(relation(spark, dir, manifest,
+        schema.getOrElse(EventStreams.storeSchema(spark, dir))))
+      .drop(GraftStoreFileIndex.BucketCol)
+
+  /** The writers' two hashes of one key tuple, evaluated on the
+    * driver: its bucket, `pmod(murmur3(keys), width)`
+    * ([[EventStreams.bucketCol]]), and its `_bloom` sidecar hash,
+    * xxhash64(keys) ([[EventStreams.writeBucketBlooms]]), both seed
+    * 42. `tuple` holds Catalyst internal values of `types`, the STORED
+    * key types: a hash depends on its input type (an int 7 and a long
+    * 7 land in different buckets). No DataFrame, no job. */
+  private[graft] def hashKey(tuple: Seq[Any], types: Seq[DataType],
+      width: Int): (Int, Long) = {
+    val lits = tuple.zip(types).map { case (v, t) => Literal(v, t) }
+    val h = Murmur3Hash(lits, 42).eval().asInstanceOf[Int]
+    (((h % width) + width) % width,
+      XxHash64(lits, 42L).eval().asInstanceOf[Long])
+  }
+
+  /** The one key → bucket resolver: the ids of `manifest`'s buckets
+    * (its width is the manifest's size, so a read stays consistent
+    * through a rebucket) that hold the rows of some `keys` tuples,
+    * given in one of two forms:
+    *  - `Left((types, tuples))`: probe-sized tuples in the stored key
+    *    types as Catalyst internal values, hashed on the driver
+    *    ([[hashKey]]): no DataFrame, no job;
+    *  - `Right(frame)`: a frame carrying the `keys` columns, in one job
+    *    that collects at most width bucket ids.
+    *
+    * With `bloomBits` (a read that wants the keys' rows from a
+    * keyBlooms store) the set is BLOOM-GATED, the miss-skipping read:
+    * a bucket whose `_bloom` sidecar, at its manifest-pinned version,
+    * rejects every key aimed at it is definitely-miss and left out; a
+    * missing sidecar keeps the bucket, and so does a bucket aimed at
+    * by more than [[EventStreams.bloomProbeCap]] keys (read untested —
+    * a frontier that dense hits it anyway; the cap bounds the driver
+    * transfer to width × (cap + 1) hashes). A false positive only
+    * reads a bucket; the caller's key filter keeps answers exact. A
+    * merge's dirty set passes None: it must read every dirty bucket
+    * whole, empty ones included. */
+  private[graft] def bucketsFor(spark: SparkSession, dir: String,
+      manifest: Map[Int, BucketFiles], keys: Seq[String],
+      tuples: Either[(Seq[DataType], Seq[Seq[Any]]), DataFrame],
+      bloomBits: Option[Int]): Set[Int] = {
+    val width = manifest.size
+    val cap = EventStreams.bloomProbeCap
+    val gated = bloomBits.nonEmpty
+    val perBucket: Seq[(Int, Seq[Long])] = tuples match {
+      case Left((types, ts)) =>
+        ts.map(hashKey(_, types, width)).groupMap(_._1)(_._2).toSeq
+          .map { case (b, hs) => (b, hs.distinct.sorted.take(cap + 1)) }
+      case Right(frame) =>
+        val b = EventStreams.bucketCol(keys, width).as("_b")
+        val hs = slice(sort_array(collect_set(xxhash64(keys.map(col): _*))),
+          1, cap + 1)
+        (if (gated) frame.groupBy(b).agg(hs) else frame.select(b).distinct())
+          .collect().toSeq
+          .map(r => (r.getInt(0), if (gated) r.getSeq[Long](1) else Nil))
+    }
+    if (!gated) perBucket.map(_._1).toSet
+    else {
+      val (testable, overCap) = perBucket.partition(_._2.size <= cap)
+      EventStreams.parEach(testable.filter { case (b, _) =>
+          manifest.get(b).exists(_.version >= 0) }) { case (b, hs) =>
+        b -> EventStreams.bloomMightContain(spark,
+          EventStreams.bucketPath(dir, manifest(b).version, b), hs)
+      }.collect { case (b, true) => b }.toSet ++ overCap.map(_._1)
     }
   }
 }

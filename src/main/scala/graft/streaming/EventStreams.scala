@@ -392,23 +392,6 @@ object EventStreams {
   private[graft] def bucketCol(stateKeys: Seq[String], numBuckets: Int): Column =
     pmod(hash(stateKeys.map(col): _*), lit(numBuckets))
 
-  /** [[bucketCol]] of driver-held key rows, each with its key tuple's
-    * xxhash64 (the `_bloom` sidecars' hash), in `rows` order. One
-    * projection over a local relation of `rows`, which Catalyst folds
-    * on the driver: no Spark job runs, and the writers' own hash
-    * expressions stay the only hash implementation. `schema` types the
-    * rows, and a hash depends on its input type (an int 7 and a long 7
-    * land in different buckets), so pass the stored key types. */
-  private[graft] def localBuckets(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      rows: Seq[org.apache.spark.sql.Row], keys: Seq[String],
-      numBuckets: Int): Seq[(Int, Long)] = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
-      .select(bucketCol(keys, numBuckets), xxhash64(keys.map(col): _*))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-  }
-
   private[graft] def hadoopFs(spark: SparkSession, dir: String) = {
     val p = new org.apache.hadoop.fs.Path(dir)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
@@ -762,21 +745,6 @@ object EventStreams {
   private[graft] def bloomProbeCap: Int =
     sys.props.get("graft.bloom.probeCap").map(_.toInt).getOrElse(1024)
 
-  /** The shared miss-gate core (one definition for [[graft.graph
-    * .GraphStore]]'s probe and the SQL FileIndex's literal pruning —
-    * divergence here would make the two read paths skip differently
-    * on the same store): of the (bucket → anchor key hashes) aimed at
-    * `versions`-pinned buckets, return the buckets a read must OPEN —
-    * those whose `_bloom` sidecar accepts any of their hashes
-    * (missing sidecar → open). Buckets with version < 0 (empty) are
-    * dropped; callers' state reads skip them regardless. */
-  private[graft] def bloomGate(spark: SparkSession, tdir: String,
-      versions: Map[Int, Int], pairs: Seq[(Int, Seq[Long])]): Set[Int] =
-    parEach(pairs.filter { case (b, _) =>
-        versions.get(b).exists(_ >= 0) }) { case (b, hs) =>
-      b -> bloomMightContain(spark, bucketPath(tdir, versions(b), b), hs)
-    }.collect { case (b, true) => b }.toSet
-
   /** Probe-side sidecar test: can `bucketDir` possibly contain a row
     * whose key tuple xxhash64's to any of `hashes`? Missing sidecar →
     * true (no skip — pre-bloom buckets stay readable); an unparseable
@@ -980,22 +948,6 @@ object EventStreams {
         "quiesce writers and retry")
   }
 
-  private[graft] def stateAt(spark: SparkSession, stateDir: String,
-      manifest: Map[Int, Int],
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
-    val paths = manifest.toSeq.sorted.collect {
-      case (k, v) if v >= 0 => bucketPath(stateDir, v, k) }
-    // With the schema known (the apply loop knows it from initState —
-    // merge() is required to preserve it), the read skips per-batch
-    // parquet footer inference over every referenced bucket dir: at
-    // fixture scale that inference is a visible slice of the
-    // bucketed store's per-batch constant cost.
-    val rd = schema.fold(spark.read)(spark.read.schema)
-    if (paths.isEmpty) rd.parquet(s"$stateDir/_empty")
-    else rd.parquet(paths: _*)
-  }
-
   /** Read the newest committed state version of a [[cdcApply]] store —
     * the serve-side API: resolve the latest manifest, read exactly the
     * bucket files it references. */
@@ -1005,8 +957,8 @@ object EventStreams {
     // evolved store the bucket files are mixed-footer and inference
     // would serve whichever file it sampled; pre-evolution buckets
     // yield NULL for appended columns under the explicit schema
-    stateAt(spark, stateDir,
-      readManifest(spark, s"$stateDir/manifest/v$last"),
+    BucketStore.stateAt(spark, stateDir,
+      readManifestFull(spark, s"$stateDir/manifest/v$last"),
       Some(storeSchema(spark, stateDir)))
   }
 
@@ -1022,8 +974,8 @@ object EventStreams {
     * key's delete surfaces as '-' live + '+' tombstone).
     * [[graft.graph.GraphStore.diff]] is the release-marker-resolved
     * form of this same read. */
-  def cdcDiff(spark: SparkSession, stateDir: String,
-      from: Map[Int, Int], to: Map[Int, Int],
+  private[graft] def cdcDiff(spark: SparkSession, stateDir: String,
+      from: Map[Int, BucketFiles], to: Map[Int, BucketFiles],
       schema: Option[org.apache.spark.sql.types.StructType] = None)
       : DataFrame = {
     import org.apache.spark.sql.functions.lit
@@ -1034,9 +986,9 @@ object EventStreams {
     val changed =
       if (from.size != to.size) from.keySet ++ to.keySet
       else (from.keySet ++ to.keySet)
-        .filter(b => from.get(b) != to.get(b))
-    def side(m: Map[Int, Int]) = stateAt(spark, stateDir,
-      m.filter { case (b, _) => changed(b) }, schema)
+        .filter(b => from.get(b).map(_.version) != to.get(b).map(_.version))
+    def side(m: Map[Int, BucketFiles]) = BucketStore.stateAt(spark,
+      stateDir, m.filter { case (b, _) => changed(b) }, schema)
     val (f, t) = (side(from), side(to))
     t.except(f).withColumn("change", lit("+"))
       .unionByName(f.except(t).withColumn("change", lit("-")))
@@ -1051,8 +1003,8 @@ object EventStreams {
       schema: Option[org.apache.spark.sql.types.StructType] = None)
       : DataFrame =
     cdcDiff(spark, stateDir,
-      readManifest(spark, s"$stateDir/manifest/v$fromV"),
-      readManifest(spark, s"$stateDir/manifest/v$toV"),
+      readManifestFull(spark, s"$stateDir/manifest/v$fromV"),
+      readManifestFull(spark, s"$stateDir/manifest/v$toV"),
       // both sides of the diff MUST read one schema — on an evolved
       // store, footer inference could give the two sides different
       // column sets and except() would throw (or worse, misalign)

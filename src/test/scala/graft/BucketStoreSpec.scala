@@ -51,8 +51,7 @@ class BucketStoreSpec extends AnyFunSuite {
     assert(next.collect { case (k, bf) if bf.version == 1 => k }.toSet == hit)
     assert(next.filter { case (k, _) => !hit(k) } ==
       base.filter { case (k, _) => !hit(k) }, "clean buckets inherit")
-    assert(rowsOf(EventStreams.stateAt(spark, dir,
-      EventStreams.versionsOf(next), Some(schema))) ==
+    assert(rowsOf(BucketStore.stateAt(spark, dir, next, Some(schema))) ==
       (1 to 8).map(i => (i, if (i == 2) "B" else s"v$i")).toSet + ((9, "n")))
   }
 

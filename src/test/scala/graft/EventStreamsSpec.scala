@@ -1102,8 +1102,9 @@ class EventStreamsSpec extends AnyFunSuite {
     val d = EventStreams.cdcDiffVersions(spark, stateDir.toString,
       vFrom, vTo)
     // semantic: exactly the symmetric EXCEPT of the two full states
-    def full(v: Int) = EventStreams.stateAt(spark, stateDir.toString,
-      EventStreams.readManifest(spark, s"$stateDir/manifest/v$v"))
+    def full(v: Int) = graft.streaming.BucketStore.stateAt(spark,
+      stateDir.toString,
+      EventStreams.readManifestFull(spark, s"$stateDir/manifest/v$v"))
     val (f, t) = (full(vFrom), full(vTo))
     assert(LoadFixtures.rowsOf(
         d.where(col("change") === "+").drop("change"))

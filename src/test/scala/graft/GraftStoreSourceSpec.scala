@@ -152,6 +152,60 @@ class GraftStoreSourceSpec extends AnyFunSuite {
     assert(nMixed >= 1, "present literal must still read its bucket")
   }
 
+  test("probe and a sqlTable IN-list open the same bucket files: string " +
+      "dst, long accession and 4-part Feature keys; present and absent " +
+      "anchors; plain and keyBlooms stores") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.execution.datasources.FileScanRDD
+    import org.apache.spark.sql.types.StructType
+    def norm(files: Seq[String]) =
+      files.map(f => new Path(f).toUri.getPath).sorted
+    // the files the executed scan's RDD reads
+    def scanned(df: DataFrame) = norm(scanStats(df)._2.inputRDD
+      .asInstanceOf[FileScanRDD].filePartitions.flatMap(_.files)
+      .map(_.toPath.toString))
+    val fk = Seq("locus", "rank", "term", "accession")
+    for (longAcc <- Seq(false, true); blooms <- Seq(false, true)) {
+      val Seq(r1, r2, _) = LoadFixtures.policyMatrix(spark).map(r =>
+        if (!longAcc) r
+        else r.copy(_3 = r._3.withColumn("accession",
+          col("accession").cast("long"))))
+      val d = tmp(s"graftstore_same_files_${longAcc}_$blooms")
+      GraphStore.init(spark, d, GraphLoad.loadAll(spark, Seq(r1)),
+        buckets = 8, keyBlooms = blooms)
+      GraphStore.applyRelease(spark, d, r2)
+      val g = GraphStore.read(spark, d)
+      val absentAcc: Any = if (longAcc) 987654321L else "987654321"
+      val cases = Seq(
+        ("dst present", "HAS_IPD_ALLELE", Seq("dst"),
+          g.hasIpdAllele.select("dst").distinct().collect().toSeq),
+        ("dst absent", "HAS_IPD_ALLELE", Seq("dst"),
+          Seq(Row("HLA-Q*01:01"), Row("HLA-Q*02:02"))),
+        ("feature present", "Feature", fk,
+          g.feature.select(fk.map(col): _*).collect().toSeq.take(1)),
+        ("feature absent", "Feature", fk,
+          Seq(Row("HLA-Q", 99, "NOPE", absentAcc))))
+      for ((name, table, keys, anchors) <- cases) {
+        val clue = s"$name, longAcc=$longAcc, blooms=$blooms"
+        val stored = GraphStore.sqlTable(spark, d, table).schema
+        val keyFrame = spark.createDataFrame(anchors.asJava,
+          StructType(keys.map(stored(_))))
+        val probed = GraphStore.probe(spark, d, table, keyFrame, keys)
+        val sql = GraphStore.sqlTable(spark, d, table).where(
+          keys.zipWithIndex.map { case (k, i) =>
+            col(k).isin(anchors.map(_.get(i)).distinct: _*) }
+            .reduce(_ && _))
+        val files = scanned(sql)
+        assert(norm(probed.inputFiles.toSeq) == files, clue)
+        assert(name.endsWith("absent") || files.nonEmpty,
+          s"$clue: premise, present anchors open their buckets")
+        assert(LoadFixtures.rowsOf(probed) == LoadFixtures.rowsOf(sql), clue)
+      }
+    }
+  }
+
   test("non-anchor predicate reads all live buckets but pushes to " +
       "parquet; results correct") {
     val df = GraphStore.sqlTable(spark, dir, "Sequence")

@@ -621,9 +621,6 @@ class GraphStoreSpec extends AnyFunSuite {
         f.contains(s"_graft_bucket=$bA/")),
       s"reverse probe must read only twin bucket $bA: " +
         oneFiles.mkString(", "))
-    assert(GraphStore.probeServable(spark, dir, "HAS_IPD_ALLELE",
-      Seq("src")) &&
-      GraphStore.probeServable(spark, dir, "HAS_IPD_ALLELE", Seq("dst")))
     // either-direction variable-length expansion: correct vs the
     // whole-table varPath, and — the dual-anchor payoff — BOTH
     // orientations of the anchor hop are bucket-pruned probes: every
@@ -1087,8 +1084,9 @@ class GraphStoreSpec extends AnyFunSuite {
   test("driver-hashed bucket ids and bloom hashes equal bucketCol and " +
       "xxhash64 evaluated in a Spark job") {
     import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
     import org.apache.spark.sql.types._
-    import graft.streaming.EventStreams
+    import graft.streaming.{BucketStore, EventStreams}
     def schemaOf(fs: (String, DataType)*) =
       StructType(fs.map { case (n, t) => StructField(n, t) })
     val cases: Seq[(String, StructType, Seq[Row])] = Seq(
@@ -1104,15 +1102,40 @@ class GraphStoreSpec extends AnyFunSuite {
           Row(null, 2, "UTR", null), Row("HLA-B", null, "", 7L))))
     for ((name, schema, rows) <- cases; width <- Seq(1, 16, 1000)) {
       val keys = schema.fieldNames.toSeq
-      val (driverJobs, onDriver) = jobsOf(
-        EventStreams.localBuckets(spark, schema, rows, keys, width))
+      val types = schema.fields.toSeq.map(_.dataType)
+      val tuples = rows.map(_.toSeq.map(
+        CatalystTypeConverters.convertToCatalyst))
+      val manifest = (0 until width)
+        .map(_ -> EventStreams.BucketFiles(-1, None)).toMap
+      val (driverJobs, (onDriver, opened)) = jobsOf((
+        tuples.map(BucketStore.hashKey(_, types, width)),
+        BucketStore.bucketsFor(spark, "", manifest, keys,
+          Left((types, tuples)), None)))
       val inJob = spark.createDataFrame(
           spark.sparkContext.parallelize(rows, 2), schema)
         .select(EventStreams.bucketCol(keys, width),
           xxhash64(keys.map(col): _*))
         .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
       assert(onDriver == inJob, s"$name, width $width")
+      assert(opened == inJob.map(_._1).toSet, s"$name, width $width")
       assert(driverJobs == 0, s"$name: driver hashing ran $driverJobs jobs")
+    }
+    // the resolver's buckets are read through one relation over the
+    // manifest's recorded files: a whole-table read lists no bucket
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val Seq(r1, _, _) = LoadFixtures.policyMatrix(spark)
+    val dir = tmp("graphstore_read_listing")
+    GraphStore.init(spark, dir, GraphLoad.loadAll(spark, Seq(r1)),
+      buckets = 16)
+    val g = GraphStore.read(spark, dir)
+    for ((t, df) <- g.vertexTables ++ g.edgeTables) {
+      val listed = df.queryExecution.analyzed.collect {
+        case l: LogicalRelation => l.relation.asInstanceOf[HadoopFsRelation]
+          .location.asInstanceOf[graft.sources.GraftStoreFileIndex]
+          .listedBucketCount
+      }
+      assert(listed.nonEmpty && listed.forall(_ == 0),
+        s"$t: a whole-table read listed $listed bucket directories")
     }
   }
 
