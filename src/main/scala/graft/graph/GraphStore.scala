@@ -1,7 +1,10 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 import graft.streaming.{BucketStore, EventStreams}
 import graft.streaming.BucketStore.StoreMeta
 
@@ -68,10 +71,10 @@ object GraphStore {
         buckets, meta, snapshot.schema))
   }
 
-  /** A graph table's meta — always the two-line form with its bucket
-    * keys. */
-  private def tableMeta(spark: SparkSession, tdir: String): StoreMeta = {
-    val m = StoreMeta.read(spark, tdir).getOrElse(
+  /** A graph table's meta (`stored`, as [[StoreMeta.read]] found it) —
+    * always the two-line form with its bucket keys. */
+  private def tableMeta(tdir: String, stored: Option[StoreMeta]): StoreMeta = {
+    val m = stored.getOrElse(
       throw new java.io.FileNotFoundException(StoreMeta.path(tdir)))
     // pre-round-13 stores wrote a ONE-line meta (bucket count only;
     // bucketing was implicitly the full merge key) — fail with the
@@ -82,10 +85,6 @@ object GraphStore {
         "GraphStore.init from a refold (GraphLoad.loadAll)")
     m
   }
-
-  private def tableBucketKeys(spark: SparkSession,
-      tdir: String): Seq[String] =
-    tableMeta(spark, tdir).keys.get
 
   private def latestVersion(spark: SparkSession, tdir: String): Int =
     EventStreams.manifestVersions(spark, tdir).max
@@ -143,7 +142,7 @@ object GraphStore {
     * [[probe]] hashes its probe-sized anchors on the driver instead. */
   private def stateForKeys(spark: SparkSession, tdir: String,
       keyRows: DataFrame, keys: Seq[String]): DataFrame = {
-    val meta = tableMeta(spark, tdir)
+    val meta = tableMeta(tdir, StoreMeta.read(spark, tdir))
     requireBucketKeys(tdir, meta, keys)
     val m = latestManifest(spark, tdir)
     val hit = BucketStore.bucketsFor(spark, tdir, m, keys, Right(keyRows),
@@ -169,7 +168,7 @@ object GraphStore {
     // schema guard, the dirty-state read, and the zone/bloom passes
     // each re-read them before — 3-4 small round-trips per table per
     // release on the store's hottest write path)
-    val meta = tableMeta(spark, tdir)
+    val meta = tableMeta(tdir, StoreMeta.read(spark, tdir))
     val expectT = tableSchema(spark, tdir)
     // SCHEMA GUARD, before the claim (a mismatched apply must not
     // burn a version claim): the table's READ schema is fixed at init
@@ -238,8 +237,8 @@ object GraphStore {
   // leaves some tables at v+1 and others at v. The marker makes a
   // RELEASE the unit of visibility: applyRelease publishes
   // `_release/r{k}` (create-exclusive, LAST, after every table's
-  // commit) recording each table's committed version, and serving
-  // reads ([[read]]/[[probe]]) pin to the newest marker — a
+  // commit) recording each table's committed version, and every
+  // serving read pins the newest marker at call entry ([[pin]]) — a
   // half-applied release is invisible until its marker lands, and a
   // retry of the same release converges (policies are idempotent)
   // and publishes the next marker.
@@ -261,12 +260,6 @@ object GraphStore {
         l.substring(0, i) -> l.substring(i + 1).toInt
       }.toMap
 
-  /** Newest complete release: table → committed manifest version.
-    * None on a pre-marker store (serve latest manifests instead). */
-  private def latestMarker(spark: SparkSession,
-      dir: String): Option[Map[String, Int]] =
-    markerIds(spark, dir).lastOption.map(readMarker(spark, dir, _))
-
   private def writeMarker(spark: SparkSession, dir: String,
       versions: Map[String, Int]): Unit = {
     val next = markerIds(spark, dir).lastOption.fold(0)(_ + 1)
@@ -276,47 +269,75 @@ object GraphStore {
         .mkString("", "\n", "\n"))
   }
 
-  /** One table's manifest under an already-RESOLVED marker pin — the
-    * single definition of "marker → manifest, latest-manifest
-    * fallback for tables the marker does not record"; both
-    * [[servingManifest]] and the pinned multi-table readers
-    * ([[read]]) route through it so the fallback semantics cannot
-    * drift between them. */
-  private def manifestFor(spark: SparkSession, dir: String,
-      table: String, pinned: Option[Map[String, Int]])
-      : Map[Int, EventStreams.BucketFiles] =
-    pinned match {
-      case Some(vs) if vs.contains(table) =>
-        manifestAt(spark, s"$dir/$table", vs(table))
-      case _ => latestManifest(spark, s"$dir/$table")
-    }
+  /** One read's snapshot of the store: the ONE place a read resolves
+    * which release it sees. [[pin]] lists `_release` once and reads one
+    * marker — `asOf = Some(k)`'s, else the newest (none on a pre-marker
+    * store, which serves each table's latest manifest, as does a table
+    * the newest marker does not record). Every table a read touches is
+    * viewed through the pin ([[Pin.apply]]), and each view reads its
+    * meta, `__rev` twin, schema and manifest from disk at most once.
+    * A pin lives for one call: all tables of a graph read, and all
+    * hops of a path read, see one marker, so a release published
+    * mid-call cannot mix two releases in one answer. */
+  private[graft] final class Pin private[GraphStore] (
+      val spark: SparkSession, val dir: String,
+      asOf: Option[Int], marker: Option[Map[String, Int]]) {
+    private val views =
+      scala.collection.concurrent.TrieMap.empty[String, View]
 
-  /** The manifest VERSION a serving read of `table` pins to: the
-    * newest release marker's when one exists (or an explicit
-    * historical marker's, for time-travel reads), else the table's
-    * own latest — the same fallback semantics as [[manifestFor]]. */
-  private def servingVersion(spark: SparkSession, dir: String,
-      table: String, asOf: Option[Int]): Int =
-    asOf match {
-      case Some(k) =>
-        val vs = markerOrFail(spark, dir, k)
-        require(vs.contains(table),
-          s"$dir: marker r$k records no version for $table")
-        vs(table)
-      case None => latestMarker(spark, dir) match {
-        case Some(vs) if vs.contains(table) => vs(table)
-        case _ => latestVersion(spark, s"$dir/$table")
+    def apply(table: String): View =
+      views.getOrElseUpdate(table, new View(table))
+
+    final class View(val name: String) {
+      val tdir = s"$dir/$name"
+      private lazy val stored = StoreMeta.read(spark, tdir)
+      lazy val meta: StoreMeta = tableMeta(tdir, stored)
+      /** The dual-anchor twin (same rows, reverse bucket layout), when
+        * the store keeps one. */
+      lazy val twin: Option[View] =
+        if (name.endsWith("__rev")) None
+        else Some(Pin.this(s"${name}__rev")).filter(_.stored.nonEmpty)
+      lazy val schema: org.apache.spark.sql.types.StructType =
+        tableSchema(spark, tdir)
+      lazy val manifest: Map[Int, EventStreams.BucketFiles] =
+        manifestAt(spark, tdir, marker.flatMap(_.get(name)).getOrElse {
+          require(asOf.isEmpty, s"$dir: marker r${asOf.get} records no " +
+            s"version for $name (tables: " +
+            s"${marker.get.keys.toSeq.sorted.mkString(",")})")
+          latestVersion(spark, tdir)
+        })
+
+      /** Every live row of the pinned version. */
+      def state: DataFrame =
+        BucketStore.stateAt(spark, tdir, manifest, Some(schema))
+
+      /** The `graftstore` source's relation over the pinned version:
+        * the persisted bucket keys and bloom bits arm its literal
+        * pruning. The meta is read first, so a legacy one fails before
+        * any manifest read. */
+      def relation(options: Map[String, String] = Map.empty)
+          : org.apache.spark.sql.execution.datasources.HadoopFsRelation = {
+        val m = meta
+        BucketStore.relation(spark, tdir, manifest, schema, m.keys.get,
+          m.bloomBits, options)
       }
     }
+  }
 
-  /** The manifest a serving read uses for `table`: pinned to the
-    * newest release marker when one exists, or to an explicit
-    * historical marker (`asOf`) for time-travel reads. */
-  private def servingManifest(spark: SparkSession, dir: String,
-      table: String, asOf: Option[Int] = None)
-      : Map[Int, EventStreams.BucketFiles] =
-    manifestAt(spark, s"$dir/$table",
-      servingVersion(spark, dir, table, asOf))
+  /** The store at `dir` pinned to release marker `asOf` (the newest
+    * when None) — see [[Pin]]. A marker that is not on disk fails
+    * loudly, naming the retention knob. */
+  private[graft] def pin(spark: SparkSession, dir: String,
+      asOf: Option[Int]): Pin = {
+    val ids = markerIds(spark, dir)
+    asOf.foreach(k => require(ids.contains(k),
+      s"$dir: release marker r$k is not on disk (markers present: " +
+        s"${ids.mkString(",")}) — it was never published, or vacuum() " +
+        "GC'd it with its superseded manifests; raise keepVersions to " +
+        "retain a longer as-of history"))
+    new Pin(spark, dir, asOf,
+      asOf.orElse(ids.lastOption).map(readMarker(spark, dir, _)))
+  }
 
   // Merge policies and delta derivation live in [[MergePolicies]] /
   // [[ReleaseDeltas]] — ONE definition shared with
@@ -433,10 +454,6 @@ object GraphStore {
     "HAS_SEQUENCE" -> Seq("dst"),
     "HAS_FEATURE" -> Seq("locus", "rank", "term", "accession"))
 
-  private def hasTwin(spark: SparkSession, dir: String,
-      table: String): Boolean =
-    StoreMeta.read(spark, s"$dir/${table}__rev").nonEmpty
-
   /** Every table directory the store keeps — dynamic, because the
     * dual-anchor layout adds `__rev` twins (a directory is a table
     * iff it carries a store meta file). */
@@ -504,7 +521,7 @@ object GraphStore {
     // delta pipeline doesn't run once per layout (the dirty rewrite
     // sees the checkpoint and does not copy it again).
     val twins = revAnchors.map(_._1)
-      .filter(t => hasTwin(spark, dir, t)).toSet
+      .filter(t => StoreMeta.read(spark, s"$dir/${t}__rev").nonEmpty).toSet
     def applyEdge(table: String, delta: DataFrame,
         merge: (DataFrame, DataFrame) => DataFrame): Seq[Future[Unit]] =
       if (!twins(table)) Seq(apply1(table, delta, merge))
@@ -604,7 +621,8 @@ object GraphStore {
     // Publish the release marker LAST — the store-level commit point.
     // Tables this release did not apply (Submitter) carry their
     // version forward from the previous marker.
-    val carried = latestMarker(spark, dir).getOrElse(Map.empty)
+    val carried = markerIds(spark, dir).lastOption
+      .fold(Map.empty[String, Int])(readMarker(spark, dir, _))
     val versions = tablesOf(spark, dir).map { t =>
       t -> applied.get(t).map(_._2)
         .orElse(carried.get(t))
@@ -614,20 +632,16 @@ object GraphStore {
     ApplyStats(applied.map { case (t, (n, _)) => t -> n }, versions)
   }
 
-  /** The graph as of the newest COMPLETE release — reads pin to the
-    * latest release marker, so a half-applied (failed or in-flight)
-    * release is invisible until its marker commits. */
-  def read(spark: SparkSession, dir: String): GraphLoad.Graph = {
-    // Resolve the newest marker ONCE and pin every table to it —
-    // resolving per table would let an applyRelease that publishes
-    // its marker between two table reads produce a MIXED-marker
-    // graph (GFE at release k+1 joined to HAS_FEATURE at k): the
-    // cross-table snapshot must come from one marker, exactly like
-    // readAt's.
-    val pinned = latestMarker(spark, dir)
-    def t(n: String) = BucketStore.stateAt(spark, s"$dir/$n",
-      manifestFor(spark, dir, n, pinned),
-      Some(tableSchema(spark, s"$dir/$n")))
+  /** The graph as of the newest COMPLETE release — every table pinned
+    * to the newest release marker at call entry (one [[pin]]), so a
+    * half-applied (failed or in-flight) release is invisible until its
+    * marker commits, and one published mid-call cannot mix into this
+    * graph. */
+  def read(spark: SparkSession, dir: String): GraphLoad.Graph =
+    graphOf(pin(spark, dir, None))
+
+  private def graphOf(p: Pin): GraphLoad.Graph = {
+    def t(n: String) = p(n).state
     GraphLoad.Graph(t("GFE"), t("Sequence"), t("Feature"), t("IPD_Allele"),
       t("IPD_Accession"), t("Submitter"), t("HAS_IPD_ALLELE"),
       t("HAS_IPD_ACCESSION"), t("SUBMITTED"), t("HAS_SEQUENCE"),
@@ -652,42 +666,19 @@ object GraphStore {
   def markers(spark: SparkSession, dir: String): Seq[Int] =
     markerIds(spark, dir)
 
-  private def markerOrFail(spark: SparkSession, dir: String,
-      k: Int): Map[String, Int] = {
-    val ids = markerIds(spark, dir)
-    require(ids.contains(k),
-      s"$dir: release marker r$k is not on disk (markers present: " +
-        s"${ids.mkString(",")}) — it was never published, or vacuum() " +
-        "GC'd it with its superseded manifests; raise keepVersions to " +
-        "retain a longer as-of history")
-    readMarker(spark, dir, k)
-  }
-
   /** One table pinned to release marker `marker` — [[read]]'s as-of
     * form. Same I/O shape as a serving read: resolve the marker's
     * manifest, read exactly the bucket files it references (version
     * immutability makes an old state no more expensive than the
     * newest one). */
   def tableAt(spark: SparkSession, dir: String, table: String,
-      marker: Int): DataFrame = {
-    val vs = markerOrFail(spark, dir, marker)
-    require(vs.contains(table),
-      s"$dir: marker r$marker records no version for $table " +
-        s"(tables: ${vs.keys.toSeq.sorted.mkString(",")})")
-    BucketStore.stateAt(spark, s"$dir/$table",
-      manifestAt(spark, s"$dir/$table", vs(table)),
-      Some(tableSchema(spark, s"$dir/$table")))
-  }
+      marker: Int): DataFrame =
+    pin(spark, dir, Some(marker))(table).state
 
   /** The whole graph as of release marker `marker` — time travel. */
   def readAt(spark: SparkSession, dir: String,
-      marker: Int): GraphLoad.Graph = {
-    def t(n: String) = tableAt(spark, dir, n, marker)
-    GraphLoad.Graph(t("GFE"), t("Sequence"), t("Feature"), t("IPD_Allele"),
-      t("IPD_Accession"), t("Submitter"), t("HAS_IPD_ALLELE"),
-      t("HAS_IPD_ACCESSION"), t("SUBMITTED"), t("HAS_SEQUENCE"),
-      t("HAS_FEATURE"))
-  }
+      marker: Int): GraphLoad.Graph =
+    graphOf(pin(spark, dir, Some(marker)))
 
   /** CDC between two marker-pinned states of one table: the rows
     * present at `toMarker` but not `fromMarker` (`change = '+'`) and
@@ -707,15 +698,10 @@ object GraphStore {
     * reads, row equality decides the diff.) */
   def diff(spark: SparkSession, dir: String, table: String,
       fromMarker: Int, toMarker: Int): DataFrame = {
-    val tdir = s"$dir/$table"
-    def manifestOf(k: Int): Map[Int, EventStreams.BucketFiles] = {
-      val vs = markerOrFail(spark, dir, k)
-      require(vs.contains(table),
-        s"$dir: marker r$k records no version for $table")
-      manifestAt(spark, tdir, vs(table))
-    }
-    EventStreams.cdcDiff(spark, tdir, manifestOf(fromMarker),
-      manifestOf(toMarker), Some(tableSchema(spark, tdir)))
+    val from = pin(spark, dir, Some(fromMarker))(table)
+    val to = pin(spark, dir, Some(toMarker))(table)
+    EventStreams.cdcDiff(spark, to.tdir, from.manifest, to.manifest,
+      Some(to.schema))
   }
 
   /** Public index-probe read: the rows of `table` whose `keys` match
@@ -730,129 +716,99 @@ object GraphStore {
     * for HAS_IPD_ALLELE/HAS_IPD_ACCESSION/SUBMITTED, `src` for
     * HAS_FEATURE/HAS_SEQUENCE, `name`/`seq_id` for vertices/index);
     * any other key would hash to the wrong buckets and fails loudly.
-    * Like [[read]], pinned to the newest release marker — or, with
-    * `asOf = Some(marker)`, to a retained historical marker (the
-    * anchored form of [[readAt]]: "run this traversal as release k
+    * Like [[read]], pinned to the newest release marker at call entry
+    * — or, with `asOf = Some(marker)`, to a retained historical marker
+    * (the anchored form of [[readAt]]: "run this traversal as release k
     * saw the graph").
     *
     * `keyRows` is collected to the driver once — it must be
     * probe-sized (an anchor list), not a table; a local frame (a
-    * `Seq.toDF`) collects with no job. Each key column is cast to the
-    * table's STORED type first (an int anchor against a long column
-    * hashes as the long the writer hashed, instead of missing its
-    * bucket), and the deduplicated anchors are hashed on the driver
-    * ([[BucketStore.bucketsFor]]). The returned frame is one scan
-    * of the hit buckets filtered by the anchor values (an IN-list), so
-    * building it runs no Spark job and collecting it runs one. Anchors
-    * with a NULL key part, or a value the stored type cannot hold,
-    * match nothing (equi-join semantics). */
+    * `Seq.toDF`) collects with no job. Each key part is cast on the
+    * driver to the table's STORED type (an int anchor against a long
+    * column hashes as the long the writer hashed, instead of missing
+    * its bucket), and the deduplicated anchors are hashed on the
+    * driver ([[BucketStore.bucketsFor]]). The returned frame is one
+    * scan of the hit buckets filtered by the anchor values (an
+    * IN-list), so building it runs no Spark job and collecting it runs
+    * one. Anchors with a NULL key part, or a value the stored type
+    * cannot hold, match nothing (equi-join semantics). */
   def probe(spark: SparkSession, dir: String, table: String,
       keyRows: DataFrame, keys: Seq[String],
       asOf: Option[Int] = None): DataFrame =
-    keyedRead(spark, dir, table, keyRows, keys, asOf, scanUnservable = false)
+    keyedRead(pin(spark, dir, asOf), table,
+      collectKeys(keyRows.select(keys.map(col): _*)), keys,
+      scanUnservable = false)
 
-  /** [[probe]]'s read, also for a `keys` no layout of `table` is
-    * bucketed by when `scanUnservable`: that read opens every live
-    * bucket of the serving version ([[probeJoin]]'s I/O class) under
-    * the same anchor filter, still with no job to build it. This is
-    * the anchored expansion's per-orientation read
-    * ([[Motif.varPathAnchored]]); without `scanUnservable` an
+  /** A probe-sized frame on the driver: its column types and rows, the
+    * anchor form [[keyedRead]] takes. */
+  private[graph] def collectKeys(df: DataFrame): (Seq[DataType], Seq[Seq[Any]]) =
+    (df.schema.map(_.dataType), df.collect().toSeq.map(_.toSeq))
+
+  /** [[probe]]'s read under the caller's pin `p`, of driver-side
+    * `anchors` (the types of their parts, and the tuples in `keys`
+    * order); also for a `keys` no layout of `table` is bucketed by
+    * when `scanUnservable`: that read opens every live bucket of the
+    * pinned version ([[probeJoin]]'s I/O class) under the same anchor
+    * filter, still with no job to build it. This is the anchored
+    * traversals' per-hop read ([[Motif.pathAnchored]],
+    * [[Motif.varPathAnchored]]); without `scanUnservable` an
     * unservable key fails loudly, as [[probe]] promises. */
-  private[graph] def keyedRead(spark: SparkSession, dir: String,
-      table: String, keyRows: DataFrame, keys: Seq[String],
-      asOf: Option[Int], scanUnservable: Boolean): DataFrame = {
+  private[graph] def keyedRead(p: Pin, table: String,
+      anchors: (Seq[DataType], Seq[Seq[Any]]), keys: Seq[String],
+      scanUnservable: Boolean): DataFrame = {
     // dual-anchor routing: a read keyed by the OPPOSITE traversal end
     // is served from the `__rev` twin (same rows, reverse bucket
     // layout) when the store keeps one — both directions of an
     // anchored traversal become bucket-pruned reads
-    val meta0 = tableMeta(spark, s"$dir/$table")
-    val twin = s"${table}__rev"
-    val (t, meta) =
-      if (keys != meta0.keys.get && !table.endsWith("__rev") &&
-          hasTwin(spark, dir, table) &&
-          tableBucketKeys(spark, s"$dir/$twin") == keys)
-        (twin, tableMeta(spark, s"$dir/$twin"))
-      else (table, meta0)
-    val tdir = s"$dir/$t"
-    val pruned = keys == meta.keys.get
-    if (!scanUnservable) requireBucketKeys(tdir, meta, keys)
-    val schema = tableSchema(spark, tdir)
-    val anchors = keyRows
-      .select(keys.map(k => col(k).try_cast(schema(k).dataType).as(k)): _*)
-      .collect().toSeq.distinct.filterNot(_.anyNull)
-    val m = servingManifest(spark, dir, t, asOf)
+    val main = p(table)
+    val v = if (keys == main.meta.keys.get) main
+      else main.twin.filter(_.meta.keys.get == keys).getOrElse(main)
+    if (!scanUnservable) requireBucketKeys(v.tdir, v.meta, keys)
+    val stored = keys.map(v.schema(_).dataType)
+    // try_cast's expression, evaluated on the driver: a value the
+    // stored type cannot hold casts to NULL
+    val tz = Some(p.spark.conf.get("spark.sql.session.timeZone"))
+    val (types, tuples) = anchors
+    val cast = tuples.map(_.lazyZip(types).lazyZip(stored).map {
+        (x, from, to) => Cast(Literal.create(x, from), to, tz, EvalMode.TRY)
+          .eval() })
+      .distinct.filterNot(_.contains(null))
     val live =
-      if (!pruned) m
+      if (keys != v.meta.keys.get) v.manifest
       else {
-        val hit = BucketStore.bucketsFor(spark, tdir, m, keys,
-          Left((keys.map(schema(_).dataType), anchors.map(_.toSeq.map(
-            org.apache.spark.sql.catalyst.CatalystTypeConverters
-              .convertToCatalyst)))), meta.bloomBits)
-        m.filter { case (k, _) => hit(k) }
+        val hit = BucketStore.bucketsFor(p.spark, v.tdir, v.manifest, keys,
+          Left((stored, cast)), v.meta.bloomBits)
+        v.manifest.filter { case (k, _) => hit(k) }
       }
     // an IN-list, not a broadcast semi-join: broadcasting even a local
     // relation runs a job, and the values are on the driver already
+    val values = cast.map(_.lazyZip(stored)
+      .map(CatalystTypeConverters.convertToScala))
     val filter = keys match {
-      case Seq(k) => col(k).isin(anchors.map(_.get(0)): _*)
-      case _ => struct(keys.map(col): _*).isin(anchors.map(r =>
-        struct(keys.indices.map(i => lit(r.get(i)).as(keys(i))): _*)): _*)
+      case Seq(k) => col(k).isin(values.map(_.head): _*)
+      case _ => struct(keys.map(col): _*).isin(values.map(r =>
+        struct(keys.indices.map(i => lit(r(i)).as(keys(i))): _*)): _*)
     }
-    BucketStore.stateAt(spark, tdir, live, Some(schema)).where(filter)
+    BucketStore.stateAt(p.spark, v.tdir, live, Some(v.schema)).where(filter)
   }
 
-  /** The dual-anchor twin's key order, when `table` has a twin — the
-    * exact Seq [[probe]] routes on (bucket hashing is order-
-    * sensitive). None on a single-layout store. */
-  def twinAnchorKeys(spark: SparkSession, dir: String,
-      table: String): Option[Seq[String]] =
-    if (hasTwin(spark, dir, table))
-      Some(tableBucketKeys(spark, s"$dir/${table}__rev"))
-    else None
-
-  /** `table`'s persisted column schema — traversal planners resolve
-    * composite far-end keys from it. */
-  private[graph] def storeSchema(spark: SparkSession, dir: String,
-      table: String): org.apache.spark.sql.types.StructType =
-    tableSchema(spark, s"$dir/$table")
-
-  /** Everything [[graft.sources.GraftStoreSource]] needs to plan a
-    * scan of one marker-pinned table: (table dir, serving manifest,
-    * persisted bucket keys, pinned schema). The data source lives in
-    * another package but must resolve tables EXACTLY like the native
-    * reads — same marker resolution, same meta, same loud failures on
-    * vacuumed markers / legacy meta — so the resolution stays here,
-    * next to the readers it must agree with. */
-  private[graft] def relationSpec(spark: SparkSession, dir: String,
-      table: String, asOf: Option[Int] = None)
-      : (String, Map[Int, EventStreams.BucketFiles], Seq[String],
-         org.apache.spark.sql.types.StructType, Option[Int]) = {
-    val tdir = s"$dir/$table"
-    val meta = tableMeta(spark, tdir)
-    // FULL manifest (version + persisted file stats): the FileIndex
-    // answers sizeInBytes and file enumeration from the stats with
-    // zero listStatus round-trips on a stats-carrying store; the
-    // bloom bits let its literal pruning also consult the `_bloom`
-    // sidecars (declarative miss-gating)
-    (tdir, manifestAt(spark, tdir,
-        servingVersion(spark, dir, table, asOf)),
-      meta.keys.get, tableSchema(spark, tdir), meta.bloomBits)
-  }
-
-  /** One store table as a plain DataFrame through the registered data
-    * source — equal to [[tableAt]]/[[read]]'s table, but planned via
+  /** One store table as a plain DataFrame over the `graftstore`
+    * relation — equal to [[tableAt]]/[[read]]'s table, but planned via
     * [[graft.sources.GraftStoreFileIndex]], so an equality/IN filter
     * on the table's bucket key prunes the scan to the hit buckets at
     * planning time (the declarative [[probe]]). */
   def sqlTable(spark: SparkSession, dir: String, table: String,
-      asOf: Option[Int] = None): DataFrame = {
-    val r = spark.read.format("graftstore")
-      .option("dir", dir).option("table", table)
+      asOf: Option[Int] = None): DataFrame =
+    sqlFrame(spark, pin(spark, dir, asOf)(table))
+
+  private def sqlFrame(spark: SparkSession, v: Pin#View): DataFrame = {
+    graft.sources.GraftStoreSource.armRuntimePruning(spark)
     // `_graft_bucket` is the relation's synthesized partition column —
     // the hook runtime (join-driven) bucket pruning evaluates against;
     // dropped here so the PUBLIC schema stays the native read's (the
     // Project sits above the relation, pruning fires beneath it)
-    asOf.fold(r)(k => r.option("marker", k.toString)).load()
-      .drop("_graft_bucket")
+    spark.baseRelationToDataFrame(v.relation())
+      .drop(graft.sources.GraftStoreFileIndex.BucketCol)
   }
 
   /** Register every public table of the store as a temp view
@@ -860,18 +816,15 @@ object GraphStore {
     * `spark.sql("SELECT ... FROM GFE JOIN HAS_FEATURE ...")` runs
     * against the marker-pinned store with bucket pruning, no graft
     * API in sight. `__rev` twins are skipped (same rows as their
-    * primary, different layout — a SQL reader never wants both). */
+    * primary, different layout — a SQL reader never wants both). All
+    * views share one [[pin]] (the newest marker at entry, unless the
+    * caller names one), so an apply landing mid-loop cannot register a
+    * mixed-marker view set. */
   def createViews(spark: SparkSession, dir: String, prefix: String = "",
       asOf: Option[Int] = None): Seq[String] = {
-    // pin ALL views to ONE marker (the newest at entry, unless the
-    // caller names one): per-view resolution would let an apply
-    // landing mid-loop register a mixed-marker view set — a SQL join
-    // across the views must see one consistent release snapshot
-    val pin = asOf.orElse(markerIds(spark, dir).lastOption)
+    val p = pin(spark, dir, asOf)
     val ts = tablesOf(spark, dir).filterNot(_.endsWith("__rev"))
-    ts.foreach { t =>
-      sqlTable(spark, dir, t, pin).createOrReplaceTempView(prefix + t)
-    }
+    ts.foreach(t => sqlFrame(spark, p(t)).createOrReplaceTempView(prefix + t))
     ts.map(prefix + _)
   }
 
@@ -897,11 +850,7 @@ object GraphStore {
   def probeJoin(spark: SparkSession, dir: String, table: String,
       keyFrame: DataFrame, keys: Seq[String],
       asOf: Option[Int] = None): DataFrame = {
-    val tdir = s"$dir/$table"
-    val state = BucketStore.stateAt(spark, tdir,
-      servingManifest(spark, dir, table, asOf),
-      Some(tableSchema(spark, tdir)))
-    state.join(
+    pin(spark, dir, asOf)(table).state.join(
       keyFrame.select(keys.map(col): _*).dropDuplicates(keys),
       keys, "left_semi")
   }
@@ -976,19 +925,17 @@ object GraphStore {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
+    val p = pin(spark, dir, None)
     val rewrites = claimed.map { case (t, v) =>
       Future {
         val tdir = s"$dir/$t"
-        val meta = tableMeta(spark, tdir)
-        val schema = tableSchema(spark, tdir)
-        val state = BucketStore.stateAt(spark, tdir,
-          servingManifest(spark, dir, t), Some(schema))
+        val (meta, schema) = (p(t).meta, p(t).schema)
         // bloom sidecars and zone stats rebuild with the layout (every
         // bucket is rewritten — this is also what restores a bloom's
         // fp ratio after the per-bucket key count outgrew its width)
         EventStreams.writeManifestExclusiveFull(spark,
           s"$tdir/manifest/v${v + 1}",
-          BucketStore.writeVersion(spark, tdir, v + 1, state,
+          BucketStore.writeVersion(spark, tdir, v + 1, p(t).state,
             meta.keys.get, newBuckets, meta, schema))
         StoreMeta.write(spark, tdir, meta.copy(buckets = newBuckets))
         t -> (v + 1)
@@ -1032,10 +979,10 @@ object GraphStore {
   def layoutReport(spark: SparkSession, dir: String,
       targetBucketBytes: Long = 1L << 30): Seq[LayoutStat] = {
     require(targetBucketBytes > 0, "targetBucketBytes must be positive")
+    val p = pin(spark, dir, None)
     tablesOf(spark, dir).map { t =>
       val tdir = s"$dir/$t"
-      val m = manifestAt(spark, tdir,
-        servingVersion(spark, dir, t, None))
+      val m = p(t).manifest
       val sizes: Seq[Long] = m.toSeq.sortBy(_._1).map {
         case (_, bf) if bf.version < 0 => 0L
         case (k, bf) => bf.files match {

@@ -70,7 +70,13 @@ object Motif {
     * hop's far-end key set, also probe-sized under anchored fan-out.
     * Hops run sequentially by construction (hop i's frontier is data
     * from hop i−1) — at scale each hop is a few bucket-file reads,
-    * so the chain's cost is k × probe, not k × scan. */
+    * so the chain's cost is k × probe, not k × scan.
+    *
+    * Every hop reads under ONE pin, taken at call entry: the newest
+    * release marker then (`asOf = None`), or the retained marker
+    * `asOf = Some(k)` — "run this traversal as release k saw the
+    * graph", the anchored form of [[GraphStore.readAt]]. A release
+    * published mid-call is not seen by any hop. */
   def pathAnchored(spark: org.apache.spark.sql.SparkSession, dir: String,
       anchors: DataFrame, hops: Seq[Hop],
       asOf: Option[Int] = None): DataFrame = {
@@ -78,16 +84,14 @@ object Motif {
     require(anchors.columns.length == 1,
       s"anchors must be a single key column, got " +
         s"(${anchors.columns.mkString(",")})")
+    val p = GraphStore.pin(spark, dir, asOf)
     var acc = anchors.select(col(anchors.columns.head).as("n0"))
       .dropDuplicates("n0")
     hops.zipWithIndex.foreach { case (h, i) =>
       val enterBy = if (h.reverse) "dst" else "src"
-      val frontier = acc.select(col(s"n$i").as(enterBy))
-      // asOf threads into EVERY hop's probe: "run this traversal as
-      // release k saw the graph" is one marker pin, the anchored form
-      // of readAt — no hand-chaining of probes required
-      val t = GraphStore.probe(spark, dir, h.edge, frontier,
-        Seq(enterBy), asOf)
+      val t = GraphStore.keyedRead(p, h.edge,
+        GraphStore.collectKeys(acc.select(col(s"n$i"))), Seq(enterBy),
+        scanUnservable = false)
       val attrCols = t.columns.filterNot(c => c == "src" || c == "dst")
       val farExpr =
         if (h.reverse) col("src")
@@ -231,12 +235,12 @@ object Motif {
     * compared as strings, matching [[varPath]]'s cast; the encoding
     * shares varPath's caveat (values must not contain ':').
     *
-    * `asOf = Some(marker)` pins EVERY step's read (pruned and full
-    * alike) to one retained release marker — time-traveled
+    * Every step's read (pruned and full alike) and the orientation
+    * plan share ONE pin, taken at call entry: the newest release
+    * marker then (`asOf = None`; a release published mid-call is not
+    * seen), or the retained marker `asOf = Some(k)` — time-traveled
     * expansion, equal by construction to running the same expansion
-    * over [[GraphStore.readAt]]'s tables. Layout facts (bucket keys,
-    * twins, schema) are version-independent: they are fixed at
-    * init/rebucket, and a rebucket resets the marker axis. */
+    * over [[GraphStore.readAt]]'s tables. */
   def varPathAnchored(spark: org.apache.spark.sql.SparkSession,
       dir: String, anchors: DataFrame, labels: Seq[String],
       minLen: Int, maxLen: Int, either: Boolean = false,
@@ -247,9 +251,9 @@ object Motif {
       s"anchors must be a single key column, got " +
         s"(${anchors.columns.mkString(",")})")
     import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    // orientation plan, resolved once from the store meta/schema:
+    import org.apache.spark.sql.types.StringType
+    val p = GraphStore.pin(spark, dir, asOf)
+    // orientation plan, resolved once from the pinned meta/schema:
     // (label, enter-end, far-cols, entering key) with enter-end ∈
     // {src, dst, far} — `far` is a COMPOSITE far end (no dst column:
     // the far node key is the ':'-joined attribute tuple, exactly
@@ -257,13 +261,11 @@ object Motif {
     // two entrypoints). Composite reverse entry enters by the twin's
     // persisted key ORDER when the store keeps one (bucket hashing is
     // order-sensitive), else by the far columns, which no layout
-    // prunes. Resolved before the expansion: a step re-reading them
-    // would pay O(maxLen × labels) driver round-trips to the store's
-    // small files for constants.
+    // prunes.
     final case class Orient(lbl: String, en: String, hasDst: Boolean,
         farCols: Seq[String], keys: Seq[String])
     val orientations = labels.flatMap { lbl =>
-      val schema = GraphStore.storeSchema(spark, dir, lbl)
+      val schema = p(lbl).schema
       val hasDst = schema.fieldNames.contains("dst")
       val farCols = schema.fieldNames.toSeq
         .filterNot(c => c == "src" || c == "dst")
@@ -272,22 +274,22 @@ object Motif {
         else Seq("src")
       dirs.map(en => Orient(lbl, en, hasDst, farCols,
         if (en != "far") Seq(en)
-        else GraphStore.twinAnchorKeys(spark, dir, lbl).getOrElse(farCols)))
+        else p(lbl).twin.fold(farCols)(_.meta.keys.get)))
     }
     // distinct (a, b) edge pairs incident to the key list `ks` —
     // varPath's `e` restricted to rows entered by the frontier
     def hop(ks: Seq[String], last: Boolean): DataFrame = {
-      val front = spark.createDataFrame(ks.map(Row(_)).asJava,
-        StructType(Seq(StructField("k", StringType))))
       val e = orientations.map { o =>
-        def read(keyRows: DataFrame) = GraphStore.keyedRead(spark, dir,
-          o.lbl, keyRows, o.keys, asOf, scanUnservable = true)
+        def read(tuples: Seq[Seq[String]]) = GraphStore.keyedRead(p, o.lbl,
+          (o.keys.map(_ => StringType), tuples), o.keys,
+          scanUnservable = true)
         val farExpr = concat_ws(":", o.farCols.map(col): _*)
         if (o.en == "far")
           // typed parts for PRUNING, string equality for SEMANTICS:
           // the frontier key splits into parts the read casts to the
-          // stored types (get() tolerates short arrays; a part the
-          // type cannot hold is NULL and matches nothing), which find
+          // stored types (Spark's split(k, ':') and get(): regex ':',
+          // no limit, NULL past the end; a part the type cannot hold
+          // is NULL and matches nothing), which find
           // the candidate rows; the filter on the re-encoded key keeps
           // varPath's string-equality contract exact — a
           // cast-normalized near-miss anchor ('X:01:…' against stored
@@ -295,16 +297,18 @@ object Motif {
           // with NULL far-key parts stay unreachable by reverse entry
           // — their ':'-encoding is ambiguous (concat_ws skips nulls),
           // a limitation of the encoding itself, shared with varPath.
-          read(front.select(o.farCols.zipWithIndex.map { case (c, i) =>
-              get(split(col("k"), ":"), lit(i)).as(c) }: _*))
-            .select(farExpr.as("a"), col("src").cast("string").as("b"))
+          read(ks.map { k =>
+              val parts = k.split(":", -1)
+              o.keys.map(o.farCols.indexOf(_))
+                .map(i => if (i < parts.length) parts(i) else null)
+            }).select(farExpr.as("a"), col("src").cast("string").as("b"))
             .where(col("a").isin(ks: _*))
         else {
           val ex =
             if (o.en == "src") {
               if (o.hasDst) col("dst").cast("string") else farExpr
             } else col("src").cast("string")
-          read(front.select(col("k").as(o.en)))
+          read(ks.map(Seq(_)))
             .select(col(o.en).cast("string").as("a"), ex.as("b"))
         }
       }.reduce(_ unionByName _).where(col("a") =!= col("b"))

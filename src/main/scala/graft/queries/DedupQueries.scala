@@ -312,15 +312,15 @@ object DedupQueries {
     if (!resumed) {
       empty(bandSchema).coalesce(1)
         .write.mode("overwrite").parquet(s"$stateDir/BANDS/_empty")
-      writeManifest(s, s"$stateDir/BANDS/manifest/v0",
-        (0 until nb).map(_ -> -1).toMap)
+      writeManifestFull(s, s"$stateDir/BANDS/manifest/v0",
+        (0 until nb).map(_ -> BucketFiles(-1, None)).toMap)
       empty(bSchema).coalesce(1)
         .write.mode("overwrite").parquet(s"$stateDir/B/v0")
       StoreMeta.write(s, stateDir, meta)
       empty(aSchema).coalesce(1)
         .write.mode("overwrite").parquet(s"$stateDir/A/_empty")
-      writeManifest(s, s"$stateDir/A/manifest/v0",
-        (0 until nb).map(_ -> -1).toMap)
+      writeManifestFull(s, s"$stateDir/A/manifest/v0",
+        (0 until nb).map(_ -> BucketFiles(-1, None)).toMap)
     }
     val ord = graft.graph.GraphAlgorithms.utf8Ordering
     val q = streamSource(s, srcPath, options).writeStream
@@ -456,8 +456,8 @@ object DedupQueries {
               coalesce(col("paired"), lit(false))).as("paired"))
         val aWritten = BucketStore.writeVersion(ss, s"$stateDir/A",
           id.toInt + 1, aMerged, Seq("doc_id"), nb, meta, aSchema)
-        writeManifest(ss, s"$stateDir/A/manifest/v${id + 1}",
-          versionsOf(aBase ++ aDirty.map(k => k -> aWritten(k))))
+        writeManifestFull(ss, s"$stateDir/A/manifest/v${id + 1}",
+          aBase ++ aDirty.map(k => k -> aWritten(k)))
         // BANDS append (create-only on the full key; same
         // checkpointed dirty slice the probe read)
         val bandMerged = bandState
@@ -465,8 +465,8 @@ object DedupQueries {
           .dropDuplicates("doc_id", "band", "bk")
         val bandWritten = BucketStore.writeVersion(ss, s"$stateDir/BANDS",
           id.toInt + 1, bandMerged, Seq("band", "bk"), nb, meta, bandSchema)
-        writeManifest(ss, s"$stateDir/BANDS/manifest/v${id + 1}",
-          versionsOf(bandBase ++ hit.map(k => k -> bandWritten(k))))
+        writeManifestFull(ss, s"$stateDir/BANDS/manifest/v${id + 1}",
+          bandBase ++ hit.map(k => k -> bandWritten(k)))
         bNext.toDF("root", "canon").coalesce(1)
           .write.mode("overwrite").parquet(s"$stateDir/B/v${id + 1}")
         ()

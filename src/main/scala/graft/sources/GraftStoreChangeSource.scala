@@ -226,7 +226,7 @@ object GraftStoreChangeSource {
       parameters: Map[String, String]): StructType = {
     val base = GraftStoreSource.resolveLayout(parameters) match {
       case GraftStoreSource.GraphLayout(dir, t) =>
-        GraphStore.relationSpec(spark, dir, t)._4
+        GraphStore.pin(spark, dir, None)(t).schema
       case GraftStoreSource.RawLayout(sd) =>
         // resolve through rawManifest, not a bare `$sd/_empty` read:
         // schema resolution is the STREAM's startup path (sourceSchema

@@ -104,11 +104,15 @@ class GraftStoreSource extends RelationProvider with StreamSourceProvider
   override def createRelation(sqlContext: SQLContext,
       parameters: Map[String, String]): BaseRelation = {
     val spark = sqlContext.sparkSession
-    val (tdir, manifest, bucketKeys, schema, bloomBits) =
+    val relation =
       GraftStoreSource.resolveLayout(parameters) match {
+        // resolved EXACTLY like the native reads: one marker pin, the
+        // same meta and the same loud failures on vacuumed markers and
+        // legacy meta
         case GraftStoreSource.GraphLayout(dir, t) =>
-          graft.graph.GraphStore.relationSpec(spark, dir, t,
-            parameters.get("marker").map(_.trim.toInt))
+          graft.graph.GraphStore.pin(spark, dir,
+            parameters.get("marker").map(_.trim.toInt))(t)
+            .relation(parameters)
         case GraftStoreSource.RawLayout(sd) =>
           val (m, schema) = GraftStoreSource.rawManifest(spark, sd,
             parameters.get("version").map(_.trim.toInt))
@@ -145,17 +149,17 @@ class GraftStoreSource extends RelationProvider with StreamSourceProvider
           // raw layout: the bloom declaration (when the store was
           // created with one — GraphStore tables read raw, or
           // sink-created stores with the keyBlooms option) gates the
-          // literal pruning on the same sidecars
-          (sd, m, keys, schema, meta.flatMap(_.bloomBits))
+          // literal pruning on the same sidecars; the native reads'
+          // relation, with the bucket keys that arm the index's
+          // literal pruning
+          BucketStore.relation(spark, sd, m, schema, keys,
+            meta.flatMap(_.bloomBits), parameters)
       }
     // every graftstore read arms the runtime bucket-pruning rule on
     // its session (idempotent): a BI tool's plain `spark.read.format`
     // gets join-driven pruning without ever importing a graft API
     GraftStoreSource.armRuntimePruning(spark)
-    // the native reads' relation, with the bucket keys that arm the
-    // index's literal pruning
-    BucketStore.relation(spark, tdir, manifest, schema, bucketKeys,
-      bloomBits, parameters)
+    relation
   }
 }
 

@@ -477,11 +477,6 @@ object EventStreams {
       }
     }.mkString("", "\n", "\n")
 
-  private[graft] def writeManifest(
-      spark: SparkSession, path: String, m: Map[Int, Int]): Unit =
-    writeSmallFile(spark, path,
-      manifestBody(m.map { case (k, v) => k -> BucketFiles(v, None) }))
-
   private[graft] def writeManifestFull(
       spark: SparkSession, path: String, m: Map[Int, BucketFiles]): Unit =
     writeSmallFile(spark, path, manifestBody(m))

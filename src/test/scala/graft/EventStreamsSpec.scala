@@ -803,6 +803,19 @@ class EventStreamsSpec extends AnyFunSuite {
       .list(stateDir.resolve("A")).toArray
       .map(_.toString.split('/').last).count(_.startsWith("v"))
     assert(versions >= 3, s"expected v1..v3, saw $versions A versions")
+    // every state commit records its bucket files: reading the final A
+    // state lists no bucket directory
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val aDir = stateDir.resolve("A").toString
+    val finalA = graft.streaming.BucketStore.stateAt(spark, aDir,
+      EventStreams.readManifestFull(spark, s"$aDir/manifest/v" +
+        EventStreams.manifestVersions(spark, aDir).max))
+    val listed = finalA.queryExecution.analyzed.collect {
+      case l: LogicalRelation => l.relation.asInstanceOf[HadoopFsRelation]
+        .location.asInstanceOf[graft.sources.GraftStoreFileIndex]
+        .listedBucketCount
+    }
+    assert(listed == Seq(0), s"final A state listed $listed buckets")
   }
 
   test("cluster maintenance: consumed-checkpoint rerun is a no-op") {

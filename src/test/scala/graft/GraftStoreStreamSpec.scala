@@ -363,7 +363,7 @@ class GraftStoreStreamSpec extends AnyFunSuite {
     GraphStore.applyRelease(spark, dir, r3)
     GraphStore.vacuum(spark, dir, keepVersions = 1)
     // m0 was GC'd with its superseded manifests → the resume's diff
-    // from m0 must fail loudly (markerOrFail names keepVersions)
+    // from m0 must fail loudly (the marker pin names keepVersions)
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       runFeed(opts, chk)
     }

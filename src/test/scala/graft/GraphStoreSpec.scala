@@ -424,6 +424,78 @@ class GraphStoreSpec extends AnyFunSuite {
     assert(e.getMessage.contains("marker"), e.getMessage)
   }
 
+  test("one pin per call: a release marker published mid-call is not " +
+      "seen — pathAnchored's second hop and varPathAnchored's hops read " +
+      "the marker pinned at entry") {
+    import spark.implicits._
+    import graft.graph.Motif
+    import java.nio.file.{Files, Paths}
+    val Seq(r1, r2, _) = LoadFixtures.policyMatrix(spark)
+    // r2 also gives GFE A (present at r0) a second feature edge: the
+    // plain matrix leaves every HAS_FEATURE row of an r0 GFE as it was
+    val r2x = r2.copy(_3 = r2._3.unionByName(
+      LoadFixtures.featsDf(spark, Seq(("A", "EXON", 2, "5", "GG")))))
+    val dir = tmp("graphstore_midcall")
+    GraphStore.init(spark, dir, GraphLoad.loadAll(spark, Seq(r1)),
+      buckets = 16)
+    GraphStore.applyRelease(spark, dir, r2x)
+    val Seq(m0, m1) = GraphStore.markers(spark, dir)
+    def rows(df: org.apache.spark.sql.DataFrame) = {
+      val cs = df.columns.sorted.toIndexedSeq
+      df.select(cs.map(col): _*).collect().map(_.toString).sorted.toSeq
+    }
+    val anchor = "HLA-A*01:01"
+    val marker = Paths.get(dir, "_release", s"r$m1").toString
+    val hidden = Paths.get(dir, s"hidden_r$m1").toString
+    // the anchor frame with marker m1 hidden; evaluating the frame
+    // republishes m1 on its n-th run (local mode: the UDF runs in this
+    // JVM, and the run counter is static)
+    def republishing(n: Int) = {
+      Files.move(Paths.get(marker), Paths.get(hidden))
+      MidCallPublish.runs.set(0)
+      val publish = udf { (k: String) =>
+        if (MidCallPublish.runs.incrementAndGet() >= n &&
+            Files.exists(Paths.get(hidden)))
+          Files.move(Paths.get(hidden), Paths.get(marker))
+        k
+      }
+      Seq(anchor).toDF("k").select(publish(col("k")).as("k"))
+    }
+    // PREMISE: hop 2 enters HAS_FEATURE by the GFEs hop 1 finds at m0,
+    // and those GFEs' feature rows changed between m0 and m1
+    val hops = Seq(Motif.Hop("HAS_IPD_ALLELE", reverse = true),
+      Motif.Hop("HAS_FEATURE"))
+    val gfes0 = GraphStore.probe(spark, dir, "HAS_IPD_ALLELE",
+      Seq(anchor).toDF("dst"), Seq("dst"), asOf = Some(m0)).select("src")
+    def featRows(m: Int) = rows(GraphStore.probe(spark, dir, "HAS_FEATURE",
+      gfes0, Seq("src"), asOf = Some(m)))
+    assert(featRows(m0).nonEmpty && featRows(m0) != featRows(m1),
+      "premise: hop 2's rows must change between m0 and m1")
+    // hop 1 collects the anchors once, hop 2 collects its frontier
+    // through them again: m1 is republished between the two hops
+    val path = rows(Motif.pathAnchored(spark, dir, republishing(2), hops))
+    assert(Files.exists(Paths.get(marker)),
+      "m1 must be republished during the call")
+    val path0 = rows(Motif.pathAnchored(spark, dir,
+      Seq(anchor).toDF("k"), hops, asOf = Some(m0)))
+    assert(path.nonEmpty && path == path0,
+      s"mixed-marker path:\n $path\n $path0")
+    // varPathAnchored: m1 is republished by the anchor collect, before
+    // any hop reads
+    val labels = Seq("HAS_IPD_ALLELE", "HAS_FEATURE")
+    def varRows(anchors: org.apache.spark.sql.DataFrame, m: Option[Int]) =
+      rows(Motif.varPathAnchored(spark, dir, anchors, labels, 1, 2,
+        either = true, asOf = m))
+    val plain = Seq(anchor).toDF("k")
+    assert(varRows(plain, Some(m0)) != varRows(plain, Some(m1)),
+      "premise: the expansion must change between m0 and m1")
+    val varPath = varRows(republishing(1), None)
+    assert(Files.exists(Paths.get(marker)),
+      "m1 must be republished during the call")
+    assert(varPath.nonEmpty && varPath == varRows(plain, Some(m0)),
+      "varPathAnchored read a marker published after its entry")
+  }
+
   test("probeJoin: join-shaped read equals probe on the same keys, " +
       "stays fully lazy (zero driver jobs), takes a 1e6-row key frame") {
     import spark.implicits._
@@ -1170,4 +1242,11 @@ class GraphStoreSpec extends AnyFunSuite {
         byCase(("duplicates", None)) != byCase(("duplicates", Some(0))))
     }
   }
+}
+
+/** The run counter of the mid-call-publish spec's anchor UDF. It is
+  * static, so it counts every run in this JVM; a counter captured in
+  * the UDF's closure would be copied with each serialized task. */
+private object MidCallPublish {
+  val runs = new java.util.concurrent.atomic.AtomicInteger()
 }
