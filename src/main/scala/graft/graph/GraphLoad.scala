@@ -30,9 +30,10 @@ import graft.gfe.GfeConstants
   * Scale design: every MERGE is a groupBy/dropDuplicates on the
   * natural key — one shuffle per table, on fixed-width keys (the
   * long-string HAS_SEQUENCE join of load.cyp:119 is keyed on the
-  * hashed seq_id instead, per SURVEY §4). Incremental release loads
-  * union the delta then re-reduce; at scale this is a Delta-style
-  * merge over key-bucketed storage.
+  * hashed seq_id instead, per SURVEY §4). This is the whole-history
+  * refold; merging one release into an existing graph is
+  * [[GraphStore.applyRelease]], the one incremental MERGE (over
+  * key-bucketed storage), spec-pinned equal to this refold.
   */
 object GraphLoad {
 
@@ -196,114 +197,6 @@ object GraphLoad {
       .dropDuplicates("src", "locus", "rank", "term", "accession")
 
     Graph(gfe, sequence, feature, ipdAllele, ipdAccession, submitter,
-      hasIpdAllele, hasIpdAccession, submitted, hasSequence, hasFeature)
-  }
-
-  /** Incremental per-release MERGE — the reference's actual operating
-    * mode: release N+1 MERGEs into the *existing* graph
-    * (load.cyp:7,93-95, serialized by pipeline.asl.json:153), so a
-    * standing pipeline pays O(delta) per release instead of refolding
-    * all history. Policies are the key-local form of [[loadAll]]'s
-    * window/agg choices:
-    *
-    *  - GFE / IPD_Accession / HAS_IPD_ACCESSION / SUBMITTED /
-    *    Feature / HAS_FEATURE: create-only — existing keys win, new
-    *    keys append (ON CREATE SET).
-    *  - Sequence: per-key overwrite (ON MATCH SET, load.cyp:23-31).
-    *  - IPD_Allele: gene create-only; G/lg overwritten when (and only
-    *    when) this release carries a groups row for the allele
-    *    (load.cyp:63-83's FOREACH-CASE).
-    *  - HAS_IPD_ALLELE.releases: sorted-set accumulate (load.cyp:93-95).
-    *  - HAS_SEQUENCE: new (gfe, seq_id) pairs resolved against the
-    *    post-merge Sequence nodes (the MATCH of load.cyp:119 runs
-    *    against the graph state at load time — identical to
-    *    [[loadAll]]'s final-state join because a GFE name is a
-    *    function of its sequence's features, so (name → seq_id) never
-    *    changes across releases).
-    *
-    * Within-release key ties are assumed key-determined (identical
-    * payload per key) — the same assumption [[loadAll]]'s
-    * load_seq-ordered windows already make, since rows of one release
-    * share a load_seq.
-    *
-    * Scale shape: every delta is release-sized (≤ tens of thousands of
-    * rows) and broadcastable; the anti-joins against existing tables
-    * are one scan each with the delta broadcast, and on the bucketed
-    * store ([[GraphStore]]) they collapse to O(dirty buckets) I/O.
-    * Fold-equality with [[loadAll]] is spec-pinned
-    * (GraphLoadSpec "incremental applyRelease fold == loadAll").
-    */
-  def applyRelease(
-      spark: SparkSession,
-      g: Graph,
-      release: (String, DataFrame, DataFrame, DataFrame),
-      submitDate: java.sql.Date = java.sql.Date.valueOf("2026-01-01")): Graph = {
-    val (_, seqs, featRel, groups) = release
-    // ONE derivation of what this release means (shared with
-    // GraphStore.applyRelease — see ReleaseDeltas/MergePolicies): the
-    // whole-frame path applies each policy to the full table where
-    // the store applies it to dirty-bucket slices, same (state,
-    // delta) => merged function either way.
-    val d = new ReleaseDeltas(seqs, featRel, groups)
-    val seqNew = d.seqDelta
-
-    // ---- vertices ----
-    val gfe = MergePolicies.createOnly(Seq("name"))(g.gfe, d.gfeDelta)
-    val sequence = MergePolicies.overwrite(Seq("name"))(g.sequence, seqNew)
-    val feature = MergePolicies.createOnly(ReleaseDeltas.featureKeys)(
-      g.feature, d.featDelta)
-    val ipdAllele = MergePolicies.mergeAllele(g.ipdAllele, d.alleleDelta)
-    val ipdAccession =
-      MergePolicies.createOnly(Seq("name"))(g.ipdAccession, d.accDelta)
-
-    // ---- edges ----
-    val hasIpdAllele =
-      MergePolicies.mergeReleases(g.hasIpdAllele, d.relsDelta)
-    val hasIpdAccession = MergePolicies.createOnly(Seq("src", "dst"))(
-      g.hasIpdAccession, d.hasAccDelta)
-    val submitted = MergePolicies.createOnly(Seq("src", "dst"))(
-      g.submitted, d.submittedDelta(lit(submitDate)))
-
-    // The incremental HAS_SEQUENCE probe is sound iff seq_id ↔ name
-    // stays a bijection across releases (the model guarantees it:
-    // gfe_name encodes its sequence's feature decomposition). A
-    // repeated seq_id under a NEW name would need the reverse probe
-    // (old pairs × new sequence row) this delta-sized join cannot
-    // see, and a name whose seq_id CHANGED would leave stale
-    // accumulated edges — either way the fold would silently diverge
-    // from the refold, so both directions are asserted here with
-    // delta-sized probes (at scale: two index lookups, not scans).
-    locally {
-      val crossName = seqNew.select(col("seq_id"), col("name"))
-        .join(g.sequence.select(col("seq_id"), col("name").as("_oname")),
-          Seq("seq_id"))
-        .where(col("name") =!= col("_oname")).limit(1).count()
-      require(crossName == 0,
-        "applyRelease: a sequence (seq_id) reappeared under a new GFE " +
-          "name — the incremental HAS_SEQUENCE probe cannot see old " +
-          "pairs; refold this history with loadAll")
-      val reId = seqNew.select(col("name"), col("seq_id"))
-        .join(g.sequence.select(col("name"), col("seq_id").as("_oid")),
-          Seq("name"))
-        .where(col("seq_id") =!= col("_oid")).limit(1).count()
-      require(reId == 0,
-        "applyRelease: a GFE name changed its sequence (seq_id) — " +
-          "accumulated HAS_SEQUENCE edges would go stale; refold this " +
-          "history with loadAll")
-    }
-    // Probe the post-merge Sequence nodes with the release's pairs —
-    // the delta side is release-sized, so broadcast it and keep the
-    // store side a single scan (an index probe on GraphStore).
-    val hsNew = sequence.select(col("seq_id"), col("name").as("dst"))
-      .join(broadcast(d.pairsDelta), Seq("seq_id"))
-      .select("src", "dst")
-    val hasSequence = g.hasSequence.unionByName(hsNew)
-      .dropDuplicates("src", "dst")
-
-    val hasFeature = MergePolicies.createOnly(ReleaseDeltas.hasFeatureKeys)(
-      g.hasFeature, d.hasFeatDelta)
-
-    Graph(gfe, sequence, feature, ipdAllele, ipdAccession, g.submitter,
       hasIpdAllele, hasIpdAccession, submitted, hasSequence, hasFeature)
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
+import scala.collection.immutable.ListMap
 import graft.streaming.{BucketStore, EventStreams}
 import graft.streaming.BucketStore.StoreMeta
 
@@ -12,7 +13,8 @@ import graft.streaming.BucketStore.StoreMeta
   * key-bucketed, manifest-versioned parquet stores (one per table,
   * the [[EventStreams.cdcApply]] layout) with [[applyRelease]]
   * MERGE-ing one release at a time under the exact load.cyp policies
-  * of [[GraphLoad.applyRelease]].
+  * ([[MergePolicies]] over [[ReleaseDeltas]]) — the one incremental
+  * MERGE; [[GraphLoad.loadAll]] is the whole-history refold.
   *
   * This is the reference's actual operating mode — release N+1 MERGEs
   * into the EXISTING graph (load.cyp:7,93-95; one release at a time,
@@ -43,6 +45,8 @@ object GraphStore {
     * HAS_IPD_ALLELE carry bespoke merges below. */
   private val featKeys = ReleaseDeltas.featureKeys
   private val hfKeys = ReleaseDeltas.hasFeatureKeys
+  /** A load.cyp policy as a `(state, delta) => merged` frame merge. */
+  private type Merge = (DataFrame, DataFrame) => DataFrame
 
   // ---- per-table plumbing (the BucketStore layout, batch-driven) ----
   //
@@ -86,9 +90,6 @@ object GraphStore {
     m
   }
 
-  private def latestVersion(spark: SparkSession, tdir: String): Int =
-    EventStreams.manifestVersions(spark, tdir).max
-
   /** A graph-store table's read schema is FIXED at init (`_empty` is
     * what every read pins to; the apply path's schema guard exists
     * precisely to reject drift) — so the parquet footer read resolves
@@ -113,10 +114,6 @@ object GraphStore {
       else (stamp, spark.read.parquet(s"$tdir/_empty").schema))._2
   }
 
-  private def latestManifest(spark: SparkSession, tdir: String) =
-    EventStreams.readManifestFull(spark,
-      s"$tdir/manifest/v${latestVersion(spark, tdir)}")
-
   private def manifestAt(spark: SparkSession, tdir: String,
       v: Int): Map[Int, EventStreams.BucketFiles] =
     try EventStreams.readManifestFull(spark, s"$tdir/manifest/v$v")
@@ -135,22 +132,6 @@ object GraphStore {
       s"$tdir is bucketed by (${meta.keys.get.mkString(",")}); a probe " +
         s"keyed (${keys.mkString(",")}) would miss rows")
 
-  /** Read ONLY the buckets a (release-sized) key frame hashes to — the
-    * apply path's index read: at scale a handful of bucket files, not
-    * the table. The bucket set is one job over the frame
-    * ([[BucketStore.bucketsFor]], bloom-gated on a keyBlooms store);
-    * [[probe]] hashes its probe-sized anchors on the driver instead. */
-  private def stateForKeys(spark: SparkSession, tdir: String,
-      keyRows: DataFrame, keys: Seq[String]): DataFrame = {
-    val meta = tableMeta(tdir, StoreMeta.read(spark, tdir))
-    requireBucketKeys(tdir, meta, keys)
-    val m = latestManifest(spark, tdir)
-    val hit = BucketStore.bucketsFor(spark, tdir, m, keys, Right(keyRows),
-      meta.bloomBits)
-    BucketStore.stateAt(spark, tdir, m.filter { case (k, _) => hit(k) },
-      Some(tableSchema(spark, tdir)))
-  }
-
   /** One MERGE step on one table: read dirty buckets, merge the
     * (key-local) policy, rewrite only those buckets, commit manifest
     * v+1. The commit is create-EXCLUSIVE: a concurrent applier that
@@ -158,18 +139,15 @@ object GraphStore {
     * instead of silently dropping this one's merge (the reference
     * enforces one-release-at-a-time — pipeline.asl.json:153
     * MaxConcurrency 1 — and so does the store, by failing the second
-    * writer rather than trusting deployment discipline). Returns
-    * (dirty-bucket count — the I/O proportionality evidence the spec
-    * asserts — , committed version). */
-  private def applyTable(spark: SparkSession, tdir: String,
-      delta: DataFrame,
-      merge: (DataFrame, DataFrame) => DataFrame): (Int, Int) = {
-    // one meta + one `_empty` footer read per apply (r15 opt: the
-    // schema guard, the dirty-state read, and the zone/bloom passes
-    // each re-read them before — 3-4 small round-trips per table per
-    // release on the store's hottest write path)
-    val meta = tableMeta(tdir, StoreMeta.read(spark, tdir))
-    val expectT = tableSchema(spark, tdir)
+    * writer rather than trusting deployment discipline). `head` is the
+    * table's view under the apply's head pin: its meta, schema, newest
+    * version and that version's manifest, each read once per apply.
+    * Returns (dirty-bucket count — the I/O proportionality evidence
+    * the spec asserts — , committed version, committed manifest). */
+  private def applyTable(spark: SparkSession, head: Pin#View,
+      delta: DataFrame, merge: Merge)
+      : (Int, Int, Map[Int, EventStreams.BucketFiles]) = {
+    val (tdir, meta, expectT) = (head.tdir, head.meta, head.schema)
     // SCHEMA GUARD, before the claim (a mismatched apply must not
     // burn a version claim): the table's READ schema is fixed at init
     // (`_empty` is what every stateAt read pins to), so an apply whose
@@ -207,7 +185,7 @@ object GraphStore {
         remedy(s"the merged output schema (${merged.simpleString}) " +
           "does not match;")
     }
-    val v = latestVersion(spark, tdir)
+    val v = head.version
     // The claim is PERMANENT and anonymous, so never reentrant —
     // deleting it after commit would let a straggler that read the
     // old base re-claim the version and overwrite committed bucket
@@ -224,11 +202,10 @@ object GraphStore {
         "retry"
     }
     val (dirty, next) = BucketStore.rewriteDirty(spark, tdir,
-      latestManifest(spark, tdir), v + 1, delta, meta.keys.get, meta,
-      expectT)(merge)
+      head.manifest, v + 1, delta, meta.keys.get, meta, expectT)(merge)
     EventStreams.writeManifestExclusiveFull(
       spark, s"$tdir/manifest/v${v + 1}", next)
-    (dirty, v + 1)
+    (dirty, v + 1, next)
   }
 
   // ---- release markers: store-level atomicity ----
@@ -278,7 +255,10 @@ object GraphStore {
     * meta, `__rev` twin, schema and manifest from disk at most once.
     * A pin lives for one call: all tables of a graph read, and all
     * hops of a path read, see one marker, so a release published
-    * mid-call cannot mix two releases in one answer. */
+    * mid-call cannot mix two releases in one answer. A pin built with
+    * no marker (`new Pin(spark, dir, None, None)`) is the HEAD: every
+    * view is its table's newest committed version — [[applyRelease]]'s
+    * one resolution of each table per call. */
   private[graft] final class Pin private[GraphStore] (
       val spark: SparkSession, val dir: String,
       asOf: Option[Int], marker: Option[Map[String, Int]]) {
@@ -288,28 +268,57 @@ object GraphStore {
     def apply(table: String): View =
       views.getOrElseUpdate(table, new View(table))
 
+    /** Every table directory the store keeps — dynamic, because the
+      * dual-anchor layout adds `__rev` twins: a directory is a table
+      * iff its view finds a store meta, so each meta is read once per
+      * pin, here or by whichever read comes first. */
+    lazy val tables: Seq[String] = {
+      val (fs, root) = EventStreams.hadoopFs(spark, dir)
+      fs.listStatus(root).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName != "_release")
+        .map(_.getPath.getName).filter(this(_).stored.nonEmpty).sorted
+    }
+
     final class View(val name: String) {
       val tdir = s"$dir/$name"
-      private lazy val stored = StoreMeta.read(spark, tdir)
+      private[Pin] lazy val stored = StoreMeta.read(spark, tdir)
       lazy val meta: StoreMeta = tableMeta(tdir, stored)
       /** The dual-anchor twin (same rows, reverse bucket layout), when
-        * the store keeps one. */
+        * the store keeps one — only a [[revAnchors]] edge table can. */
       lazy val twin: Option[View] =
-        if (name.endsWith("__rev")) None
+        if (!revAnchors.contains(name)) None
         else Some(Pin.this(s"${name}__rev")).filter(_.stored.nonEmpty)
       lazy val schema: org.apache.spark.sql.types.StructType =
         tableSchema(spark, tdir)
+      /** The pinned manifest version: the marker's, else the newest. */
+      lazy val version: Int = marker.flatMap(_.get(name)).getOrElse {
+        require(asOf.isEmpty, s"$dir: marker r${asOf.get} records no " +
+          s"version for $name (tables: " +
+          s"${marker.get.keys.toSeq.sorted.mkString(",")})")
+        EventStreams.manifestVersions(spark, tdir).max
+      }
       lazy val manifest: Map[Int, EventStreams.BucketFiles] =
-        manifestAt(spark, tdir, marker.flatMap(_.get(name)).getOrElse {
-          require(asOf.isEmpty, s"$dir: marker r${asOf.get} records no " +
-            s"version for $name (tables: " +
-            s"${marker.get.keys.toSeq.sorted.mkString(",")})")
-          latestVersion(spark, tdir)
-        })
+        manifestAt(spark, tdir, version)
 
       /** Every live row of the pinned version. */
       def state: DataFrame =
         BucketStore.stateAt(spark, tdir, manifest, Some(schema))
+
+      /** The rows of ONLY the buckets of `m` (the pinned manifest unless
+        * given) that a (release-sized) key frame hashes to — the
+        * apply's index read: at scale a handful of bucket files, not
+        * the table. The bucket set is one job over the frame
+        * ([[BucketStore.bucketsFor]], bloom-gated on a keyBlooms
+        * store); [[probe]] hashes its probe-sized anchors on the driver
+        * instead. */
+      def stateOfKeys(keyRows: DataFrame, keys: Seq[String],
+          m: Map[Int, EventStreams.BucketFiles] = manifest): DataFrame = {
+        requireBucketKeys(tdir, meta, keys)
+        val hit = BucketStore.bucketsFor(spark, tdir, m, keys,
+          Right(keyRows), meta.bloomBits)
+        BucketStore.stateAt(spark, tdir, m.filter { case (k, _) => hit(k) },
+          Some(schema))
+      }
 
       /** The `graftstore` source's relation over the pinned version:
         * the persisted bucket keys and bloom bits arm its literal
@@ -340,9 +349,8 @@ object GraphStore {
   }
 
   // Merge policies and delta derivation live in [[MergePolicies]] /
-  // [[ReleaseDeltas]] — ONE definition shared with
-  // [[GraphLoad.applyRelease]], so the two incremental paths cannot
-  // drift on what a release means.
+  // [[ReleaseDeltas]] — ONE definition of what a release means, which
+  // [[applyRelease]] applies to dirty-bucket slices.
   import MergePolicies.{createOnly, overwrite, mergeAllele, mergeReleases}
 
   // ---- public API ----
@@ -374,7 +382,6 @@ object GraphStore {
     // back by every selective range scan (see graft.streaming
     // .ZoneMaps).
     val bb = if (keyBlooms) Some(bloomBits) else None
-    val zm = zoneMaps
     // The per-table inits are independent stores (disjoint
     // directories) — run them as concurrent job streams, exactly like
     // applyRelease's per-table MERGEs (r15 opt: serialized, a 12-17
@@ -386,33 +393,9 @@ object GraphStore {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val inits = scala.collection.mutable.ArrayBuffer[Future[Unit]](
-      Future(initTable(spark, s"$dir/GFE", g.gfe, Seq("name"), buckets,
-        bb, zm)),
-      Future(initTable(spark, s"$dir/Sequence", g.sequence, Seq("name"),
-        buckets, bb, zm)),
-      Future(initTable(spark, s"$dir/Feature", g.feature,
-        Seq("locus", "rank", "term", "accession"), buckets, bb, zm)),
-      Future(initTable(spark, s"$dir/IPD_Allele", g.ipdAllele,
-        Seq("name"), buckets, bb, zm)),
-      Future(initTable(spark, s"$dir/IPD_Accession", g.ipdAccession,
-        Seq("name"), buckets, bb, zm)),
-      Future(initTable(spark, s"$dir/Submitter", g.submitter,
-        Seq("name"), buckets, bb, zm)),
-      Future(initTable(spark, s"$dir/HAS_IPD_ALLELE", g.hasIpdAllele,
-        Seq("dst"), buckets, bb, zm)),
-      Future(initTable(spark, s"$dir/HAS_IPD_ACCESSION",
-        g.hasIpdAccession, Seq("dst"), buckets, bb, zm)),
-      Future(initTable(spark, s"$dir/SUBMITTED", g.submitted,
-        Seq("dst"), buckets, bb, zm)),
-      Future(initTable(spark, s"$dir/HAS_SEQUENCE", g.hasSequence,
-        Seq("src"), buckets, bb, zm)),
-      Future(initTable(spark, s"$dir/HAS_FEATURE", g.hasFeature,
-        Seq("src"), buckets, bb, zm)),
-      // the seq_id-keyed Sequence-node index HAS_SEQUENCE probes
-      Future(initTable(spark, s"$dir/SEQ_INDEX",
-        g.sequence.select(col("seq_id"), col("name")), Seq("seq_id"),
-        buckets, bb, zm)))
+    // SEQ_INDEX: the seq_id-keyed Sequence-node index HAS_SEQUENCE probes
+    val frames = g.vertexTables ++ g.edgeTables +
+      ("SEQ_INDEX" -> g.sequence.select(col("seq_id"), col("name")))
     // DUAL-ANCHOR layout (opt-in): each traversal edge table gets a
     // `__rev` twin holding the SAME rows bucketed by the OPPOSITE
     // anchor, so EITHER traversal direction is a bucket-pruned probe
@@ -425,46 +408,40 @@ object GraphStore {
     // SUBMITTED gets no twin: its reverse fan-out is table-sized by
     // nature (one submitter vertex) — a bucket layout cannot help it,
     // and [[probeJoin]] stays the honest read for that shape.
-    if (dualAnchor) {
-      val src = Map[String, DataFrame](
-        "HAS_IPD_ALLELE" -> g.hasIpdAllele,
-        "HAS_IPD_ACCESSION" -> g.hasIpdAccession,
-        "HAS_SEQUENCE" -> g.hasSequence,
-        "HAS_FEATURE" -> g.hasFeature)
-      revAnchors.foreach { case (t, keys) =>
-        inits += Future(initTable(spark, s"$dir/${t}__rev", src(t),
-          keys, buckets, bb, zm))
-      }
+    val twins = if (!dualAnchor) Nil else revAnchors.toSeq.map {
+      case (t, keys) => (s"${t}__rev", g.edgeTables(t), keys) }
+    val tables =
+      bucketKeys.toSeq.map { case (t, keys) => (t, frames(t), keys) } ++ twins
+    val inits = tables.map { case (t, df, keys) =>
+      Future(initTable(spark, s"$dir/$t", df, keys, buckets, bb, zoneMaps))
     }
     // completion barrier BEFORE failure propagation (applyRelease's
     // discipline): a caller's cleanup/retry must never race a
     // still-running sibling initTable on the same store dir
     inits.foreach(f => Await.ready(f, Duration.Inf))
     inits.foreach(Await.result(_, Duration.Inf))
-    writeMarker(spark, dir, tablesOf(spark, dir).map(_ -> 0).toMap)
+    writeMarker(spark, dir, tables.map(_._1 -> 0).toMap)
   }
+
+  /** Each table's bucket key — its TRAVERSAL anchor (see [[init]]). */
+  private val bucketKeys: ListMap[String, Seq[String]] = ListMap(
+    "GFE" -> Seq("name"), "Sequence" -> Seq("name"),
+    "Feature" -> Seq("locus", "rank", "term", "accession"),
+    "IPD_Allele" -> Seq("name"), "IPD_Accession" -> Seq("name"),
+    "Submitter" -> Seq("name"), "HAS_IPD_ALLELE" -> Seq("dst"),
+    "HAS_IPD_ACCESSION" -> Seq("dst"), "SUBMITTED" -> Seq("dst"),
+    "HAS_SEQUENCE" -> Seq("src"), "HAS_FEATURE" -> Seq("src"),
+    "SEQ_INDEX" -> Seq("seq_id"))
 
   /** Reverse-twin anchor keys: the opposite traversal end of each
     * edge table that has an enterable one (HAS_FEATURE's far end is
     * the Feature composite key — its twin serves "which GFEs carry
     * feature F"). */
-  private val revAnchors: Seq[(String, Seq[String])] = Seq(
+  private val revAnchors: ListMap[String, Seq[String]] = ListMap(
     "HAS_IPD_ALLELE" -> Seq("src"),
     "HAS_IPD_ACCESSION" -> Seq("src"),
     "HAS_SEQUENCE" -> Seq("dst"),
     "HAS_FEATURE" -> Seq("locus", "rank", "term", "accession"))
-
-  /** Every table directory the store keeps — dynamic, because the
-    * dual-anchor layout adds `__rev` twins (a directory is a table
-    * iff it carries a store meta file). */
-  private def tablesOf(spark: SparkSession, dir: String): Seq[String] = {
-    val (fs, root) = EventStreams.hadoopFs(spark, dir)
-    fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName != "_release")
-      .map(_.getPath.getName)
-      .filter(t => StoreMeta.read(spark, s"$dir/$t").nonEmpty)
-      .sorted
-  }
 
   /** Per-table dirty-bucket counts and committed manifest versions of
     * one [[applyRelease]]. */
@@ -474,8 +451,10 @@ object GraphStore {
   }
 
   /** MERGE one release into the store — O(dirty buckets) read+write
-    * per table. Same policy set as [[GraphLoad.applyRelease]]; fold
-    * equality with the refold is spec-pinned. */
+    * per table under the load.cyp policies ([[MergePolicies]]); the
+    * one incremental MERGE, and fold equality with the refold
+    * ([[GraphLoad.loadAll]]) is spec-pinned. Each table's head (meta,
+    * schema, newest version, manifest) is resolved once per call. */
   def applyRelease(
       spark: SparkSession,
       dir: String,
@@ -490,8 +469,11 @@ object GraphStore {
     val groups = groups0.localCheckpoint()
 
     val d = new ReleaseDeltas(seqs, featRel, groups)
-    val gfeDelta = d.gfeDelta
     val seqDelta = d.seqDelta
+    // ONE head per apply: the guard, every table's apply, the twin
+    // lookups and the marker read each table's meta, schema, newest
+    // version and manifest through this pin, so each is read once
+    val head = new Pin(spark, dir, None, None)
 
     // The per-table MERGEs are independent stores (disjoint
     // directories, own manifests) — run them as concurrent job
@@ -506,55 +488,31 @@ object GraphStore {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val stats =
-      new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
-    def apply1(table: String, delta: DataFrame,
-        merge: (DataFrame, DataFrame) => DataFrame): Future[Unit] =
-      Future {
-        stats.put(table, applyTable(spark, s"$dir/$table", delta, merge))
-        ()
-      }
-    // Dual-anchor twins receive the SAME delta under the SAME merge —
-    // sound because every twin bucket key is a function of the merge
-    // key, so both layouts' bucket-local merges compute the identical
-    // relation. The delta is checkpointed once so the (possibly deep)
-    // delta pipeline doesn't run once per layout (the dirty rewrite
-    // sees the checkpoint and does not copy it again).
-    val twins = revAnchors.map(_._1)
-      .filter(t => StoreMeta.read(spark, s"$dir/${t}__rev").nonEmpty).toSet
-    def applyEdge(table: String, delta: DataFrame,
-        merge: (DataFrame, DataFrame) => DataFrame): Seq[Future[Unit]] =
-      if (!twins(table)) Seq(apply1(table, delta, merge))
-      else {
-        val d = delta.localCheckpoint()
-        Seq(apply1(table, d, merge), apply1(s"${table}__rev", d, merge))
-      }
 
     // Bijection guard BEFORE any apply commits (serial — probing the
     // Sequence store while its own overwrite apply runs would race
     // and could read post-merge state, masking the violation): the
     // incremental HAS_SEQUENCE probe is sound iff seq_id ↔ name
-    // stays 1:1 across releases (see GraphLoad.applyRelease — a
-    // repeated seq_id under a new name needs a reverse probe this
-    // release-sized join cannot see; a renamed seq_id strands
-    // accumulated edges). Both checks are O(dirty-bucket) index
-    // reads, the same I/O class as the apply itself.
+    // stays 1:1 across releases (a repeated seq_id under a new name
+    // needs a reverse probe this release-sized join cannot see; a
+    // renamed seq_id strands accumulated edges). Both checks are
+    // O(dirty-bucket) index reads of the head, the same I/O class as
+    // the apply itself.
     locally {
       // the two directions are independent index probes over disjoint
       // tables (SEQ_INDEX, Sequence) — concurrent job streams (r15
       // opt); both still complete BEFORE any apply commits (probing
       // Sequence while its own overwrite apply runs would race)
       val crossNameF = Future {
-        stateForKeys(spark, s"$dir/SEQ_INDEX",
-          seqDelta.select("seq_id"), Seq("seq_id"))
+        head("SEQ_INDEX").stateOfKeys(seqDelta.select("seq_id"),
+          Seq("seq_id"))
           .withColumnRenamed("name", "_oname")
           .join(broadcast(seqDelta.select(col("seq_id"), col("name"))),
             Seq("seq_id"))
           .where(col("name") =!= col("_oname")).limit(1).count()
       }
       val reIdF = Future {
-        stateForKeys(spark, s"$dir/Sequence",
-          seqDelta.select("name"), Seq("name"))
+        head("Sequence").stateOfKeys(seqDelta.select("name"), Seq("name"))
           .select(col("name"), col("seq_id").as("_oid"))
           .join(broadcast(seqDelta.select(col("name"), col("seq_id"))),
             Seq("name"))
@@ -570,66 +528,66 @@ object GraphStore {
           "rebuild the store from a refold")
     }
 
-    // SEQ_INDEX first, then the HAS_SEQUENCE delta from the probe
-    // (chained so the probe reads this release's committed index);
-    // the main table and its dual-anchor twin then apply as TWO
-    // dependent futures off the one checkpointed delta — concurrent,
-    // like every other twin pair (they are disjoint stores)
-    val hsDeltaF = apply1("SEQ_INDEX",
-        seqDelta.select(col("seq_id"), col("name")),
-        createOnly(Seq("seq_id", "name")))
-      .map { _ =>
-        val pairs = d.pairsDelta.localCheckpoint()
-        val hsDelta = stateForKeys(
-          spark, s"$dir/SEQ_INDEX", pairs, Seq("seq_id"))
-          .withColumnRenamed("name", "dst")
-          .join(broadcast(pairs), Seq("seq_id"))
-          .select("src", "dst")
-        if (twins("HAS_SEQUENCE")) hsDelta.localCheckpoint() else hsDelta
-      }
-    val hsApplies = ("HAS_SEQUENCE" +:
-        (if (twins("HAS_SEQUENCE")) Seq("HAS_SEQUENCE__rev") else Nil))
-      .map(t => hsDeltaF.map { hs =>
-        stats.put(t, applyTable(spark, s"$dir/$t", hs,
-          createOnly(Seq("src", "dst"))))
-        ()
-      })
-
-    val independent = (Seq(
-      apply1("GFE", gfeDelta, createOnly(Seq("name"))),
-      apply1("Sequence", seqDelta, overwrite(Seq("name"))),
-      apply1("Feature", d.featDelta, createOnly(featKeys)),
-      apply1("IPD_Allele", d.alleleDelta, mergeAllele),
-      apply1("IPD_Accession", d.accDelta, createOnly(Seq("name"))),
-      // SUBMITTED create-only on dst: only this release's genuinely-
-      // new GFEs land (existing dsts keep their first submit_date)
-      apply1("SUBMITTED", d.submittedDelta(lit(submitDate)),
-        createOnly(Seq("src", "dst")))) ++ hsApplies) ++
-      applyEdge("HAS_IPD_ALLELE", d.relsDelta, mergeReleases) ++
-      applyEdge("HAS_IPD_ACCESSION", d.hasAccDelta,
-        createOnly(Seq("src", "dst"))) ++
-      applyEdge("HAS_FEATURE", d.hasFeatDelta, createOnly(hfKeys))
+    // ONE apply step per (table, delta, merge), each a future of
+    // (table, (dirty buckets, committed version, committed manifest)).
+    // A dual-anchor twin receives the SAME delta under the SAME merge —
+    // sound because every twin bucket key is a function of the merge
+    // key, so both layouts' bucket-local merges compute the identical
+    // relation — as its own concurrent apply (they are disjoint
+    // stores). The delta is checkpointed once so the (possibly deep)
+    // delta pipeline doesn't run once per layout (the dirty rewrite
+    // sees the checkpoint and does not copy it again).
+    def step(table: String, delta: Future[DataFrame], merge: Merge) = {
+      val main = head(table)
+      val shared =
+        if (main.twin.isEmpty) delta else delta.map(_.localCheckpoint())
+      (main +: main.twin.toSeq).map(v =>
+        shared.map(dl => v.name -> applyTable(spark, v, dl, merge)))
+    }
+    def ready(delta: DataFrame) = Future.successful(delta)
+    // SEQ_INDEX first, then the HAS_SEQUENCE delta from a probe of the
+    // manifest that apply COMMITTED (chained, so a new Sequence node is
+    // visible to its own release's pairs — never the head's manifest)
+    val seqIndex = step("SEQ_INDEX",
+      ready(seqDelta.select(col("seq_id"), col("name"))),
+      createOnly(Seq("seq_id", "name")))
+    val hsDelta = seqIndex.head.map { case (_, (_, _, committed)) =>
+      val pairs = d.pairsDelta.localCheckpoint()
+      head("SEQ_INDEX").stateOfKeys(pairs, Seq("seq_id"), committed)
+        .withColumnRenamed("name", "dst")
+        .join(broadcast(pairs), Seq("seq_id"))
+        .select("src", "dst")
+    }
+    val applies = seqIndex ++
+      step("HAS_SEQUENCE", hsDelta, createOnly(Seq("src", "dst"))) ++
+      Seq[(String, DataFrame, Merge)](
+        ("GFE", d.gfeDelta, createOnly(Seq("name"))),
+        ("Sequence", seqDelta, overwrite(Seq("name"))),
+        ("Feature", d.featDelta, createOnly(featKeys)),
+        ("IPD_Allele", d.alleleDelta, mergeAllele),
+        ("IPD_Accession", d.accDelta, createOnly(Seq("name"))),
+        // SUBMITTED create-only on dst: only this release's genuinely-
+        // new GFEs land (existing dsts keep their first submit_date)
+        ("SUBMITTED", d.submittedDelta(lit(submitDate)),
+          createOnly(Seq("src", "dst"))),
+        ("HAS_IPD_ALLELE", d.relsDelta, mergeReleases),
+        ("HAS_IPD_ACCESSION", d.hasAccDelta, createOnly(Seq("src", "dst"))),
+        ("HAS_FEATURE", d.hasFeatDelta, createOnly(hfKeys))
+      ).flatMap { case (t, delta, merge) => step(t, ready(delta), merge) }
     // Completion BARRIER before failure propagation: if one table's
     // apply fails, the others must finish (or fail) before this call
     // returns — a caller's retry must never race a still-running
     // sibling applyTable on the same table directory (two writers
     // would both read manifest v and both commit v+1).
-    independent.foreach(f => Await.ready(f, Duration.Inf))
-    independent.foreach(Await.result(_, Duration.Inf))
-    import scala.jdk.CollectionConverters._
-    val applied = stats.asScala.toMap
+    applies.foreach(f => Await.ready(f, Duration.Inf))
+    val applied = applies.map(Await.result(_, Duration.Inf)).toMap
     // Publish the release marker LAST — the store-level commit point.
-    // Tables this release did not apply (Submitter) carry their
-    // version forward from the previous marker.
-    val carried = markerIds(spark, dir).lastOption
-      .fold(Map.empty[String, Int])(readMarker(spark, dir, _))
-    val versions = tablesOf(spark, dir).map { t =>
-      t -> applied.get(t).map(_._2)
-        .orElse(carried.get(t))
-        .getOrElse(latestVersion(spark, s"$dir/$t"))
-    }.toMap
+    // Tables this release did not apply (Submitter) carry their head
+    // version.
+    val versions = head.tables
+      .map(t => t -> applied.get(t).fold(head(t).version)(_._2)).toMap
     writeMarker(spark, dir, versions)
-    ApplyStats(applied.map { case (t, (n, _)) => t -> n }, versions)
+    ApplyStats(applied.map { case (t, (n, _, _)) => t -> n }, versions)
   }
 
   /** The graph as of the newest COMPLETE release — every table pinned
@@ -823,7 +781,7 @@ object GraphStore {
   def createViews(spark: SparkSession, dir: String, prefix: String = "",
       asOf: Option[Int] = None): Seq[String] = {
     val p = pin(spark, dir, asOf)
-    val ts = tablesOf(spark, dir).filterNot(_.endsWith("__rev"))
+    val ts = p.tables.filterNot(_.endsWith("__rev"))
     ts.foreach(t => sqlFrame(spark, p(t)).createOrReplaceTempView(prefix + t))
     ts.map(prefix + _)
   }
@@ -855,27 +813,6 @@ object GraphStore {
       keys, "left_semi")
   }
 
-  /** GC superseded versions of every table (the
-    * [[EventStreams.cdcVacuum]] dual, per table) plus superseded
-    * release markers. Returns total (buckets, manifests) deleted.
-    *
-    * APPLIER INTERLOCK: a concurrent [[applyRelease]] commits
-    * per-table manifests first and publishes its marker LAST, so
-    * mid-apply the newest marker pins versions BEHIND each table's
-    * latest manifest. A naive `keepVersions = 1` would then delete
-    * the very manifests serving reads pin to (the data loss happens
-    * even though read() fails loudly after the fact). Vacuum
-    * therefore WIDENS the per-table window to always reach the
-    * version the newest marker pins — `keepVersions` is a floor, not
-    * an absolute — and the widening is race-safe without any lock:
-    * markers only move FORWARD, so a marker read at vacuum start can
-    * only pin versions ≤ what any concurrent applier publishes,
-    * i.e. a stale read only widens the kept window further.
-    *
-    * Marker retention is tied to the same window: a superseded
-    * marker survives iff every manifest version it pins survived
-    * this vacuum (so a reader pinned to it keeps working); markers
-    * whose pinned manifests are gone are deleted with the data. */
   /** Re-bucket every table to a new bucket count — the GROWTH lever:
     * the count is a layout property fixed at [[init]], and a store
     * that grew 100× otherwise grows each bucket unboundedly (probe
@@ -900,14 +837,13 @@ object GraphStore {
     *    intact and the stale claims naming the retry remedy. */
   def rebucket(spark: SparkSession, dir: String, newBuckets: Int): Unit = {
     require(newBuckets > 0, "newBuckets must be positive")
-    val tables = tablesOf(spark, dir)
-    // PHASE 1 — claim every table's next version before touching any
-    // data: a concurrent applier (or a second rebucket) fails here,
-    // and a claim conflict aborts the whole migration before a
-    // single bucket is written
-    val claimed = tables.map { t =>
-      val tdir = s"$dir/$t"
-      val v = latestVersion(spark, tdir)
+    // PHASE 1 — claim every table's next version (after its head's)
+    // before touching any data: a concurrent applier (or a second
+    // rebucket) fails here, and a claim conflict aborts the whole
+    // migration before a single bucket is written
+    val head = new Pin(spark, dir, None, None)
+    val claimed = head.tables.map { t =>
+      val (tdir, v) = (head(t).tdir, head(t).version)
       BucketStore.claim(spark, tdir, v + 1) { claim =>
         s"$tdir: version ${v + 1} is already claimed — a concurrent " +
           "applier (or crashed one) holds it; rebucket needs the store " +
@@ -928,15 +864,14 @@ object GraphStore {
     val p = pin(spark, dir, None)
     val rewrites = claimed.map { case (t, v) =>
       Future {
-        val tdir = s"$dir/$t"
-        val (meta, schema) = (p(t).meta, p(t).schema)
+        val (tdir, meta) = (head(t).tdir, head(t).meta)
         // bloom sidecars and zone stats rebuild with the layout (every
         // bucket is rewritten — this is also what restores a bloom's
         // fp ratio after the per-bucket key count outgrew its width)
         EventStreams.writeManifestExclusiveFull(spark,
           s"$tdir/manifest/v${v + 1}",
           BucketStore.writeVersion(spark, tdir, v + 1, p(t).state,
-            meta.keys.get, newBuckets, meta, schema))
+            meta.keys.get, newBuckets, meta, p(t).schema))
         StoreMeta.write(spark, tdir, meta.copy(buckets = newBuckets))
         t -> (v + 1)
       }
@@ -980,7 +915,7 @@ object GraphStore {
       targetBucketBytes: Long = 1L << 30): Seq[LayoutStat] = {
     require(targetBucketBytes > 0, "targetBucketBytes must be positive")
     val p = pin(spark, dir, None)
-    tablesOf(spark, dir).map { t =>
+    p.tables.map { t =>
       val tdir = s"$dir/$t"
       val m = p(t).manifest
       val sizes: Seq[Long] = m.toSeq.sortBy(_._1).map {
@@ -1017,6 +952,27 @@ object GraphStore {
     }
   }
 
+  /** GC superseded versions of every table (the
+    * [[EventStreams.cdcVacuum]] dual, per table) plus superseded
+    * release markers. Returns total (buckets, manifests) deleted.
+    *
+    * APPLIER INTERLOCK: a concurrent [[applyRelease]] commits
+    * per-table manifests first and publishes its marker LAST, so
+    * mid-apply the newest marker pins versions BEHIND each table's
+    * latest manifest. A naive `keepVersions = 1` would then delete
+    * the very manifests serving reads pin to (the data loss happens
+    * even though read() fails loudly after the fact). Vacuum
+    * therefore WIDENS the per-table window to always reach the
+    * version the newest marker pins — `keepVersions` is a floor, not
+    * an absolute — and the widening is race-safe without any lock:
+    * markers only move FORWARD, so a marker read at vacuum start can
+    * only pin versions ≤ what any concurrent applier publishes,
+    * i.e. a stale read only widens the kept window further.
+    *
+    * Marker retention is tied to the same window: a superseded
+    * marker survives iff every manifest version it pins survived
+    * this vacuum (so a reader pinned to it keeps working); markers
+    * whose pinned manifests are gone are deleted with the data. */
   def vacuum(spark: SparkSession, dir: String,
       keepVersions: Int = 2): (Int, Int) = {
     val (fs, root) = EventStreams.hadoopFs(spark, dir)

@@ -5,15 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** ONE derivation of a release's per-table MERGE deltas — the
   * load.cyp row semantics (gfe-db/database/neo4j/cypher/load.cyp) as
-  * release-sized frames, consumed by BOTH incremental apply paths:
-  * [[GraphLoad.applyRelease]] (whole-frame MERGE) and
-  * [[GraphStore.applyRelease]] (bucket-local MERGE). The two paths
-  * differ only in how a delta meets existing state (anti-join vs
-  * dirty-bucket rewrite); what a release *means* — which rows, which
-  * keys, which payload columns — must never be allowed to drift
-  * between them, so it is defined exactly once here. (DedupQueries
-  * documents the same hazard for its band-key format: a second copy
-  * of a key derivation is a silent-drift bug waiting for an edit.)
+  * release-sized frames, consumed by the one incremental apply,
+  * [[GraphStore.applyRelease]] (bucket-local MERGE). What a release
+  * *means* — which rows, which keys, which payload columns — is
+  * defined exactly once here, beside [[MergePolicies]], and the
+  * store fold is spec-pinned equal to [[GraphLoad.loadAll]]'s refold
+  * of the same releases.
   *
   * Every frame is release-sized (≤ tens of thousands of rows) and
   * broadcastable; nothing here touches existing graph state.
@@ -114,7 +111,6 @@ private[graph] object ReleaseDeltas {
 
 /** The load.cyp ON CREATE / ON MATCH policies as frame-level merges
   * `(state, delta) => merged` — defined once, applied by
-  * [[GraphLoad.applyRelease]] to whole tables and by
   * [[GraphStore.applyRelease]] to dirty-bucket slices (sound
   * bucket-locally because every policy is key-local and the bucket
   * function is a pure function of the merge key). */

@@ -131,7 +131,7 @@ class GraftStoreSource extends RelationProvider with StreamSourceProvider
           // line (GraphStore tables, sink-created stores), the TRUE
           // bucket key is knowable — cross-check it (including
           // declaration ORDER: the hash is order-sensitive) and fail
-          // loudly like stateForKeys' 'would miss rows' require,
+          // loudly like GraphStore.requireBucketKeys' 'would miss rows',
           // instead of silently pruning to wrong buckets and dropping
           // rows. Bare cdcApply stores persist only the count (one
           // line) — existence-check above is all that's possible there.
@@ -269,7 +269,7 @@ class GraftStoreFileIndex(
     bloomBits: Option[Int] = None) extends FileIndex {
 
   // manifest width, not meta width: a manifest always carries every
-  // bucket id of its layout (see GraphStore.stateForKeys)
+  // bucket id of its layout (see BucketStore.bucketsFor)
   private val width = manifest.size
 
   /** How many buckets this index had to LIST at construction — 0 on a

@@ -266,90 +266,4 @@ class GraphLoadSpec extends AnyFunSuite {
       .exists(!_.contains("locus:")),
       "partition column must not be read from data files")
   }
-
-  // ---- incremental per-release MERGE (applyRelease) ----
-
-  /** Hand-built 3-release policy matrix: every load.cyp merge policy
-    * exercised where incremental and refold could diverge. */
-  test("applyRelease fold == loadAll on a policy-matrix synthetic") {
-    val Seq(r1, r2, r3) = LoadFixtures.policyMatrix(spark)
-    val refold = GraphLoad.loadAll(spark, Seq(r1, r2, r3))
-    val inc = GraphLoad.applyRelease(spark,
-      GraphLoad.applyRelease(spark,
-        GraphLoad.loadAll(spark, Seq(r1)), r2), r3)
-    LoadFixtures.assertSameGraph(refold, inc, "policy matrix")
-    // point-check the interesting policies on the incremental result
-    val seqA = inc.sequence.where(col("name") === "A").collect().head
-    assert(seqA.getAs[Long]("length") == 5L, "Sequence overwrite (ON MATCH)")
-    val h1 = inc.ipdAllele.where(col("name") === "HLA-A*01:01").collect().head
-    assert(h1.getAs[String]("G") == "g2", "G overwritten by later release")
-    val h2 = inc.ipdAllele.where(col("name") === "HLA-A*02:01").collect().head
-    assert(h2.getAs[String]("G") == null && h2.getAs[String]("lg") == "l1",
-      "lg set without touching absent G")
-    val accA = inc.hasIpdAccession
-      .where(col("src") === "A" && col("dst") === "AC1").collect().head
-    assert(accA.getAs[String]("release") == "3.57.0",
-      "HAS_IPD_ACCESSION first-write-wins")
-    val relsA = inc.hasIpdAllele.where(col("src") === "A")
-      .collect().head.getSeq[Int](2)
-    assert(relsA == Seq(3570, 3580), "releases accumulate sorted distinct")
-    // r2 carries a groups row for HLA-B*07:02 one release BEFORE its
-    // first seqs listing (r3): load.cyp:63 MATCHes the allele, so the
-    // row updates nothing — in the refold and the fold alike
-    val d = inc.ipdAllele.where(col("name") === "HLA-B*07:02").collect().head
-    assert(d.getAs[String]("G") == null,
-      "groups row preceding the allele's first listing is a MATCH no-op")
-    assert(inc.ipdAllele.where(col("name") === "HLA-Z*99:99").count() == 0 &&
-      refold.ipdAllele.where(col("name") === "HLA-Z*99:99").count() == 0,
-      "a never-listed groups-only name creates no allele")
-  }
-
-  test("applyRelease rejects seq_id/name bijection violations loudly") {
-    // The incremental HAS_SEQUENCE probe assumes seq_id ↔ name is
-    // 1:1 across releases; a violating release must fail loudly
-    // (silently it would diverge from the refold — the refold's
-    // final-state join sees cross edges the delta probe cannot).
-    val Seq(r1, _, _) = LoadFixtures.policyMatrix(spark)
-    val g1 = GraphLoad.loadAll(spark, Seq(r1))
-    // r1's sequence s1 (name A) reappears under NEW gfe name Z
-    val crossName = ("3580", LoadFixtures.seqsDf(spark, "3.58.0", Seq(
-      ("Z", "AC9", "HLA-A*09:01", "s1", "ACGT", 4L))),
-      LoadFixtures.featsDf(spark, Seq(("Z", "EXON", 1, "9", "AC"))),
-      LoadFixtures.groupsDf(spark, Seq.empty))
-    val e1 = intercept[IllegalArgumentException] {
-      GraphLoad.applyRelease(spark, g1, crossName)
-        .hasSequence.count()
-    }
-    assert(e1.getMessage.contains("new GFE name"), e1.getMessage)
-    // name A re-ships with a CHANGED sequence (new seq_id s9)
-    val reId = ("3580", LoadFixtures.seqsDf(spark, "3.58.0", Seq(
-      ("A", "AC1", "HLA-A*01:01", "s9", "AAAA", 4L))),
-      LoadFixtures.featsDf(spark, Seq(("A", "EXON", 1, "1", "AC"))),
-      LoadFixtures.groupsDf(spark, Seq.empty))
-    val e2 = intercept[IllegalArgumentException] {
-      GraphLoad.applyRelease(spark, g1, reId).hasSequence.count()
-    }
-    assert(e2.getMessage.contains("changed its sequence"), e2.getMessage)
-  }
-
-  test("applyRelease fold == loadAll on the two-release IMGT fixture") {
-    import graft.gfe.ArdReduction
-    def ardOf(rel: String) = ArdReduction.fromNames(
-      ImgtFlatFile.fromText(spark,
-        ImgtFlatFile.resourceText(s"/graft/hla.$rel.dat"))
-        .toDF().select(split(col("description"), ",")
-          .getItem(0).as("hla_name")))
-    val r1 = GfeBuild.run(spark, ImgtFlatFile.fromText(spark,
-      ImgtFlatFile.resourceText("/graft/hla.3560.dat")), "3560",
-      ard = Some(ardOf("3560")))
-    val r2 = GfeBuild.run(spark, ImgtFlatFile.fromText(spark,
-      ImgtFlatFile.resourceText("/graft/hla.3570.dat")), "3570",
-      registry = Some(r1.registry), ard = Some(ardOf("3570")))
-    val rel1 = ("3560", r1.gfeSequences, r1.allFeatures, r1.allGroups)
-    val rel2 = ("3570", r2.gfeSequences, r2.allFeatures, r2.allGroups)
-    val refold = GraphLoad.loadAll(spark, Seq(rel1, rel2))
-    val inc = GraphLoad.applyRelease(spark,
-      GraphLoad.loadAll(spark, Seq(rel1)), rel2)
-    LoadFixtures.assertSameGraph(refold, inc, "IMGT fixture")
-  }
 }

@@ -19,8 +19,32 @@ class GraphStoreSpec extends AnyFunSuite {
     GraphStore.applyRelease(spark, dir, r2)
     GraphStore.applyRelease(spark, dir, r3)
     val refold = GraphLoad.loadAll(spark, Seq(r1, r2, r3))
-    LoadFixtures.assertSameGraph(refold, GraphStore.read(spark, dir),
-      "bucketed store fold")
+    val fold = GraphStore.read(spark, dir)
+    LoadFixtures.assertSameGraph(refold, fold, "bucketed store fold")
+    // point-check the interesting policies on the store fold
+    val seqA = fold.sequence.where(col("name") === "A").collect().head
+    assert(seqA.getAs[Long]("length") == 5L, "Sequence overwrite (ON MATCH)")
+    val h1 = fold.ipdAllele.where(col("name") === "HLA-A*01:01").collect().head
+    assert(h1.getAs[String]("G") == "g2", "G overwritten by later release")
+    val h2 = fold.ipdAllele.where(col("name") === "HLA-A*02:01").collect().head
+    assert(h2.getAs[String]("G") == null && h2.getAs[String]("lg") == "l1",
+      "lg set without touching absent G")
+    val accA = fold.hasIpdAccession
+      .where(col("src") === "A" && col("dst") === "AC1").collect().head
+    assert(accA.getAs[String]("release") == "3.57.0",
+      "HAS_IPD_ACCESSION first-write-wins")
+    val relsA = fold.hasIpdAllele.where(col("src") === "A")
+      .collect().head.getSeq[Int](2)
+    assert(relsA == Seq(3570, 3580), "releases accumulate sorted distinct")
+    // r2 carries a groups row for HLA-B*07:02 one release BEFORE its
+    // first seqs listing (r3): load.cyp:63 MATCHes the allele, so the
+    // row updates nothing — in the refold and the fold alike
+    val d = fold.ipdAllele.where(col("name") === "HLA-B*07:02").collect().head
+    assert(d.getAs[String]("G") == null,
+      "groups row preceding the allele's first listing is a MATCH no-op")
+    assert(fold.ipdAllele.where(col("name") === "HLA-Z*99:99").count() == 0 &&
+      refold.ipdAllele.where(col("name") === "HLA-Z*99:99").count() == 0,
+      "a never-listed groups-only name creates no allele")
     // vacuum keeps the newest versions readable and drops superseded
     // files; the state must be byte-identical before/after
     val before = LoadFixtures.rowsOf(GraphStore.read(spark, dir).sequence)
@@ -48,8 +72,12 @@ class GraphStoreSpec extends AnyFunSuite {
   }
 
   test("store applyRelease rejects seq_id/name bijection violations loudly") {
-    // Same guard as GraphLoad.applyRelease, O(dirty-bucket) probes:
-    // a violating release must fail BEFORE any table commits.
+    // The incremental HAS_SEQUENCE probe assumes seq_id ↔ name is 1:1
+    // across releases (silently, a violation would diverge from the
+    // refold, whose final-state join sees cross edges the delta probe
+    // cannot); the guard checks both directions with O(dirty-bucket)
+    // probes, and a violating release must fail BEFORE any table
+    // commits.
     val Seq(r1, _, _) = LoadFixtures.policyMatrix(spark)
     val dir = tmp("graphstore_guard")
     GraphStore.init(spark, dir, GraphLoad.loadAll(spark, Seq(r1)))
@@ -671,14 +699,30 @@ class GraphStoreSpec extends AnyFunSuite {
     val refold = GraphLoad.loadAll(spark, Seq(r1, r2, r3))
     LoadFixtures.assertSameGraph(refold, GraphStore.read(spark, dir),
       "dual-anchor fold")
-    // the twin serves the SAME relation: a reverse-key probe over
-    // every src equals the main table (applyRelease maintained both
-    // layouts through two releases)
+    // every twin serves the SAME relation: a probe of the twin's key
+    // over every value equals the main table's rows, read from the
+    // twin's files only (applyRelease maintained both layouts through
+    // two releases; HAS_SEQUENCE's twin is fed by the chained
+    // SEQ_INDEX probe, HAS_FEATURE's twin key has four parts)
+    val served = GraphStore.read(spark, dir)
+    Seq(
+      ("HAS_IPD_ALLELE", Seq("src"), served.hasIpdAllele),
+      ("HAS_IPD_ACCESSION", Seq("src"), served.hasIpdAccession),
+      ("HAS_SEQUENCE", Seq("dst"), served.hasSequence),
+      ("HAS_FEATURE", Seq("locus", "rank", "term", "accession"),
+        served.hasFeature)
+    ).foreach { case (t, keys, main) =>
+      val all = main.select(keys.map(col): _*).distinct()
+      val twin = GraphStore.probe(spark, dir, t, all, keys)
+      assert(LoadFixtures.rowsOf(twin) == LoadFixtures.rowsOf(main),
+        s"$t: the twin probed by (${keys.mkString(",")}) differs")
+      assert(twin.inputFiles.nonEmpty &&
+        twin.inputFiles.forall(_.contains(s"/${t}__rev/")),
+        s"$t: probe must read the twin: ${twin.inputFiles.mkString(", ")}")
+    }
     val allSrc = refold.hasIpdAllele.select("src").distinct()
     val viaTwin = GraphStore.probe(spark, dir, "HAS_IPD_ALLELE",
       allSrc, Seq("src"))
-    assert(LoadFixtures.rowsOf(viaTwin) ==
-      LoadFixtures.rowsOf(GraphStore.read(spark, dir).hasIpdAllele))
     // routing + pruning: the reverse probe reads ONLY __rev bucket
     // files, only the anchors' buckets
     import graft.streaming.EventStreams
