@@ -113,7 +113,10 @@ private[graph] object ReleaseDeltas {
   * `(state, delta) => merged` — defined once, applied by
   * [[GraphStore.applyRelease]] to dirty-bucket slices (sound
   * bucket-locally because every policy is key-local and the bucket
-  * function is a pure function of the merge key). */
+  * function is a pure function of the merge key). Within one release,
+  * rows that tie on a key are assumed to carry the same payload —
+  * the assumption [[GraphLoad.loadAll]]'s load_seq-ordered windows
+  * make too, since the rows of one release share a load_seq. */
 private[graph] object MergePolicies {
 
   /** ON CREATE only: existing keys win, new keys append. */
