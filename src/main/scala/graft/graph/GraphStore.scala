@@ -111,7 +111,7 @@ object GraphStore {
       .toSet
     schemaCache.compute(tdir, (_, hit) =>
       if (hit != null && hit._1 == stamp) hit
-      else (stamp, spark.read.parquet(s"$tdir/_empty").schema))._2
+      else (stamp, EventStreams.footerSchema(spark, s"$tdir/_empty")))._2
   }
 
   private def manifestAt(spark: SparkSession, tdir: String,
@@ -142,10 +142,11 @@ object GraphStore {
     * writer rather than trusting deployment discipline). `head` is the
     * table's view under the apply's head pin: its meta, schema, newest
     * version and that version's manifest, each read once per apply.
+    * `dirty` is the buckets the delta's keys hash to in that manifest.
     * Returns (dirty-bucket count — the I/O proportionality evidence
     * the spec asserts — , committed version, committed manifest). */
   private def applyTable(spark: SparkSession, head: Pin#View,
-      delta: DataFrame, merge: Merge)
+      delta: DataFrame, dirty: Set[Int], merge: Merge)
       : (Int, Int, Map[Int, EventStreams.BucketFiles]) = {
     val (tdir, meta, expectT) = (head.tdir, head.meta, head.schema)
     // SCHEMA GUARD, before the claim (a mismatched apply must not
@@ -201,11 +202,11 @@ object GraphStore {
         s"left a stale claim; if no writer is alive, delete $claim and " +
         "retry"
     }
-    val (dirty, next) = BucketStore.rewriteDirty(spark, tdir,
-      head.manifest, v + 1, delta, meta.keys.get, meta, expectT)(merge)
+    val next = BucketStore.rewriteDirty(spark, tdir, head.manifest, v + 1,
+      delta, dirty, meta.keys.get, meta, expectT)(merge)
     EventStreams.writeManifestExclusiveFull(
       spark, s"$tdir/manifest/v${v + 1}", next)
-    (dirty, v + 1, next)
+    (dirty.size, v + 1, next)
   }
 
   // ---- release markers: store-level atomicity ----
@@ -304,21 +305,13 @@ object GraphStore {
       def state: DataFrame =
         BucketStore.stateAt(spark, tdir, manifest, Some(schema))
 
-      /** The rows of ONLY the buckets of `m` (the pinned manifest unless
-        * given) that a (release-sized) key frame hashes to — the
-        * apply's index read: at scale a handful of bucket files, not
-        * the table. The bucket set is one job over the frame
-        * ([[BucketStore.bucketsFor]], bloom-gated on a keyBlooms
-        * store); [[probe]] hashes its probe-sized anchors on the driver
-        * instead. */
-      def stateOfKeys(keyRows: DataFrame, keys: Seq[String],
-          m: Map[Int, EventStreams.BucketFiles] = manifest): DataFrame = {
-        requireBucketKeys(tdir, meta, keys)
-        val hit = BucketStore.bucketsFor(spark, tdir, m, keys,
-          Right(keyRows), meta.bloomBits)
-        BucketStore.stateAt(spark, tdir, m.filter { case (k, _) => hit(k) },
-          Some(schema))
-      }
+      /** The rows of ONLY the `buckets` of `m` (the pinned manifest
+        * unless given) — the apply's index read of a release's dirty
+        * buckets: at scale a handful of bucket files, not the table. */
+      def stateOf(buckets: Set[Int],
+          m: Map[Int, EventStreams.BucketFiles] = manifest): DataFrame =
+        BucketStore.stateAt(spark, tdir,
+          m.filter { case (k, _) => buckets(k) }, Some(schema))
 
       /** The `graftstore` source's relation over the pinned version:
         * the persisted bucket keys and bloom bits arm its literal
@@ -450,6 +443,20 @@ object GraphStore {
     def total: Int = dirtyBuckets.values.sum
   }
 
+  /** The dirty buckets of every table a release applies to (all but
+    * the static Submitter) and of each `__rev` twin, by table
+    * directory name: the buckets its delta hashes to at `head`'s
+    * manifest width, found in ONE pass over the release
+    * ([[ReleaseDeltas.dirtySets]]) before any delta is built. */
+  private[graft] def dirtySets(head: Pin,
+      d: ReleaseDeltas): Map[String, Set[Int]] = {
+    val layouts = bucketKeys.keys.toSeq.filter(_ != "Submitter")
+      .flatMap(t => head(t) +: head(t).twin.toSeq)
+    layouts.map(_.name).zip(d.dirtySets(layouts.map(v =>
+      (v.name.stripSuffix("__rev"), v.meta.keys.get, v.manifest.size))))
+      .toMap
+  }
+
   /** MERGE one release into the store — O(dirty buckets) read+write
     * per table under the load.cyp policies ([[MergePolicies]]); the
     * one incremental MERGE, and fold equality with the refold
@@ -461,30 +468,31 @@ object GraphStore {
       release: (String, DataFrame, DataFrame, DataFrame),
       submitDate: java.sql.Date = java.sql.Date.valueOf("2026-01-01"))
       : ApplyStats = {
+    // deltas are release-sized; checkpoint (unless the caller did) so
+    // the (possibly 15-stage) build pipeline feeding them runs once,
+    // not once per table
+    def once(df: DataFrame) =
+      if (BucketStore.isCheckpoint(df)) df else df.localCheckpoint()
     val (_, seqs0, featRel0, groups0) = release
-    // deltas are release-sized; checkpoint so the (possibly 15-stage)
-    // build pipeline feeding them runs once, not once per table
-    val seqs = seqs0.localCheckpoint()
-    val featRel = featRel0.localCheckpoint()
-    val groups = groups0.localCheckpoint()
-
-    val d = new ReleaseDeltas(seqs, featRel, groups)
+    val d = new ReleaseDeltas(once(seqs0), once(featRel0), once(groups0))
     val seqDelta = d.seqDelta
     // ONE head per apply: the guard, every table's apply, the twin
     // lookups and the marker read each table's meta, schema, newest
     // version and manifest through this pin, so each is read once
     val head = new Pin(spark, dir, None, None)
+    // ONE dirty-set pass: the guard, the HAS_SEQUENCE probe and every
+    // rewrite read these sets, and no table collects its own
+    val dirty = dirtySets(head, d)
 
     // The per-table MERGEs are independent stores (disjoint
     // directories, own manifests) — run them as concurrent job
-    // streams. Each step is a handful of small jobs (dirty-bucket
-    // collect, bucket rewrite, manifest commit) whose cost at any
-    // scale is dominated by per-job latency, not compute; serialized
-    // they cost 11 × that latency per release (measured 10 s/release
-    // at fixture scale), interleaved the scheduler overlaps them
-    // (same trick as SCC's fwd/bwd fixpoints). Only ordering
-    // constraint: SEQ_INDEX commits before HAS_SEQUENCE probes it (a
-    // new Sequence node must be visible to its own release's pairs).
+    // streams. Each step is one merge-and-write plan plus a manifest
+    // commit, whose cost at fixture scale is dominated by per-job
+    // latency, not compute; serialized they cost 11 × that latency
+    // per release, interleaved the scheduler overlaps them (same
+    // trick as SCC's fwd/bwd fixpoints). Only ordering constraint:
+    // SEQ_INDEX commits before HAS_SEQUENCE probes it (a new Sequence
+    // node must be visible to its own release's pairs).
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -504,15 +512,14 @@ object GraphStore {
       // opt); both still complete BEFORE any apply commits (probing
       // Sequence while its own overwrite apply runs would race)
       val crossNameF = Future {
-        head("SEQ_INDEX").stateOfKeys(seqDelta.select("seq_id"),
-          Seq("seq_id"))
+        head("SEQ_INDEX").stateOf(dirty("SEQ_INDEX"))
           .withColumnRenamed("name", "_oname")
           .join(broadcast(seqDelta.select(col("seq_id"), col("name"))),
             Seq("seq_id"))
           .where(col("name") =!= col("_oname")).limit(1).count()
       }
       val reIdF = Future {
-        head("Sequence").stateOfKeys(seqDelta.select("name"), Seq("name"))
+        head("Sequence").stateOf(dirty("Sequence"))
           .select(col("name"), col("seq_id").as("_oid"))
           .join(broadcast(seqDelta.select(col("name"), col("seq_id"))),
             Seq("name"))
@@ -535,14 +542,14 @@ object GraphStore {
     // key, so both layouts' bucket-local merges compute the identical
     // relation — as its own concurrent apply (they are disjoint
     // stores). The delta is checkpointed once so the (possibly deep)
-    // delta pipeline doesn't run once per layout (the dirty rewrite
-    // sees the checkpoint and does not copy it again).
+    // delta pipeline doesn't run once per layout; a table without a
+    // twin reads its delta once, in its merge-and-write, uncheckpointed.
     def step(table: String, delta: Future[DataFrame], merge: Merge) = {
       val main = head(table)
       val shared =
         if (main.twin.isEmpty) delta else delta.map(_.localCheckpoint())
-      (main +: main.twin.toSeq).map(v =>
-        shared.map(dl => v.name -> applyTable(spark, v, dl, merge)))
+      (main +: main.twin.toSeq).map(v => shared.map(dl =>
+        v.name -> applyTable(spark, v, dl, dirty(v.name), merge)))
     }
     def ready(delta: DataFrame) = Future.successful(delta)
     // SEQ_INDEX first, then the HAS_SEQUENCE delta from a probe of the
@@ -552,10 +559,9 @@ object GraphStore {
       ready(seqDelta.select(col("seq_id"), col("name"))),
       createOnly(Seq("seq_id", "name")))
     val hsDelta = seqIndex.head.map { case (_, (_, _, committed)) =>
-      val pairs = d.pairsDelta.localCheckpoint()
-      head("SEQ_INDEX").stateOfKeys(pairs, Seq("seq_id"), committed)
+      head("SEQ_INDEX").stateOf(dirty("SEQ_INDEX"), committed)
         .withColumnRenamed("name", "dst")
-        .join(broadcast(pairs), Seq("seq_id"))
+        .join(broadcast(d.pairsDelta), Seq("seq_id"))
         .select("src", "dst")
     }
     val applies = seqIndex ++

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.streaming.EventStreams
 
 /** ONE derivation of a release's per-table MERGE deltas — the
   * load.cyp row semantics (gfe-db/database/neo4j/cypher/load.cyp) as
@@ -15,7 +16,7 @@ import org.apache.spark.sql.functions._
   * Every frame is release-sized (≤ tens of thousands of rows) and
   * broadcastable; nothing here touches existing graph state.
   */
-private[graph] final class ReleaseDeltas(
+private[graft] final class ReleaseDeltas(
     seqs: DataFrame, featRel: DataFrame, groups: DataFrame) {
 
   import ReleaseDeltas._
@@ -100,6 +101,56 @@ private[graph] final class ReleaseDeltas(
   val pairsDelta: DataFrame =
     seqs.select(col("gfe_name").as("src"), col("seq_id"))
       .dropDuplicates("src", "seq_id")
+
+  /** Each applied table's delta key columns as columns of the release
+    * relations (0 seqs, 1 featRel, 2 groups): every key column of a
+    * delta above is one of these columns, renamed at most, so a
+    * bucket hashed here is the delta's. HAS_SEQUENCE's
+    * delta is the SEQ_INDEX probe's result; with seq_id ↔ name 1:1
+    * (the apply's guard) both its ends are the pair's GFE name — a
+    * row without a seq_id adds a bucket the probe drops, which only
+    * rewrites unchanged rows. */
+  private val keyColumns: Map[String, Seq[(Int, Map[String, Column])]] = {
+    val gfe = col("gfe_name")
+    val feature = Seq("locus", "rank", "term", "accession")
+      .map(k => k -> col(k)).toMap
+    def ofSeqs(ks: (String, Column)*) = Seq(0 -> ks.toMap)
+    Map(
+      "GFE" -> ofSeqs("name" -> gfe),
+      "Sequence" -> ofSeqs("name" -> gfe),
+      "SEQ_INDEX" -> ofSeqs("seq_id" -> col("seq_id")),
+      "IPD_Accession" -> ofSeqs("name" -> col("acc_name")),
+      "IPD_Allele" -> Seq(0, 2).map(_ -> Map("name" -> col("hla_name"))),
+      "SUBMITTED" -> ofSeqs("dst" -> gfe),
+      "HAS_SEQUENCE" -> ofSeqs("src" -> gfe, "dst" -> gfe),
+      "HAS_IPD_ALLELE" -> ofSeqs("src" -> gfe, "dst" -> col("hla_name")),
+      "HAS_IPD_ACCESSION" -> ofSeqs("src" -> gfe, "dst" -> col("acc_name")),
+      "Feature" -> Seq(1 -> feature),
+      "HAS_FEATURE" -> Seq(1 -> (feature + ("src" -> gfe))))
+  }
+
+  /** The dirty buckets of every target — (table, bucket keys, width):
+    * a table or its `__rev` twin, whose delta's rows hash by those
+    * keys into that many buckets — found in ONE Spark execution over
+    * the release relations, before any delta is built. Each set is
+    * what [[graft.streaming.BucketStore.bucketsFor]] finds over the
+    * table's delta. */
+  def dirtySets(targets: Seq[(String, Seq[String], Int)]): Seq[Set[Int]] = {
+    val perRelation = targets.zipWithIndex.flatMap { case ((t, keys, w), i) =>
+      keyColumns(t).map { case (r, cols) =>
+        require(keys.forall(cols.contains), s"$t's delta carries no " +
+          s"(${keys.mkString(",")}) key to bucket it by")
+        r -> struct(lit(i).as("t"),
+          EventStreams.bucketOf(keys.map(cols), w).as("b"))
+      }
+    }.groupMap(_._1)(_._2)
+    val rels = Seq(seqs, featRel, groups)
+    val hit = perRelation.map { case (r, bs) =>
+        rels(r).select(inline(array(bs: _*)))
+      }.reduce(_ unionByName _)
+      .distinct().collect().groupMap(_.getInt(0))(_.getInt(1))
+    targets.indices.map(i => hit.getOrElse(i, Array.empty[Int]).toSet)
+  }
 }
 
 private[graph] object ReleaseDeltas {

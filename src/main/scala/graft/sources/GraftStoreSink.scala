@@ -365,9 +365,10 @@ class GraftStoreSink(
     // later query's select order must not be able to skew them
     def storeOrder(df: DataFrame) =
       df.select(effSchema.fieldNames.map(col).toIndexedSeq: _*)
-    val (_, next) = BucketStore.rewriteDirty(spark, dir,
-        EventStreams.readManifestFull(spark, s"$dir/manifest/v$v"), v + 1,
-        delta, keys, meta, effSchema) { (state, d) =>
+    val base = EventStreams.readManifestFull(spark, s"$dir/manifest/v$v")
+    val next = BucketStore.rewriteDirty(spark, dir, base, v + 1, delta,
+        BucketStore.bucketsFor(spark, dir, base, keys, Right(delta), None),
+        keys, meta, effSchema) { (state, d) =>
       policy match {
         case "upsert" =>
           val rows = storeOrder(d).dropDuplicates(keys)

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, XxHash64}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.functions.{col, collect_set, slice, sort_array, xxhash64}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.sources.GraftStoreFileIndex
@@ -21,8 +20,9 @@ import EventStreams.{BucketFiles, readSmallFile, writeSmallFile}
   *    the bloom sidecars and zone stats the meta declares, returned as
   *    the version's manifest entries;
   *  - [[rewriteDirty]]: one MERGE step — the buckets a delta's keys
-  *    hash to are read at the base manifest, merged, rewritten as a
-  *    new version, and every other bucket is inherited by reference;
+  *    hash to (the caller's dirty set) are read at the base manifest,
+  *    merged, rewritten as a new version, and every other bucket is
+  *    inherited by reference;
   *  - [[stateAt]] and [[relation]]: the one reader — a pinned manifest
   *    as a relation over its recorded files, for native reads and the
   *    `graftstore` source alike;
@@ -136,7 +136,7 @@ object BucketStore {
     * persisted as a local checkpoint is. A plain LogicalRDD (a
     * foreachBatch or sink batch) re-runs its pipeline per action and
     * does not count. */
-  private def isCheckpoint(df: DataFrame): Boolean =
+  private[graft] def isCheckpoint(df: DataFrame): Boolean =
     df.queryExecution.logical match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.isCheckpointed ||
@@ -144,39 +144,42 @@ object BucketStore {
       case _ => false
     }
 
-  /** One MERGE step of a store: route `delta` by `keys` at the BASE
-    * manifest's width (the delta must land in the buckets the base's
-    * rows were hashed into, whatever the meta says now — a merge
-    * stays consistent right after a crashed rebucket), read only those
-    * dirty buckets at the base version, `merge(state, delta)` them
-    * (key-local), and [[writeVersion]] the result as `version`. Every
-    * other bucket inherits its base entry (version, file and zone
-    * stats) by reference, so the I/O is O(dirty buckets), never
-    * O(state). Returns (dirty-bucket count, the next manifest) for
-    * the caller to commit.
+  /** One MERGE step of a store: read the `dirty` buckets at the base
+    * version, `merge(state, delta)` them (key-local), and
+    * [[writeVersion]] the result as `version`. Every other bucket
+    * inherits its base entry (version, file and zone stats) by
+    * reference, so the I/O is O(dirty buckets), never O(state).
+    * Returns the next manifest for the caller to commit.
     *
-    * A delta that is not already a checkpoint is checkpointed LAZILY:
-    * the dirty-bucket collect is its first action and materializes the
-    * blocks as it runs, so the delta pipeline runs once without an
-    * extra job; a caller that shares one delta across several stores
-    * (the dual-anchor twins) checkpoints it once itself. */
+    * `dirty` is the caller's: every bucket `delta`'s `keys` hash to at
+    * the BASE manifest's width (the delta must land in the buckets
+    * the base's rows were hashed into, whatever the meta says now — a
+    * merge stays consistent right after a crashed rebucket), as
+    * [[bucketsFor]] finds it without bloom gating. A superset only
+    * rewrites unchanged rows; a merged row outside the set fails
+    * loudly before the caller can commit. The delta is read by the
+    * merge-and-write alone, so a delta used once needs no checkpoint;
+    * one several stores share (the dual-anchor twins) is checkpointed
+    * once by its caller. */
   private[graft] def rewriteDirty(spark: SparkSession, dir: String,
       base: Map[Int, BucketFiles], version: Int, delta: DataFrame,
-      keys: Seq[String], meta: StoreMeta, schema: StructType)(
-      merge: (DataFrame, DataFrame) => DataFrame)
-      : (Int, Map[Int, BucketFiles]) = {
-    val d = if (isCheckpoint(delta)) delta
-      else delta.localCheckpoint(eager = false)
-    val dirty = bucketsFor(spark, dir, base, keys, Right(d), None)
-    if (dirty.isEmpty) (0, base)
+      dirty: Set[Int], keys: Seq[String], meta: StoreMeta,
+      schema: StructType)(merge: (DataFrame, DataFrame) => DataFrame)
+      : Map[Int, BucketFiles] =
+    if (dirty.isEmpty) base
     else {
       val state = stateAt(spark, dir,
         base.filter { case (k, _) => dirty(k) }, Some(schema))
-      val written = writeVersion(spark, dir, version, merge(state, d), keys,
-        base.size, meta, schema)
-      (dirty.size, base ++ dirty.map(k => k -> written(k)))
+      val written = writeVersion(spark, dir, version, merge(state, delta),
+        keys, base.size, meta, schema)
+      val stray = written.collect {
+        case (k, bf) if bf.version >= 0 && !dirty(k) => k }
+      require(stray.isEmpty, s"$dir: merged rows landed in buckets " +
+        s"${stray.toSeq.sorted.mkString(",")} outside the dirty set " +
+        s"${dirty.toSeq.sorted.mkString(",")} — the caller's dirty set " +
+        "missed some of the delta's keys")
+      base ++ dirty.map(k => k -> written(k))
     }
-  }
 
   // ---- the read side: one relation, one key → bucket resolver ----
 
@@ -237,10 +240,10 @@ object BucketStore {
     *    types as Catalyst internal values, hashed on the driver
     *    ([[hashKey]]): no DataFrame, no job;
     *  - `Right(frame)`: a frame carrying the `keys` columns, in one job
-    *    that collects at most width bucket ids.
+    *    that collects at most width bucket ids (never bloom-gated).
     *
     * With `bloomBits` (a read that wants the keys' rows from a
-    * keyBlooms store) the set is BLOOM-GATED, the miss-skipping read:
+    * keyBlooms store) a `Left` set is BLOOM-GATED, the miss-skipping read:
     * a bucket whose `_bloom` sidecar, at its manifest-pinned version,
     * rejects every key aimed at it is definitely-miss and left out; a
     * missing sidecar keeps the bucket, and so does a bucket aimed at
@@ -262,12 +265,9 @@ object BucketStore {
         ts.map(hashKey(_, types, width)).groupMap(_._1)(_._2).toSeq
           .map { case (b, hs) => (b, hs.distinct.sorted.take(cap + 1)) }
       case Right(frame) =>
-        val b = EventStreams.bucketCol(keys, width).as("_b")
-        val hs = slice(sort_array(collect_set(xxhash64(keys.map(col): _*))),
-          1, cap + 1)
-        (if (gated) frame.groupBy(b).agg(hs) else frame.select(b).distinct())
-          .collect().toSeq
-          .map(r => (r.getInt(0), if (gated) r.getSeq[Long](1) else Nil))
+        require(!gated, s"$dir: a bloom-gated bucket set takes driver tuples")
+        frame.select(EventStreams.bucketCol(keys, width)).distinct()
+          .collect().toSeq.map(r => (r.getInt(0), Nil))
     }
     if (!gated) perBucket.map(_._1).toSet
     else {

@@ -390,7 +390,11 @@ object EventStreams {
     * files and routes batch deltas, so a key always lives in exactly
     * one bucket across every version. */
   private[graft] def bucketCol(stateKeys: Seq[String], numBuckets: Int): Column =
-    pmod(hash(stateKeys.map(col): _*), lit(numBuckets))
+    bucketOf(stateKeys.map(col), numBuckets)
+
+  /** [[bucketCol]] of key columns given as expressions. */
+  private[graft] def bucketOf(keys: Seq[Column], numBuckets: Int): Column =
+    pmod(hash(keys: _*), lit(numBuckets))
 
   private[graft] def hadoopFs(spark: SparkSession, dir: String) = {
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -557,13 +561,14 @@ object EventStreams {
   private[graft] def writeBuckets(
       state: DataFrame, stateKeys: Seq[String], numBuckets: Int,
       dir: String): Map[Int, Seq[(String, Long)]] = {
-    // exactly numBuckets partitions: one task and one file per
-    // bucket, instead of shuffle-width tasks each spraying files
-    // into every bucket dir (measured as part of the bucketing's
-    // per-batch constant at fixture scale)
+    // partitioned BY the bucket id, so each bucket's rows land in one
+    // shuffle partition and one file; no count, so AQE coalesces
+    // whole partitions by bytes — one task for a table of kilobytes,
+    // byte-sized tasks at scale, never one task per bucket (each
+    // task pays a fixed Hadoop Configuration deserialization)
     state
       .withColumn("_graft_bucket", bucketCol(stateKeys, numBuckets))
-      .repartition(numBuckets, col("_graft_bucket"))
+      .repartition(col("_graft_bucket"))
       .write.partitionBy("_graft_bucket").mode("overwrite").parquet(dir)
     val (fs, p) = hadoopFs(state.sparkSession, dir)
     val present = fs.listStatus(p).toSeq.map(_.getPath.getName)
@@ -862,9 +867,14 @@ object EventStreams {
         // version = batch id + 1 (the replay contract above); the
         // manifest write OVERWRITES, so a retry of this batch replaces
         // its own partial commit
-        val (_, next) = BucketStore.rewriteDirty(ss, stateDir,
-          readManifestFull(ss, manifestPath(id.toInt)), id.toInt + 1,
-          toDelta(batch.toDF()), stateKeys, meta, stateSchema)(merge)
+        // checkpointed lazily: the dirty-set collect is its first
+        // action and materializes it, so the merge reads the blocks
+        val delta = toDelta(batch.toDF()).localCheckpoint(eager = false)
+        val base = readManifestFull(ss, manifestPath(id.toInt))
+        val next = BucketStore.rewriteDirty(ss, stateDir, base,
+          id.toInt + 1, delta, BucketStore.bucketsFor(ss, stateDir, base,
+            stateKeys, Right(delta), None), stateKeys, meta,
+          stateSchema)(merge)
         writeManifestFull(ss, manifestPath(id.toInt + 1), next)
         ()
       }
@@ -903,8 +913,35 @@ object EventStreams {
     val es = fs.listStatus(root).toSeq.map(_.getPath.getName)
       .filter(_.matches("_empty_e\\d+"))
       .map(_.stripPrefix("_empty_e").toInt)
-    val src = if (es.isEmpty) s"$dir/_empty" else s"$dir/_empty_e${es.max}"
-    spark.read.parquet(src).schema
+    footerSchema(spark,
+      if (es.isEmpty) s"$dir/_empty" else s"$dir/_empty_e${es.max}")
+  }
+
+  /** The schema `spark.read.parquet(dir).schema` infers, read on the
+    * driver from the footer of `dir`'s first data file — that read's
+    * converter over the session's parquet options, every field
+    * nullable as a file source reports it — without its one-task
+    * inference job. */
+  private[graft] def footerSchema(spark: SparkSession,
+      dir: String): org.apache.spark.sql.types.StructType = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val (fs, p) = hadoopFs(spark, dir)
+    val file = fs.listStatus(p).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.minByOption(_.getPath.getName).getOrElse(
+      throw new java.io.FileNotFoundException(s"$dir: no parquet data file"))
+    val footer = new Footer(file.getPath, ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration),
+      ParquetMetadataConverter.NO_FILTER))
+    val read = ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    org.apache.spark.sql.types.StructType(read.fields.map(f =>
+      f.copy(dataType = normShape(f.dataType), nullable = true)))
   }
 
   /** Publish `evolved` as the store's next schema footer — write to a

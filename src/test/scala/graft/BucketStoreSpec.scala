@@ -41,13 +41,19 @@ class BucketStoreSpec extends AnyFunSuite {
     val counted = udf { (i: Int) => runs.add(1); i }.asNondeterministic()
     val delta = Seq((2, "B"), (9, "n")).toDF("id", "v")
       .select(counted(col("id")).as("id"), col("v"))
-    val (dirty, next) = BucketStore.rewriteDirty(spark, dir, base, 1, delta,
+    // the dirty set is the caller's: one that reads its delta twice
+    // (this set's collect, then upsert's two references) checkpoints
+    // it lazily, as cdcApply does, and the collect materializes it
+    val d = delta.localCheckpoint(eager = false)
+    val dirty = BucketStore.bucketsFor(spark, dir, base, Seq("id"), Right(d),
+      None)
+    val next = BucketStore.rewriteDirty(spark, dir, base, 1, d, dirty,
       Seq("id"), StoreMeta(4), schema)(upsert)
     assert(runs.value == 2, "the delta pipeline must run once per row")
     val hit = Seq(2, 9).map(i =>
       Seq(i).toDF("id").select(EventStreams.bucketCol(Seq("id"), 4))
         .head().getInt(0)).toSet
-    assert(dirty == hit.size)
+    assert(dirty == hit)
     assert(next.collect { case (k, bf) if bf.version == 1 => k }.toSet == hit)
     assert(next.filter { case (k, _) => !hit(k) } ==
       base.filter { case (k, _) => !hit(k) }, "clean buckets inherit")
@@ -65,9 +71,47 @@ class BucketStoreSpec extends AnyFunSuite {
       .select(counted(col("id")).as("id"), col("v")).localCheckpoint()
     assert(runs.value == 2)
     Seq((d1, b1), (d2, b2)).foreach { case (dir, base) =>
-      BucketStore.rewriteDirty(spark, dir, base, 1, shared, Seq("id"),
-        StoreMeta(4), schema)(upsert)
+      BucketStore.rewriteDirty(spark, dir, base, 1, shared,
+        BucketStore.bucketsFor(spark, dir, base, Seq("id"), Right(shared),
+          None), Seq("id"), StoreMeta(4), schema)(upsert)
     }
     assert(runs.value == 2, "the shared delta must not run again")
+  }
+
+  test("dirty rewrite: a delta the merge reads once runs once with no " +
+      "checkpoint, given a driver-known dirty set") {
+    val (dir, base, schema) = store("bucketstore_once")
+    val runs = spark.sparkContext.longAccumulator("once_delta_rows")
+    val counted = udf { (i: Int) => runs.add(1); i }.asNondeterministic()
+    val delta = Seq((4, "D"), (11, "e")).toDF("id", "v")
+      .select(counted(col("id")).as("id"), col("v"))
+    val hit = BucketStore.bucketsFor(spark, dir, base, Seq("id"),
+      Left((Seq(org.apache.spark.sql.types.IntegerType), Seq(Seq(4), Seq(11)))),
+      None)
+    val createOnly: (DataFrame, DataFrame) => DataFrame = (state, d) =>
+      state.unionByName(d.join(state.select("id"), Seq("id"), "left_anti"))
+    val next = BucketStore.rewriteDirty(spark, dir, base, 1, delta, hit,
+      Seq("id"), StoreMeta(4), schema)(createOnly)
+    assert(runs.value == 2, "the delta pipeline must run once per row")
+    assert(rowsOf(BucketStore.stateAt(spark, dir, next, Some(schema))) ==
+      (1 to 8).map(i => (i, s"v$i")).toSet + ((11, "e")))
+  }
+
+  test("bucket write: one data file per non-empty bucket at every width") {
+    val rows = spark.range(0, 200, 1, 8).select(col("id").cast("int").as("id"),
+      col("id").cast("string").as("v"))
+    for (width <- Seq(1, 4, 16, 64)) {
+      val dir = tmp(s"bucketstore_files_$width")
+      val written = BucketStore.writeVersion(spark, dir, 0, rows, Seq("id"),
+        width, StoreMeta(width), rows.schema)
+      val live = written.collect { case (k, bf) if bf.version == 0 => k }
+      assert(live.size > width / 2, s"width $width: ${live.size} live")
+      for (k <- live) {
+        val files = new java.io.File(EventStreams.bucketPath(dir, 0, k))
+          .list().filterNot(n => n.startsWith("_") || n.startsWith("."))
+        assert(files.length == 1 && written(k).files.get.size == 1,
+          s"width $width, bucket $k: ${files.mkString(", ")}")
+      }
+    }
   }
 }

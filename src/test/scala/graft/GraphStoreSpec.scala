@@ -244,7 +244,9 @@ class GraphStoreSpec extends AnyFunSuite {
       s"probe must scan only bucket $b: ${scanned.mkString(", ")}")
   }
 
-  test("store fold == refold on the two-release IMGT fixture") {
+  /** The two-release IMGT fixture (3.56.0, then 3.57.0) as release
+    * relations, built once for the specs that apply it. */
+  private lazy val imgtReleases = {
     import graft.ingest.ImgtFlatFile
     import graft.gfe.{ArdReduction, GfeBuild}
     def ardOf(rel: String) = ArdReduction.fromNames(
@@ -258,8 +260,12 @@ class GraphStoreSpec extends AnyFunSuite {
     val r2 = GfeBuild.run(spark, ImgtFlatFile.fromText(spark,
       ImgtFlatFile.resourceText("/graft/hla.3570.dat")), "3570",
       registry = Some(r1.registry), ard = Some(ardOf("3570")))
-    val rel1 = ("3560", r1.gfeSequences, r1.allFeatures, r1.allGroups)
-    val rel2 = ("3570", r2.gfeSequences, r2.allFeatures, r2.allGroups)
+    (("3560", r1.gfeSequences, r1.allFeatures, r1.allGroups),
+      ("3570", r2.gfeSequences, r2.allFeatures, r2.allGroups))
+  }
+
+  test("store fold == refold on the two-release IMGT fixture") {
+    val (rel1, rel2) = imgtReleases
     val dir = tmp("graphstore_imgt")
     GraphStore.init(spark, dir, GraphLoad.loadAll(spark, Seq(rel1)))
     GraphStore.applyRelease(spark, dir, rel2)
@@ -1195,6 +1201,89 @@ class GraphStoreSpec extends AnyFunSuite {
     assert(probeJobs == 1, s"probe built and collected in $probeJobs jobs")
     assert(pathJobs <= 10,
       s"varPathAnchored built and collected in $pathJobs jobs")
+  }
+
+  test("job budget: one policy-matrix applyRelease runs a pinned " +
+      "number of jobs") {
+    val Seq(r1, r2, _) = LoadFixtures.policyMatrix(spark)
+    val dir = tmp("graphstore_apply_jobs")
+    GraphStore.init(spark, dir, GraphLoad.loadAll(spark, Seq(r1)),
+      buckets = 16)
+    val (jobs, stats) = jobsOf(GraphStore.applyRelease(spark, dir, r2))
+    assert(stats.dirtyBuckets.size == 11)
+    // the inputs' checkpoints, the one dirty-set pass, the guard's two
+    // probes, then one merge-and-write plan per table and twin: a
+    // per-table dirty collect or delta checkpoint adds jobs
+    assert(jobs == 67, s"applyRelease ran $jobs jobs")
+  }
+
+  test("one dirty-set pass: each table's set equals bucketsFor over its " +
+      "delta (policy matrix, a 1-allele release, IMGT, dual-anchor twins)") {
+    import org.apache.spark.sql.DataFrame
+    import graft.graph.ReleaseDeltas
+    import graft.streaming.BucketStore
+    // checks the pass against `rel`'s deltas at the store's head, then
+    // applies `rel`; each table's delta as applyRelease builds it
+    def check(dir: String, rel: (String, DataFrame, DataFrame, DataFrame),
+        clue: String): Unit = {
+      val (_, seqs, featRel, groups) = rel
+      val d = new ReleaseDeltas(seqs, featRel, groups)
+      val head = GraphStore.pin(spark, dir, None)
+      val sets = GraphStore.dirtySets(head, d)
+      val stats = GraphStore.applyRelease(spark, dir, rel)
+      // HAS_SEQUENCE's delta: the release's pairs resolved against the
+      // SEQ_INDEX the apply committed
+      val hasSeq = GraphStore.pin(spark, dir, None)("SEQ_INDEX").state
+        .withColumnRenamed("name", "dst")
+        .join(d.pairsDelta, Seq("seq_id")).select("src", "dst")
+      val deltas = Map("GFE" -> d.gfeDelta, "Sequence" -> d.seqDelta,
+        "Feature" -> d.featDelta, "IPD_Allele" -> d.alleleDelta,
+        "IPD_Accession" -> d.accDelta,
+        "SUBMITTED" -> d.submittedDelta(lit(java.sql.Date.valueOf("2026-01-01"))),
+        "HAS_IPD_ALLELE" -> d.relsDelta, "HAS_IPD_ACCESSION" -> d.hasAccDelta,
+        "HAS_FEATURE" -> d.hasFeatDelta, "HAS_SEQUENCE" -> hasSeq,
+        "SEQ_INDEX" -> d.seqDelta.select("seq_id", "name"))
+      val layouts = deltas.toSeq.flatMap { case (t, delta) =>
+        (head(t) +: head(t).twin.toSeq).map(_ -> delta) }
+      assert(sets.keySet == layouts.map(_._1.name).toSet, clue)
+      for ((v, delta) <- layouts) {
+        val want = BucketStore.bucketsFor(spark, v.tdir, v.manifest,
+          v.meta.keys.get, Right(delta), None)
+        assert(want.nonEmpty, s"$clue: premise: ${v.name} has a delta")
+        assert(sets(v.name) == want, s"$clue: ${v.name}")
+        assert(stats.dirtyBuckets(v.name) == want.size, s"$clue: ${v.name}")
+      }
+    }
+    val Seq(r1, r2, r3) = LoadFixtures.policyMatrix(spark)
+    for (dual <- Seq(false, true)) {
+      val dir = tmp("graphstore_onepass")
+      GraphStore.init(spark, dir, GraphLoad.loadAll(spark, Seq(r1)),
+        buckets = 16, dualAnchor = dual)
+      check(dir, r2, s"policy matrix r2, dualAnchor=$dual")
+      check(dir, r3, s"1-allele r3, dualAnchor=$dual")
+    }
+    val (rel1, rel2) = imgtReleases
+    val dir = tmp("graphstore_onepass_imgt")
+    GraphStore.init(spark, dir, GraphLoad.loadAll(spark, Seq(rel1)))
+    check(dir, rel2, "IMGT 3.57.0")
+  }
+
+  test("table schemas are read from the _empty footer: equal to " +
+      "spark.read's, with no job") {
+    import graft.streaming.EventStreams
+    val Seq(r1, r2, _) = LoadFixtures.policyMatrix(spark)
+    val dir = tmp("graphstore_footer")
+    GraphStore.init(spark, dir, GraphLoad.loadAll(spark, Seq(r1)),
+      buckets = 16, dualAnchor = true)
+    GraphStore.applyRelease(spark, dir, r2)
+    val tables = new java.io.File(dir).listFiles().toSeq
+      .filter(f => f.isDirectory && f.getName != "_release").map(_.getName)
+    assert(tables.size == 16, tables.sorted.mkString(", "))
+    val (jobs, footers) = jobsOf(tables.map(t =>
+      EventStreams.footerSchema(spark, s"$dir/$t/_empty")))
+    assert(jobs == 0, s"footer reads ran $jobs jobs")
+    for ((t, schema) <- tables.zip(footers))
+      assert(schema == spark.read.parquet(s"$dir/$t/_empty").schema, t)
   }
 
   test("driver-hashed bucket ids and bloom hashes equal bucketCol and " +
