@@ -111,7 +111,7 @@ object GraphStore {
       .toSet
     schemaCache.compute(tdir, (_, hit) =>
       if (hit != null && hit._1 == stamp) hit
-      else (stamp, EventStreams.footerSchema(spark, s"$tdir/_empty")))._2
+      else (stamp, spark.read.parquet(s"$tdir/_empty").schema))._2
   }
 
   private def manifestAt(spark: SparkSession, tdir: String,
@@ -511,11 +511,14 @@ object GraphStore {
       // tables (SEQ_INDEX, Sequence) — concurrent job streams (r15
       // opt); both still complete BEFORE any apply commits (probing
       // Sequence while its own overwrite apply runs would race)
+      // every (name, seq_id) pair the release lists, not only the one
+      // per name seqDelta keeps: the HAS_SEQUENCE probe resolves them
+      // all, and each must resolve to its own name
       val crossNameF = Future {
         head("SEQ_INDEX").stateOf(dirty("SEQ_INDEX"))
           .withColumnRenamed("name", "_oname")
-          .join(broadcast(seqDelta.select(col("seq_id"), col("name"))),
-            Seq("seq_id"))
+          .join(broadcast(d.pairsDelta.select(col("seq_id"),
+            col("src").as("name"))), Seq("seq_id"))
           .where(col("name") =!= col("_oname")).limit(1).count()
       }
       val reIdF = Future {

@@ -107,7 +107,8 @@ private[graft] final class ReleaseDeltas(
     * delta above is one of these columns, renamed at most, so a
     * bucket hashed here is the delta's. HAS_SEQUENCE's
     * delta is the SEQ_INDEX probe's result; with seq_id ↔ name 1:1
-    * (the apply's guard) both its ends are the pair's GFE name — a
+    * over every pair (the apply's guard checks [[pairsDelta]], not
+    * only [[seqDelta]]) both its ends are the pair's GFE name — a
     * row without a seq_id adds a bucket the probe drops, which only
     * rewrites unchanged rows. */
   private val keyColumns: Map[String, Seq[(Int, Map[String, Column])]] = {

@@ -562,13 +562,15 @@ object EventStreams {
       state: DataFrame, stateKeys: Seq[String], numBuckets: Int,
       dir: String): Map[Int, Seq[(String, Long)]] = {
     // partitioned BY the bucket id, so each bucket's rows land in one
-    // shuffle partition and one file; no count, so AQE coalesces
-    // whole partitions by bytes — one task for a table of kilobytes,
-    // byte-sized tasks at scale, never one task per bucket (each
-    // task pays a fixed Hadoop Configuration deserialization)
+    // shuffle partition and one file, into at most as many tasks as
+    // the cluster runs at once rather than one task per bucket (each
+    // task pays a fixed Hadoop Configuration deserialization); an
+    // explicit count, so AQE on or off runs the same write
+    val tasks = math.min(numBuckets,
+      state.sparkSession.sparkContext.defaultParallelism)
     state
       .withColumn("_graft_bucket", bucketCol(stateKeys, numBuckets))
-      .repartition(col("_graft_bucket"))
+      .repartition(tasks, col("_graft_bucket"))
       .write.partitionBy("_graft_bucket").mode("overwrite").parquet(dir)
     val (fs, p) = hadoopFs(state.sparkSession, dir)
     val present = fs.listStatus(p).toSeq.map(_.getPath.getName)
@@ -913,35 +915,8 @@ object EventStreams {
     val es = fs.listStatus(root).toSeq.map(_.getPath.getName)
       .filter(_.matches("_empty_e\\d+"))
       .map(_.stripPrefix("_empty_e").toInt)
-    footerSchema(spark,
-      if (es.isEmpty) s"$dir/_empty" else s"$dir/_empty_e${es.max}")
-  }
-
-  /** The schema `spark.read.parquet(dir).schema` infers, read on the
-    * driver from the footer of `dir`'s first data file — that read's
-    * converter over the session's parquet options, every field
-    * nullable as a file source reports it — without its one-task
-    * inference job. */
-  private[graft] def footerSchema(spark: SparkSession,
-      dir: String): org.apache.spark.sql.types.StructType = {
-    import org.apache.parquet.format.converter.ParquetMetadataConverter
-    import org.apache.parquet.hadoop.Footer
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.spark.sql.execution.datasources.parquet.{
-      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
-    val (fs, p) = hadoopFs(spark, dir)
-    val file = fs.listStatus(p).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.minByOption(_.getPath.getName).getOrElse(
-      throw new java.io.FileNotFoundException(s"$dir: no parquet data file"))
-    val footer = new Footer(file.getPath, ParquetFooterReader.readFooter(
-      HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration),
-      ParquetMetadataConverter.NO_FILTER))
-    val read = ParquetFileFormat.readSchemaFromFooter(footer,
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    org.apache.spark.sql.types.StructType(read.fields.map(f =>
-      f.copy(dataType = normShape(f.dataType), nullable = true)))
+    val src = if (es.isEmpty) s"$dir/_empty" else s"$dir/_empty_e${es.max}"
+    spark.read.parquet(src).schema
   }
 
   /** Publish `evolved` as the store's next schema footer — write to a

@@ -97,20 +97,41 @@ class BucketStoreSpec extends AnyFunSuite {
       (1 to 8).map(i => (i, s"v$i")).toSet + ((11, "e")))
   }
 
-  test("bucket write: one data file per non-empty bucket at every width") {
-    val rows = spark.range(0, 200, 1, 8).select(col("id").cast("int").as("id"),
-      col("id").cast("string").as("v"))
-    for (width <- Seq(1, 4, 16, 64)) {
-      val dir = tmp(s"bucketstore_files_$width")
-      val written = BucketStore.writeVersion(spark, dir, 0, rows, Seq("id"),
-        width, StoreMeta(width), rows.schema)
+  test("bucket write: one data file per non-empty bucket at every width, " +
+      "in min(width, parallelism) write tasks, AQE on or off") {
+    val par = spark.sparkContext.defaultParallelism
+    for (aqe <- Seq(true, false); width <- Seq(1, 4, 16, 64)) {
+      val session = spark.newSession()
+      session.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+      val rows = session.range(0, 200, 1, 8).select(
+        col("id").cast("int").as("id"), col("id").cast("string").as("v"))
+      val dir = tmp(s"bucketstore_files_${aqe}_$width")
+      // the tasks of every stage that reads a shuffle: the write's
+      val writeTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onStageCompleted(
+            s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+          if (s.stageInfo.parentIds.nonEmpty)
+            writeTasks.add(s.stageInfo.numTasks)
+      }
+      Thread.sleep(300)
+      spark.sparkContext.addSparkListener(listener)
+      val written = try {
+        val w = BucketStore.writeVersion(session, dir, 0, rows, Seq("id"),
+          width, StoreMeta(width), rows.schema)
+        Thread.sleep(300)
+        w
+      } finally spark.sparkContext.removeSparkListener(listener)
+      val clue = s"aqe $aqe, width $width"
+      assert(writeTasks.toArray.toSeq == Seq(math.min(width, par)),
+        s"$clue: write stages' tasks ${writeTasks.toArray.mkString(", ")}")
       val live = written.collect { case (k, bf) if bf.version == 0 => k }
-      assert(live.size > width / 2, s"width $width: ${live.size} live")
+      assert(live.size > width / 2, s"$clue: ${live.size} live")
       for (k <- live) {
         val files = new java.io.File(EventStreams.bucketPath(dir, 0, k))
           .list().filterNot(n => n.startsWith("_") || n.startsWith("."))
         assert(files.length == 1 && written(k).files.get.size == 1,
-          s"width $width, bucket $k: ${files.mkString(", ")}")
+          s"$clue, bucket $k: ${files.mkString(", ")}")
       }
     }
   }

@@ -97,7 +97,11 @@ class GraphStoreSpec extends AnyFunSuite {
       GraphStore.applyRelease(spark, dir, reId)
     }
     assert(e2.getMessage.contains("changed its sequence"), e2.getMessage)
-    // the guard fired before any commit: every table still at v0
+    assertNothingCommitted(dir)
+  }
+
+  /** A guard fired before any commit: every table still at v0. */
+  private def assertNothingCommitted(dir: String): Unit = {
     val root = java.nio.file.Paths.get(dir)
     java.nio.file.Files.list(root).forEach { t =>
       val m = t.resolve("manifest")
@@ -109,6 +113,28 @@ class GraphStoreSpec extends AnyFunSuite {
             s"(${vs.mkString(", ")})")
       }
     }
+  }
+
+  test("store applyRelease rejects a GFE name listed under two seq_ids " +
+      "when one is indexed under another name, before any commit") {
+    // Sequence keeps one row per name, but the HAS_SEQUENCE probe
+    // resolves every (name, seq_id) pair: Z's s2 is B's sequence, so
+    // the probe would add Z→B, whose dst the one-pass dirty set of
+    // HAS_SEQUENCE__rev does not hash. The guard checks every pair.
+    val Seq(r1, _, _) = LoadFixtures.policyMatrix(spark)
+    val dir = tmp("graphstore_guard_pairs")
+    GraphStore.init(spark, dir, GraphLoad.loadAll(spark, Seq(r1)),
+      buckets = 16, dualAnchor = true)
+    val twoIds = ("3580", LoadFixtures.seqsDf(spark, "3.58.0", Seq(
+      ("Z", "AC9", "HLA-A*09:01", "s8", "ACGA", 4L),
+      ("Z", "AC9", "HLA-A*09:02", "s2", "CCGT", 4L))),
+      LoadFixtures.featsDf(spark, Seq(("Z", "EXON", 1, "9", "AC"))),
+      LoadFixtures.groupsDf(spark, Seq.empty))
+    val e = intercept[IllegalArgumentException] {
+      GraphStore.applyRelease(spark, dir, twoIds)
+    }
+    assert(e.getMessage.contains("new GFE name"), e.getMessage)
+    assertNothingCommitted(dir)
   }
 
   test("concurrent applier loses loudly; half-applied release stays " +
@@ -1212,9 +1238,10 @@ class GraphStoreSpec extends AnyFunSuite {
     val (jobs, stats) = jobsOf(GraphStore.applyRelease(spark, dir, r2))
     assert(stats.dirtyBuckets.size == 11)
     // the inputs' checkpoints, the one dirty-set pass, the guard's two
-    // probes, then one merge-and-write plan per table and twin: a
-    // per-table dirty collect or delta checkpoint adds jobs
-    assert(jobs == 67, s"applyRelease ran $jobs jobs")
+    // probes, each table's first schema read in this JVM (11), then
+    // one merge-and-write plan per table and twin: a per-table dirty
+    // collect or delta checkpoint adds jobs
+    assert(jobs == 78, s"applyRelease ran $jobs jobs")
   }
 
   test("one dirty-set pass: each table's set equals bucketsFor over its " +
@@ -1266,24 +1293,6 @@ class GraphStoreSpec extends AnyFunSuite {
     val dir = tmp("graphstore_onepass_imgt")
     GraphStore.init(spark, dir, GraphLoad.loadAll(spark, Seq(rel1)))
     check(dir, rel2, "IMGT 3.57.0")
-  }
-
-  test("table schemas are read from the _empty footer: equal to " +
-      "spark.read's, with no job") {
-    import graft.streaming.EventStreams
-    val Seq(r1, r2, _) = LoadFixtures.policyMatrix(spark)
-    val dir = tmp("graphstore_footer")
-    GraphStore.init(spark, dir, GraphLoad.loadAll(spark, Seq(r1)),
-      buckets = 16, dualAnchor = true)
-    GraphStore.applyRelease(spark, dir, r2)
-    val tables = new java.io.File(dir).listFiles().toSeq
-      .filter(f => f.isDirectory && f.getName != "_release").map(_.getName)
-    assert(tables.size == 16, tables.sorted.mkString(", "))
-    val (jobs, footers) = jobsOf(tables.map(t =>
-      EventStreams.footerSchema(spark, s"$dir/$t/_empty")))
-    assert(jobs == 0, s"footer reads ran $jobs jobs")
-    for ((t, schema) <- tables.zip(footers))
-      assert(schema == spark.read.parquet(s"$dir/$t/_empty").schema, t)
   }
 
   test("driver-hashed bucket ids and bloom hashes equal bucketCol and " +
