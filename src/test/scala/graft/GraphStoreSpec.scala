@@ -97,11 +97,20 @@ class GraphStoreSpec extends AnyFunSuite {
       GraphStore.applyRelease(spark, dir, reId)
     }
     assert(e2.getMessage.contains("changed its sequence"), e2.getMessage)
-    assertNothingCommitted(dir)
-  }
-
-  /** A guard fired before any commit: every table still at v0. */
-  private def assertNothingCommitted(dir: String): Unit = {
+    // Sequence keeps one row per name, but the HAS_SEQUENCE probe
+    // resolves every (name, seq_id) pair: Z's s2 is B's sequence, so
+    // the probe would add Z→B, outside the one-pass dirty set of a
+    // dual-anchor HAS_SEQUENCE__rev. The guard checks every pair.
+    val twoIds = ("3580", LoadFixtures.seqsDf(spark, "3.58.0", Seq(
+      ("Z", "AC9", "HLA-A*09:01", "s8", "ACGA", 4L),
+      ("Z", "AC9", "HLA-A*09:02", "s2", "CCGT", 4L))),
+      LoadFixtures.featsDf(spark, Seq(("Z", "EXON", 1, "9", "AC"))),
+      LoadFixtures.groupsDf(spark, Seq.empty))
+    val e3 = intercept[IllegalArgumentException] {
+      GraphStore.applyRelease(spark, dir, twoIds)
+    }
+    assert(e3.getMessage.contains("new GFE name"), e3.getMessage)
+    // the guard fired before any commit: every table still at v0
     val root = java.nio.file.Paths.get(dir)
     java.nio.file.Files.list(root).forEach { t =>
       val m = t.resolve("manifest")
@@ -113,28 +122,6 @@ class GraphStoreSpec extends AnyFunSuite {
             s"(${vs.mkString(", ")})")
       }
     }
-  }
-
-  test("store applyRelease rejects a GFE name listed under two seq_ids " +
-      "when one is indexed under another name, before any commit") {
-    // Sequence keeps one row per name, but the HAS_SEQUENCE probe
-    // resolves every (name, seq_id) pair: Z's s2 is B's sequence, so
-    // the probe would add Z→B, whose dst the one-pass dirty set of
-    // HAS_SEQUENCE__rev does not hash. The guard checks every pair.
-    val Seq(r1, _, _) = LoadFixtures.policyMatrix(spark)
-    val dir = tmp("graphstore_guard_pairs")
-    GraphStore.init(spark, dir, GraphLoad.loadAll(spark, Seq(r1)),
-      buckets = 16, dualAnchor = true)
-    val twoIds = ("3580", LoadFixtures.seqsDf(spark, "3.58.0", Seq(
-      ("Z", "AC9", "HLA-A*09:01", "s8", "ACGA", 4L),
-      ("Z", "AC9", "HLA-A*09:02", "s2", "CCGT", 4L))),
-      LoadFixtures.featsDf(spark, Seq(("Z", "EXON", 1, "9", "AC"))),
-      LoadFixtures.groupsDf(spark, Seq.empty))
-    val e = intercept[IllegalArgumentException] {
-      GraphStore.applyRelease(spark, dir, twoIds)
-    }
-    assert(e.getMessage.contains("new GFE name"), e.getMessage)
-    assertNothingCommitted(dir)
   }
 
   test("concurrent applier loses loudly; half-applied release stays " +
